@@ -62,4 +62,15 @@ object StoreAudit {
     // pruning is pinned separately in PropertySpec — "g15 admission is
     // bounded" — because it runs inside admitEdges, not a gate plan)
     "g15_incremental_components" -> CompactedDirs(maxDirs = 2, baseDir = "ver=-1"))
+
+  /** gate name → the most Spark jobs BUILDING its serving DataFrame may
+    * launch once the store is warm (the [[graft.io.StoreRead]] contract:
+    * schemas come from parquet footers, model params stay resident per
+    * store version). e19 collects only its request-sized query frame,
+    * which is local; t21b keeps its one top-df query-term collect. The
+    * PlanSpec open sweep enumerates THIS list.
+    */
+  val warmOpenJobs: Seq[(String, Int)] = Seq(
+    "e19_ivfpq_stored" -> 0,
+    "t21b_bm25_stored" -> 1)
 }

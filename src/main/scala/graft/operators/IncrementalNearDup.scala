@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.StoreRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ object IncrementalNearDup {
 
   def readIndex(spark: SparkSession, storeDir: String): Option[DataFrame] =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(storeDir)))
-      Some(spark.read.parquet(storeDir))
+      Some(StoreRead.parquet(spark, storeDir))
     else None
 
   /** Admit `batch` against the index at `storeDir`: returns the admitted

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.StoreRead
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -385,6 +386,9 @@ object Similarity {
     case x: Long             => x
     case x: Int              => x.toLong
     case x: java.lang.Number => x.longValue
+    case other => throw new IllegalArgumentException(
+      s"stored IVF-PQ routing needs numeric g_id/c_id ids; got ${other.getClass.getName} " +
+        s"value '$other' — build the store from integer vector ids")
   }
 
   /** QUERY-SIDE routing and ADC tables computed on the COORDINATOR
@@ -526,15 +530,18 @@ object Similarity {
                       maxAllowedIds: Long = 4000000L): DataFrame = {
     recoverForget(spark, store)    // never serve a half-installed swap
     recoverRebalance(spark, store) // ...of either store mutation
-    val coarse = spark.read.parquet(s"$store/coarse").select("g_id", "gq")
-    val csub = spark.read.parquet(s"$store/codebook").select("c_id", "s", "cqs")
-    val codes = spark.read.parquet(s"$store/codes")
+    // model params are broadcast-class and resident per store version;
+    // opening the codes reads its schema from a footer — no Spark job
+    // until the request-sized query frame is collected
+    val coarse = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq")
+    val csub = StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs")
+    val codes = StoreRead.parquet(spark, s"$store/codes")
     val q = queries.select(col(idCol).as("q_id"), quantize(col(embCol)).as("qq"))
     // The query frame is request-sized BY CONTRACT (budgeted below, the
     // cosinePairsTopK convention) and the model params are broadcast-
-    // class by the IVF provisioning invariant (k ∝ √n) — so collect all
-    // three ONCE and compute the probe lists and per-query ADC distance
-    // tables on the coordinator ([[localProbesAndTab]]): the former
+    // class by the IVF provisioning invariant (k ∝ √n) — so compute the
+    // probe lists and per-query ADC distance tables on the coordinator
+    // ([[localProbesAndTab]]): the former
     // folded-row form ran each leg as its own broadcast-BUILD job (a
     // full job launch + a scan of the query frame per leg — two scans
     // of the query side per retrieval) for request×model-sized integer
@@ -544,26 +551,15 @@ object Similarity {
     // I/O stays ∝ probed clusters, not corpus size.
     val qCap = math.min(maxProbeRows.toLong / math.max(1, nprobe),
       Int.MaxValue.toLong - 1).toInt
-    // the three collects are independent one-file/one-frame jobs —
-    // submit them concurrently (§2.6) instead of 3 × serial job latency
-    val (qRows, centRows, cwRows) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fq = Future(q.limit(qCap + 1).collect())
-      val fc = Future(coarse.collect())
-      val fw = Future(csub.collect())
-      (Await.result(fq, Duration.Inf), Await.result(fc, Duration.Inf),
-        Await.result(fw, Duration.Inf))
-    }
+    val qRows = q.limit(qCap + 1).collect()
     require(qRows.length <= qCap,
       s"ivfPqStoredTopK: > $maxProbeRows probe rows (nprobe=$nprobe × " +
         "|queries|) — the query side must be a bounded request frame; " +
         "split the queries into batches or raise maxProbeRows")
     val (probeRows, tabRows) = localProbesAndTab(
       qRows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray)),
-      centRows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray)),
-      cwRows.toSeq.map(r => (r.get(0), asLong(r.get(1)), r.getSeq[Long](2).toArray)),
+      coarse.rows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray)),
+      csub.rows.toSeq.map(r => (r.get(0), asLong(r.get(1)), r.getSeq[Long](2).toArray)),
       nprobe, dsub, withRank = false)
     val probedClusters = probeRows.map(_.get(1)).distinct
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -664,7 +660,7 @@ object Similarity {
     recoverRebalance(spark, store)
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val codes = spark.read.parquet(s"$store/codes")
+    val codes = StoreRead.parquet(spark, s"$store/codes")
     val del = deleteIds.select(col(deleteIds.columns.head).as("__del_id")).distinct()
     // affected clusters: bounded by |clusters| (the IVF provisioning
     // invariant k ∝ √n), so the collect is broadcast-class
@@ -792,8 +788,8 @@ object Similarity {
     // admitted ([[compactAdmissionLedger]] folds them).
     val fs = AdmissionLedger.fsOf(spark, store)
     if (AdmissionLedger.isAdmitted(fs, store, batchId)) return
-    val coarse = spark.read.parquet(s"$store/coarse")
-    val csub = spark.read.parquet(s"$store/codebook")
+    val coarse = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq").toDF(spark)
+    val csub = StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs").toDF(spark)
     val v = batch.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     assignAndEncode(v, coarse, csub, m, dsub)
@@ -827,9 +823,9 @@ object Similarity {
   def ivfPqClusterSizes(spark: org.apache.spark.sql.SparkSession,
                         store: String): DataFrame = {
     recoverRebalance(spark, store)
-    val live = spark.read.parquet(s"$store/coarse")
+    val live = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq").toDF(spark)
       .select(col("g_id").cast("long").as("cluster"))
-    spark.read.parquet(s"$store/codes")
+    StoreRead.parquet(spark, s"$store/codes")
       .filter(col("subspace") === 0)
       .select(col("cluster").cast("long").as("cluster"))
       .join(broadcast(live), Seq("cluster"), "left_semi")
@@ -887,23 +883,18 @@ object Similarity {
     recoverForget(spark, store)
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // the max live g_id is only needed to NAME the two split clusters —
-    // independent of the whole seed chain, so its one-job collect runs
-    // concurrently with it (guide §2.6) instead of serializing after
-    // the sided persist
-    val coarseLive = spark.read.parquet(s"$store/coarse")
-    val mxF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(coarseLive.agg(max(col("g_id"))).collect()(0).getLong(0))
-    }
+    // the resident coarse rows NAME the two split clusters (max g_id);
+    // an empty coarse table has nothing to split and reads no codes
+    val coarseLive = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq")
+    if (coarseLive.rows.isEmpty) return -1L
+    val mx = coarseLive.rows.map(r => asLong(r.get(0))).max
     val sizes = ivfPqClusterSizes(spark, store).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     if (sizes.isEmpty) return -1L
     val (hot, hotN) = sizes.minBy { case (c, n) => (-n, c) }
     if (hotN < minSplitVectors) return -1L
-    val csub = spark.read.parquet(s"$store/codebook")
-    val hotCodes = spark.read.parquet(s"$store/codes")
+    val csub = StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs").toDF(spark)
+    val hotCodes = StoreRead.parquet(spark, s"$store/codes")
       .filter(col("cluster") === hot)
     // reconstruction: codeword subvectors concatenated in subspace
     // order — one broadcast join, grouped back to one row per member
@@ -928,10 +919,6 @@ object Similarity {
         when(sq(col("r"), lit(seedB.toArray)) < col("d_a"), 1L)
           .otherwise(0L).as("sd"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mx = {
-      import scala.concurrent.{Await, duration}
-      Await.result(mxF, duration.Duration.Inf)
-    }
     // per-dimension floor-mean per side: dims × sides rows (m·dsub × 2)
     val cent = sided
       .select(col("sd"), posexplode(col("r")).as(Seq("pos", "v")))
@@ -963,7 +950,7 @@ object Similarity {
     val pending = new org.apache.hadoop.fs.Path(s"$store/$RebalancePendingDir")
     fs.delete(pending, true)
     import spark.implicits._
-    coarseLive.filter(col("g_id") =!= hot)
+    coarseLive.toDF(spark).filter(col("g_id") =!= hot)
       .unionByName(newCentroids.toDF("g_id", "gq"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$pending/coarse")

@@ -315,6 +315,30 @@ object Pipeline {
       Files.exists(p.resolve("_SUCCESS")) || nonEmptyDir)
   }
 
+  /** Stage paths conflict when equal or nested (a stage writing images/
+    * must order against one reading images/images), compared after
+    * normalization: `./a`, `a/` and `a` are one path, `a//b` is `a/b`.
+    */
+  private[graft] def overlaps(a: String, b: String): Boolean =
+    a.nonEmpty && b.nonEmpty && {
+      val (pa, pb) = (Paths.get(a).normalize, Paths.get(b).normalize)
+      pa.startsWith(pb) || pb.startsWith(pa)
+    }
+
+  /** For each stage, the earlier stages it must wait for: those writing
+    * its input (read-after-write) or its output (write-write), or
+    * reading its output (write-after-read).
+    */
+  private[graft] def dependencies(stages: IndexedSeq[StageConfig]): IndexedSeq[Seq[Int]] =
+    stages.indices.map { i =>
+      val st = stages(i)
+      (0 until i).filter { j =>
+        val p = stages(j)
+        overlaps(p.output, st.input) || overlaps(p.output, st.output) ||
+          overlaps(p.input, st.output)
+      }
+    }
+
   /** Run the stage list (ref: orchestrator.py:28-57): dispatch by
     * implementation name, guard on input existence, skip if the output
     * already exists, time each stage; returns the summary frame with the
@@ -374,22 +398,13 @@ object Pipeline {
         }
       }
     }
-    // paths conflict when equal or nested (a stage writing images/ must
-    // order against one reading images/images)
-    def overlaps(a: String, b: String): Boolean =
-      a.nonEmpty && b.nonEmpty &&
-        (a == b || a.startsWith(b + "/") || b.startsWith(a + "/"))
     val stages = cfg.stages.toIndexedSeq
     val futures = new Array[Future[StageResult]](stages.size)
-    stages.zipWithIndex.foreach { case (st, i) =>
-      val deps = (0 until i).filter { j =>
-        val p = stages(j)
-        overlaps(p.output, st.input) || overlaps(p.output, st.output) ||
-          overlaps(p.input, st.output)
-      }.map(futures(_))
+    dependencies(stages).zipWithIndex.foreach { case (ds, i) =>
+      val deps = ds.map(futures(_))
       futures(i) =
-        if (deps.isEmpty) Future(runOne(st))
-        else Future.sequence(deps.toSeq).map(_ => runOne(st))
+        if (deps.isEmpty) Future(runOne(stages(i)))
+        else Future.sequence(deps).map(_ => runOne(stages(i)))
     }
     val results = futures.toSeq.map(f => Await.result(f, Duration.Inf))
     import spark.implicits._

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Det, GraftQuery, Tables}
 import graft.functions.TextFunctions._
+import graft.io.StoreRead
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table: token statistics,
@@ -952,16 +953,18 @@ object TextQueries {
     // the store DESCRIBES ITS OWN layout: the bucket modulus comes from
     // the stats file the build wrote, never from the binary's current
     // Bm25Buckets default — an old store read by a reconfigured binary
-    // would otherwise prune the WRONG buckets and silently drop hits
-    val statsDisk = spark.read.parquet(s"$store/stats")
-    require(statsDisk.columns.contains("buckets"),
+    // would otherwise prune the WRONG buckets and silently drop hits.
+    // The 1-row stats are resident per store version; terms and postings
+    // open from their footers — the query-term collect is the one job
+    val statsDisk = StoreRead.resident(spark, s"$store/stats")
+    require(statsDisk.schema.fieldNames.contains("buckets"),
       s"bm25Retrieve: $store/stats has no `buckets` column — the store " +
         "predates the self-describing layout; rebuild it with " +
         "bm25BuildIndex (pruning with an assumed bucket count risks a " +
         "silently wrong top-k)")
-    val storeBuckets = statsDisk.select("buckets").head().getInt(0)
-    val stats = statsDisk.drop("buckets")
-    val qDisk = spark.read.parquet(s"$store/terms")
+    val storeBuckets = statsDisk.rows.head.getInt(statsDisk.schema.fieldIndex("buckets"))
+    val stats = statsDisk.toDF(spark).drop("buckets")
+    val qDisk = StoreRead.parquet(spark, s"$store/terms")
       .orderBy(desc("df"), asc("term")).limit(4)
     // the query side is limit(4) — collect it once, re-materialize as a
     // local frame (it is the broadcast side regardless), and resolve its
@@ -972,7 +975,7 @@ object TextQueries {
       java.util.Arrays.asList(qRows: _*), qDisk.schema)
     val qBuckets = q.select(termBucket(col("term"), storeBuckets))
       .collect().map(_.getInt(0)).distinct.sorted
-    val post = spark.read.parquet(s"$store/postings")
+    val post = StoreRead.parquet(spark, s"$store/postings")
       .filter(col("bucket").isin(qBuckets.map(Int.box): _*))
     val tfd = col("tf").cast("double")
     val sd = col("s_tokens").cast("double")

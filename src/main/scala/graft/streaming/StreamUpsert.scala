@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.StoreRead
 import graft.operators.Upsert
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
@@ -50,7 +51,7 @@ object StreamUpsert {
   }
 
   def readSnapshot(spark: SparkSession, store: String): Option[DataFrame] =
-    latestVersion(store).map(v => spark.read.parquet(f"$store/v$v%05d"))
+    latestVersion(store).map(v => StoreRead.parquet(spark, f"$store/v$v%05d"))
 
   /** TIME TRAVEL — the snapshot AS OF a committed version: every
     * version [[applyBatch]] ever committed remains readable until
@@ -63,7 +64,7 @@ object StreamUpsert {
     require(Files.exists(Paths.get(store, f"v$version%05d", "_SUCCESS")),
       s"version $version is not committed in $store — " +
         s"committed latest: ${latestVersion(store).getOrElse("none")}")
-    spark.read.parquet(f"$store/v$version%05d")
+    StoreRead.parquet(spark, f"$store/v$version%05d")
   }
 
   /** Merge one micro-batch into the store (the foreachBatch body). */
@@ -73,7 +74,7 @@ object StreamUpsert {
     val merged = cur match {
       case Some(v) =>
         Upsert.latestWins(
-          spark.read.parquet(f"$store/v$v%05d"), batch, keys, version)
+          StoreRead.parquet(spark, f"$store/v$v%05d"), batch, keys, version)
       case None => Upsert.compact(batch, keys, version)
     }
     val next = cur.map(_ + 1).getOrElse(0)

@@ -212,6 +212,39 @@ class OpsSpec extends SparkSpec {
     assert(ok.count() > 0)
   }
 
+  test("stored IVF-PQ routing refuses non-numeric ids with a message, not a MatchError") {
+    val store = java.nio.file.Files
+      .createTempDirectory("e19_strids").toString + "/store"
+    val vecs = (0L until 32L)
+      .map(i => (f"v$i%02d", Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vid", "emb")
+    Similarity.buildIvfPqStore(vecs, "vid", "emb",
+      col("id") >= "v08" && col("id") < "v12", col("id") < "v08", store)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfPqStoredTopK(spark, store,
+        vecs.filter(col("vid") < "v02"), "vid", "emb", k = 3, nprobe = 2)
+    }
+    assert(e.getMessage.contains("needs numeric g_id/c_id"), e.getMessage)
+  }
+
+  test("rebalance of an empty or unsplittable store returns -1; a warm empty one launches no job") {
+    val vecs = (0L until 32L)
+      .map(i => (i, Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vid", "emb")
+    val empty = java.nio.file.Files
+      .createTempDirectory("e31_empty").toString + "/store"
+    Similarity.buildIvfPqStore(vecs, "vid", "emb",
+      col("id") < 0, col("id") < 8, empty)
+    assert(Similarity.rebalanceIvfPqStore(spark, empty) == -1L)
+    val (again, jobs) = jobsDuring(Similarity.rebalanceIvfPqStore(spark, empty))
+    assert(again == -1L && jobs == 0, s"warm empty-store rebalance launched $jobs jobs")
+    val small = java.nio.file.Files
+      .createTempDirectory("e31_small").toString + "/store"
+    Similarity.buildIvfPqStore(vecs, "vid", "emb",
+      col("id") >= 8 && col("id") < 12, col("id") < 8, small)
+    assert(Similarity.rebalanceIvfPqStore(spark, small, minSplitVectors = 33) == -1L)
+  }
+
   test("semDedupRemovalsTwoLevel ≡ brute semDedupRemovals on separated clusters") {
     // four orthogonal-axis clusters of near-duplicates in 8 dims; the
     // first member of each cluster (ids 0..3) is a centroid. With

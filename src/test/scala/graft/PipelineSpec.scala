@@ -424,6 +424,22 @@ class PipelineSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s"$root/labels.csv")))
   }
 
+  test("stage hazards compare normalized paths: ./a, a/ and a//b order against a and a/b") {
+    def st(in: String, out: String) =
+      Pipeline.StageConfig(s"$in>$out", "PreprocessorStage", in, out, enabled = true, null)
+    for (x <- Seq("./a", "a/", "a//b"); y <- Seq("a", "a/b"))
+      assert(Pipeline.overlaps(x, y) && Pipeline.overlaps(y, x), s"$x vs $y")
+    assert(!Pipeline.overlaps("ab", "a") && !Pipeline.overlaps("a/bc", "a/b") &&
+      !Pipeline.overlaps("", "a"))
+    val deps = Pipeline.dependencies(IndexedSeq(
+      st("", "./a"),     // 0 writes a
+      st("a/", "o1"),    // 1 reads a: after 0
+      st("a//b", "o2"),  // 2 reads inside a: after 0
+      st("", "a/b/"),    // 3 rewrites inside a: after 0 (write), 1 and 2 (read)
+      st("ab", "abc")))  // 4 touches neither a nor a/b
+    assert(deps == IndexedSeq(Seq(), Seq(0), Seq(0), Seq(0, 1, 2), Seq()), deps)
+  }
+
   test("missing input is reported, not fatal") {
     val root = Files.createTempDirectory("graft-pipe2").toString
     Files.writeString(Paths.get(s"$root/config.json"), configJson)

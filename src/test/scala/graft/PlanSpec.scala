@@ -421,6 +421,44 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** The store-open sweep ([[StoreAudit.warmOpenJobs]]): on a warm store,
+    * building each serving DataFrame stays within its job budget — the
+    * schema-inference jobs and the model-param collects of a cold open
+    * must not come back. Each gate's store is built the way the gate
+    * builds it; a request arrives as a local frame.
+    */
+  test("store opens: a warm store builds its serving DataFrame within its job budget") {
+    import graft.operators.Similarity
+    import graft.queries.TextQueries
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    def open(gate: String): () => DataFrame = gate match {
+      case "e19_ivfpq_stored" =>
+        val store = graft.queries.Dsl.tempStore("e19_open")
+        val emb = Tables.embeddings(spark, sf)
+        Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
+          col("id") >= 8 && col("id") < 12, col("id") < 8, store)
+        val q = emb.filter(col("vec_id") < 5)
+        val request = spark.createDataFrame(
+          java.util.Arrays.asList(q.collect(): _*), q.schema)
+        () => Similarity.ivfPqStoredTopK(spark, store, request, "vec_id", "embedding", 10, 2)
+      case "t21b_bm25_stored" =>
+        val store = graft.queries.Dsl.tempStore("t21b_open")
+        TextQueries.bm25BuildIndex(spark, sf, store)
+        () => TextQueries.bm25Retrieve(spark, store)
+      case other => fail(s"$other: no serving open registered in this sweep")
+    }
+    for ((gate, budget) <- StoreAudit.warmOpenJobs) {
+      val serve = open(gate)
+      serve().collect() // warm: model params become resident
+      val (df, jobs) = jobsDuring(serve())
+      assert(jobs <= budget,
+        s"$gate: building the serving DataFrame on a warm store launched " +
+          s"$jobs Spark jobs (budget $budget)")
+      assert(df.collect().nonEmpty, s"$gate: warm open served nothing")
+    }
+  }
+
   /** Same pin for e19: the IVF-PQ codes store is cluster-partitioned and
     * the search scan must be statically pruned to the probed clusters —
     * search I/O ∝ nprobe × cluster size, with the corpus nowhere in the
