@@ -99,13 +99,7 @@ object AdmissionLedger {
     // watermark first, via tmp+rename (the only ordering where a crash
     // can never un-admit a batch: markers are deleted only once the
     // watermark covering them is durably in place)
-    val tmp = new Path(ledgerDir(store), "_upto.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(newUpTo.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(uptoFile(store), false)
-    fs.rename(tmp, uptoFile(store))
+    graft.io.StagedCommit.writeAtomic(fs, uptoFile(store), newUpTo.toString)
     folded.foreach(id => fs.delete(marker(store, id), true))
   }
 }

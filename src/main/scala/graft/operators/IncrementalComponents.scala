@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.io.StagedCommit
+import graft.io.StagedCommit.Keep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,23 +60,19 @@ import org.apache.spark.sql.functions._
   *
   * Retention: appends grow one row per label change forever;
   * [[compact]] folds everything into a `ver=-1` base (resolution is
-  * unchanged — max-version is a fold the base participates in) behind
-  * the StreamSketch pending-dir + marker protocol, so every crash
-  * state either leaves the live store intact or completes the install
-  * idempotently ([[recoverCompaction]] runs from both entry points).
-  * Compaction also folds the admission ledger's markers behind the
-  * frontier into the `_upto` watermark ([[AdmissionLedger.compact]]).
+  * unchanged — max-version is a fold the base participates in),
+  * installed through [[graft.io.StagedCommit]]: stage
+  * `_compact_pending`, marker `_compact_done`, plan `keep labels`
+  * ([[recoverCompaction]] runs from both entry points). Compaction also
+  * folds the admission ledger's markers behind the frontier into the
+  * `_upto` watermark ([[AdmissionLedger.compact]]).
   */
 object IncrementalComponents {
 
-  private val PendingDir = "_compact_pending"
-  private val MarkerFile = "_compact_done"
   private val LabelBuckets = 16
 
-  private def fsOf(spark: SparkSession, store: String) = {
-    val p = new org.apache.hadoop.fs.Path(store)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  private def layout(store: String) =
+    new StagedCommit.Layout(new org.apache.hadoop.fs.Path(store), "_compact_pending", "_compact_done")
 
   private def emptyLabels(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("node"), col("id").as("label"))
@@ -87,8 +85,7 @@ object IncrementalComponents {
   def resolved(spark: SparkSession, store: String): DataFrame = {
     recoverCompaction(spark, store)
     val labels = s"$store/labels"
-    val (fs, _) = fsOf(spark, store)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(labels)))
+    if (!StagedCommit.fsOf(spark, store).exists(new org.apache.hadoop.fs.Path(labels)))
       return emptyLabels(spark)
     spark.read.parquet(labels)
       .groupBy("node")
@@ -232,52 +229,26 @@ object IncrementalComponents {
 
   /** Fold the layered appends into a single `ver=-1` base — resolution
     * is invariant (max-version includes the base) and the file count
-    * drops to the base slice. StreamSketch's crash discipline: pending
-    * is fully written BEFORE the marker commits the swap; every crash
-    * state either discards garbage or completes idempotently. Also
-    * folds the admission ledger's behind-frontier markers into the
-    * `_upto` watermark (VERDICT r12 #2).
+    * drops to the base slice. Also folds the admission ledger's
+    * behind-frontier markers into the `_upto` watermark (VERDICT r12 #2).
     */
   def compact(spark: SparkSession, store: String): Unit = {
     recoverCompaction(spark, store)
-    val (fs, storePath) = fsOf(spark, store)
-    val labels = new org.apache.hadoop.fs.Path(storePath, "labels")
-    if (!fs.exists(labels)) return
-    val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-    fs.delete(pending, true)
+    val fs = StagedCommit.fsOf(spark, store)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(store, "labels"))) return
+    val l = layout(store)
+    val pending = StagedCommit.reset(fs, l)
     resolved(spark, store)
       .withColumn("lbucket", pmod(col("label"), lit(LabelBuckets)))
       .withColumn("ver", lit(-1L))
       .repartition(col("lbucket"))
       .write.mode("overwrite").partitionBy("lbucket", "ver")
-      .parquet(pending.toString)
-    val tmp = new org.apache.hadoop.fs.Path(storePath, MarkerFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.writeBytes("1") finally out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile), false)
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(storePath, MarkerFile))
-    install(fs, storePath)
+      .parquet(s"$pending/labels")
+    StagedCommit.commit(fs, l, Seq(Keep("labels")))
     AdmissionLedger.compact(fs, store)
   }
 
   /** Complete (or discard) a half-done compaction — idempotent. */
-  def recoverCompaction(spark: SparkSession, store: String): Unit = {
-    val (fs, storePath) = fsOf(spark, store)
-    val marker = new org.apache.hadoop.fs.Path(storePath, MarkerFile)
-    val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-    if (fs.exists(marker)) install(fs, storePath)
-    else if (fs.exists(pending)) fs.delete(pending, true)
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile + ".tmp"), false)
-  }
-
-  private def install(fs: org.apache.hadoop.fs.FileSystem,
-                      storePath: org.apache.hadoop.fs.Path): Unit = {
-    val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-    val labels = new org.apache.hadoop.fs.Path(storePath, "labels")
-    if (fs.exists(pending)) {
-      fs.delete(labels, true)
-      fs.rename(pending, labels)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile), false)
-  }
+  def recoverCompaction(spark: SparkSession, store: String): Unit =
+    StagedCommit.recover(StagedCommit.fsOf(spark, store), layout(store))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.io.StoreRead
+import graft.io.{StagedCommit, StoreRead}
+import graft.io.StagedCommit.{Drop, Keep}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -313,11 +314,18 @@ object Similarity {
     * Store layout: `store/coarse` (g_id, gq), `store/codebook`
     * (c_id, s, cqs), `store/codes` (vec_id, subspace, code, cluster).
     * At cluster scale `codes` is bucketed by cluster so a probe reads
-    * O(selected clusters), the io07 partition-pruning story.
+    * O(selected clusters), the io07 partition-pruning story. A build
+    * over an existing store replaces all three dirs at once through
+    * [[StagedCommit]] (stage `_build_pending`, marker `_build_done`).
     */
   def buildIvfPqStore(vectors: DataFrame, idCol: String, embCol: String,
                       coarsePred: Column, codebookPred: Column, store: String,
                       m: Int = 4, dsub: Int = 16): Unit = {
+    val spark = vectors.sparkSession
+    recover(spark, store)
+    val fs = StagedCommit.fsOf(spark, store)
+    val layout = buildLayout(store)
+    val stage = StagedCommit.reset(fs, layout)
     val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val coarse = v.filter(coarsePred).select(col("id").as("g_id"), col("q").as("gq"))
@@ -338,18 +346,16 @@ object Similarity {
     // build stops paying 3 × serial job latency. coalesce(1) on the
     // param dirs: model params are broadcast-class, so one file each —
     // every retrieval re-reads these dirs, and 32 four-row task files
-    // cost footer reads for nothing.
+    // cost footer reads for nothing. All three land in the stage dir and
+    // install together through [[StagedCommit]] (plan: keep coarse,
+    // codebook, codes), so a store never mixes two builds.
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      // failure handling (ADVICE r13): Future.sequence fails fast on the
-      // first failed write and the finally below always unpersists; the
-      // sibling jobs run to completion on their own (they write disjoint
-      // dirs, so a partial store is overwritten by the retry)
       val writes = Seq(
-        Future(coarse.coalesce(1).write.mode("overwrite").parquet(s"$store/coarse")),
-        Future(csub.coalesce(1).write.mode("overwrite").parquet(s"$store/codebook")),
+        Future(coarse.coalesce(1).write.mode("overwrite").parquet(s"$stage/coarse")),
+        Future(csub.coalesce(1).write.mode("overwrite").parquet(s"$stage/codebook")),
         // codes are CLUSTER-PARTITIONED (`partitionBy`): retrieval
         // probes a handful of clusters per query, and the partitioned
         // layout turns that probe set into static partition pruning on
@@ -364,10 +370,14 @@ object Similarity {
         Future(assignAndEncode(v, coarse, csub, m, dsub)
           .repartition(col("cluster"))
           .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$store/codes")))
-      try Await.result(Future.sequence(writes), Duration.Inf)
-      finally v.unpersist()
+          .parquet(s"$stage/codes")))
+      // await EVERY write before failing: a sibling still running would
+      // keep writing into the stage dir a retry resets
+      val done = try writes.map(f => Await.ready(f, Duration.Inf).value.get)
+        finally v.unpersist()
+      done.foreach(_.get)
     }
+    StagedCommit.commit(fs, layout, Seq(Keep("coarse"), Keep("codebook"), Keep("codes")))
   }
 
   /** Integer squared L2 between two code arrays (exact, engine-stable). */
@@ -528,8 +538,7 @@ object Similarity {
                       maxProbeRows: Int = 1000000,
                       allowed: Option[DataFrame] = None,
                       maxAllowedIds: Long = 4000000L): DataFrame = {
-    recoverForget(spark, store)    // never serve a half-installed swap
-    recoverRebalance(spark, store) // ...of either store mutation
+    recover(spark, store) // never serve a half-installed mutation
     // model params are broadcast-class and resident per store version;
     // opening the codes reads its schema from a footer — no Spark job
     // until the request-sized query frame is collected
@@ -629,17 +638,12 @@ object Similarity {
     * serving the deleted vectors' codes has not erased anything).
     * Removes every code row of the given ids, rewriting ONLY the
     * cluster partitions that actually contain a deleted vector, so
-    * erase I/O is ∝ affected clusters, not store size. The rewrite is
-    * STAGED: survivors are written to `_forget_pending` (reading the
-    * live store, writing a disjoint path — no read-under-overwrite
-    * lineage hazard), then a marker file records the per-cluster
-    * install plan (keep/drop — a cluster emptied ENTIRELY by the
-    * delete has no staged dir and must be dropped explicitly), and
-    * the install is pure FS renames. Crash-safe at every point
-    * ([[recoverForget]], run from all store entry points): before the
-    * marker the live store is untouched and the stage is discarded;
-    * after it the plan replays idempotently. Re-running a completed
-    * forget is a no-op (the ids are gone).
+    * erase I/O is ∝ affected clusters, not store size. The rewrite goes
+    * through [[StagedCommit]] (stage `_forget_pending`, marker
+    * `_forget_done`, plan dirs under `codes/`): `keep cluster=c` installs
+    * a cluster's staged survivors, `drop cluster=c` removes a cluster
+    * the delete emptied. Re-running a completed forget is a no-op (the
+    * ids are gone).
     *
     * The coarse centroids and PQ codebook are NOT touched: they are
     * trained model parameters (aggregates over many vectors), not
@@ -655,11 +659,7 @@ object Similarity {
     */
   def forgetFromIvfPqStore(spark: org.apache.spark.sql.SparkSession,
                            store: String, deleteIds: DataFrame): Unit = {
-    // finish any half-installed prior forget/rebalance before reading
-    recoverForget(spark, store)
-    recoverRebalance(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    recover(spark, store) // finish any half-installed mutation before reading
     val codes = StoreRead.parquet(spark, s"$store/codes")
     val del = deleteIds.select(col(deleteIds.columns.head).as("__del_id")).distinct()
     // affected clusters: bounded by |clusters| (the IVF provisioning
@@ -668,87 +668,43 @@ object Similarity {
         col("vec_id") === col("__del_id"), "left_semi")
       .select("cluster").distinct().collect().map(_.get(0))
     if (affected.isEmpty) return
-    // STAGE the survivors to a pending dir, then swap behind a marker
-    // (the StreamSketch / IncrementalComponents.compact protocol —
-    // ADVICE r12): the previous form dynamic-overwrote codes/ from a
-    // plan READING codes/, shielded only by persist — which does not
-    // cut lineage, so an executor loss mid-write recomputed survivors
-    // from partitions being concurrently truncated (silent corruption
-    // on a GDPR-erasure path). Writing to pending reads and writes
-    // DISJOINT paths; the install below is pure FS renames.
-    val pending = new org.apache.hadoop.fs.Path(s"$store/$ForgetPendingDir")
-    fs.delete(pending, true)
+    // survivors are staged from the live codes to a disjoint path (an
+    // in-place dynamic overwrite would read the partitions it truncates)
+    val fs = StagedCommit.fsOf(spark, store)
+    val layout = forgetLayout(store)
+    val pending = StagedCommit.reset(fs, layout)
     codes.filter(col("cluster").isin(affected.toIndexedSeq: _*))
       .join(broadcast(del), col("vec_id") === col("__del_id"), "left_anti")
       .repartition(col("cluster"))
       .write.mode("overwrite").partitionBy("cluster").parquet(pending.toString)
-    // the marker records the per-cluster install plan (keep = replace
-    // with staged survivors, drop = emptied by the delete — dynamic
-    // overwrite semantics would have silently left those dirs in
-    // place), so a crash at ANY point replays idempotently: keep dirs
-    // whose staged copy is gone were already installed; drops re-run.
-    val keptDirs = (if (fs.exists(pending)) fs.listStatus(pending).toSeq else Seq.empty)
-      .map(_.getPath.getName).filter(_.startsWith("cluster=")).toSet
-    val plan = affected.map { c =>
+    val staged = (if (fs.exists(pending)) fs.listStatus(pending).toSeq else Seq.empty)
+      .map(_.getPath.getName).toSet
+    StagedCommit.commit(fs, layout, affected.toSeq.map { c =>
       val d = s"cluster=$c"
-      (if (keptDirs.contains(d)) "keep " else "drop ") + d
-    }.sorted.mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(s"$store/$ForgetMarkerFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$ForgetMarkerFile")
-    fs.delete(marker, false)
-    fs.rename(tmp, marker)
-    installForget(fs, store)
+      if (staged(d)) Keep(d) else Drop(d): StagedCommit.Step
+    }.sortBy(_.dir))
   }
 
-  private val ForgetPendingDir = "_forget_pending"
-  private val ForgetMarkerFile = "_forget_done"
+  /** The IVF-PQ store's three [[StagedCommit]] layouts. */
+  private def buildLayout(store: String) =
+    new StagedCommit.Layout(new org.apache.hadoop.fs.Path(store), "_build_pending", "_build_done")
+  private def forgetLayout(store: String) =
+    new StagedCommit.Layout(new org.apache.hadoop.fs.Path(store),
+      "_forget_pending", "_forget_done", "codes")
+  private def rebalanceLayout(store: String) =
+    new StagedCommit.Layout(new org.apache.hadoop.fs.Path(store),
+      "_rebalance_pending", "_rebalance_done")
 
-  /** Complete (or discard) a half-finished [[forgetFromIvfPqStore]] —
-    * idempotent; called from every store entry point (forget itself,
-    * [[admitIvfPqBatch]], [[ivfPqStoredTopK]]). Before the marker
-    * commits, the staged survivors are garbage (the live store is
-    * untouched — discard them); after it, the marker's per-cluster
-    * plan is replayed to completion.
+  /** Finish (or discard) a half-done build, forget or rebalance of the
+    * store — one listing of the store root when clean. Every store
+    * entry point runs it first.
     */
-  def recoverForget(spark: org.apache.spark.sql.SparkSession,
-                    store: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$ForgetMarkerFile")
-    val pending = new org.apache.hadoop.fs.Path(s"$store/$ForgetPendingDir")
-    if (fs.exists(marker)) installForget(fs, store)
-    else if (fs.exists(pending)) fs.delete(pending, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/$ForgetMarkerFile.tmp"), false)
-  }
+  def recover(spark: org.apache.spark.sql.SparkSession, store: String): Unit =
+    StagedCommit.recover(StagedCommit.fsOf(spark, store),
+      buildLayout(store), forgetLayout(store), rebalanceLayout(store))
 
-  private def installForget(fs: org.apache.hadoop.fs.FileSystem,
-                            store: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$ForgetMarkerFile")
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val plan = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-    val pending = new org.apache.hadoop.fs.Path(s"$store/$ForgetPendingDir")
-    val codesPath = new org.apache.hadoop.fs.Path(s"$store/codes")
-    plan.linesIterator.filter(_.nonEmpty).foreach { line =>
-      val (action, dir) = line.splitAt(5)
-      val staged = new org.apache.hadoop.fs.Path(pending, dir)
-      val live = new org.apache.hadoop.fs.Path(codesPath, dir)
-      action.trim match {
-        case "keep" =>
-          // staged copy still present → replace live; absent → this
-          // cluster was already installed by a previous replay
-          if (fs.exists(staged)) { fs.delete(live, true); fs.rename(staged, live) }
-        case "drop" => fs.delete(live, true) // emptied by the delete
-      }
-    }
-    fs.delete(pending, true)
-    fs.delete(marker, false)
-  }
+  def recoverForget(spark: org.apache.spark.sql.SparkSession, store: String): Unit =
+    recover(spark, store)
 
   /** Incremental ADMISSION into a [[buildIvfPqStore]] store — the
     * insert half of the vector store's lifecycle (x23's forget is the
@@ -778,8 +734,7 @@ object Similarity {
   def admitIvfPqBatch(spark: org.apache.spark.sql.SparkSession, store: String,
                       batch: DataFrame, idCol: String, embCol: String,
                       batchId: Long, m: Int = 4, dsub: Int = 16): Unit = {
-    recoverForget(spark, store)    // never append into a half-installed swap
-    recoverRebalance(spark, store) // ...of either store mutation
+    recover(spark, store) // never append into a half-installed mutation
     // Hadoop FS for the ledger (the store may live on HDFS/S3 — a
     // java.io.File check there always reads "absent" and every
     // redelivery would double-admit). Ledger retention is the shared
@@ -811,18 +766,14 @@ object Similarity {
                              store: String): Unit =
     AdmissionLedger.compact(AdmissionLedger.fsOf(spark, store), store)
 
-  private val RebalancePendingDir = "_rebalance_pending"
-  private val RebalanceMarkerFile = "_rebalance_done"
-
   /** Per-cluster vector counts of a store, restricted to clusters the
-    * coarse table references (a mid-crash rebalance can leave staged
-    * new-cluster partitions that are INVISIBLE to retrieval — probes
-    * only ever match coarse ids — and this read honors the same
-    * visibility rule). One row per live cluster: (cluster, n_vecs).
+    * coarse table references (retrieval probes only coarse ids, and
+    * this read honors the same visibility rule). One row per live
+    * cluster: (cluster, n_vecs).
     */
   def ivfPqClusterSizes(spark: org.apache.spark.sql.SparkSession,
                         store: String): DataFrame = {
-    recoverRebalance(spark, store)
+    recover(spark, store)
     val live = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq").toDF(spark)
       .select(col("g_id").cast("long").as("cluster"))
     StoreRead.parquet(spark, s"$store/codes")
@@ -858,17 +809,12 @@ object Similarity {
     *     identically in both engines; integer `div`/`//` is AVOIDED
     *     here because Spark truncates toward zero while DuckDB floors,
     *     and coordinates go negative);
-    *  5. install, crash-safe in the forget protocol's ordering: the
-    *     two NEW cluster partitions are written first via per-writer
-    *     dynamic overwrite (invisible until coarse references them,
-    *     idempotent on retry), the new coarse (old minus hot plus the
-    *     two new rows, ids max(g_id)+1 / +2) is staged to a pending
-    *     dir, a marker commits, and [[recoverRebalance]] — run from
-    *     every store entry point — replays the swap + hot-partition
-    *     drop idempotently. Before the marker the live store is
-    *     untouched (orphan partitions are invisible and get
-    *     overwritten by the deterministic retry); after it the install
-    *     completes.
+    *  5. install through [[StagedCommit]] (stage `_rebalance_pending`,
+    *     marker `_rebalance_done`): the new coarse (old minus hot plus
+    *     the two new rows, ids max(g_id)+1 / +2) and the two new
+    *     cluster partitions are staged, and the plan is `keep coarse`,
+    *     `keep codes/cluster=<new>` for each side, `drop
+    *     codes/cluster=<hot>`.
     *
     * Retrieval code is unchanged: probes rank whatever centroids the
     * coarse table holds. The split halves the hot partition's scan
@@ -879,10 +825,7 @@ object Similarity {
   def rebalanceIvfPqStore(spark: org.apache.spark.sql.SparkSession,
                           store: String, m: Int = 4, dsub: Int = 16,
                           minSplitVectors: Long = 4): Long = {
-    recoverRebalance(spark, store)
-    recoverForget(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    recover(spark, store)
     // the resident coarse rows NAME the two split clusters (max g_id);
     // an empty coarse table has nothing to split and reads no codes
     val coarseLive = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq")
@@ -928,86 +871,33 @@ object Similarity {
     val newCentroids = cent.groupBy(_._1).toSeq.map { case (sd, rows) =>
       (mx + 1 + sd, rows.sortBy(_._2).map(_._3))
     }
-    // 1) new partitions first (invisible until coarse lists them;
-    //    per-writer dynamic overwrite keeps the retry idempotent).
-    //    localCheckpoint BEFORE the write: the frame reads codes/ and
-    //    the writer overwrites under codes/ — an eager checkpoint cuts
-    //    the file-source lineage entirely (the forget lesson: persist
-    //    alone shields nothing; only a materialized, source-free plan
-    //    can never recompute from partitions being rewritten)
-    val newParts = sided
+    // the new partitions and coarse are staged: the frame reads live
+    // codes/ and writes only under the stage dir
+    val fs = StagedCommit.fsOf(spark, store)
+    val layout = rebalanceLayout(store)
+    val pending = StagedCommit.reset(fs, layout)
+    sided
       .select(col("vec_id").as("__v"), (lit(mx + 1) + col("sd")).as("__c"))
       .join(hotCodes, col("__v") === hotCodes("vec_id"))
       .select(col("vec_id"), col("subspace"), col("code"), col("dist_q"),
         col("__c").as("cluster"))
-      .localCheckpoint(true)
-    newParts
       .repartition(col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster").parquet(s"$store/codes")
+      .write.mode("overwrite").partitionBy("cluster").parquet(s"$pending/codes")
     recon.unpersist(); sided.unpersist()
-    // 2) stage the new coarse (old minus hot, plus the two new rows)
-    val pending = new org.apache.hadoop.fs.Path(s"$store/$RebalancePendingDir")
-    fs.delete(pending, true)
     import spark.implicits._
     coarseLive.toDF(spark).filter(col("g_id") =!= hot)
       .unionByName(newCentroids.toDF("g_id", "gq"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$pending/coarse")
-    // 3) marker commits; install = coarse swap + hot-partition drop
-    val tmp = new org.apache.hadoop.fs.Path(s"$store/$RebalanceMarkerFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"drop cluster=$hot".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$RebalanceMarkerFile")
-    fs.delete(marker, false)
-    fs.rename(tmp, marker)
-    installRebalance(fs, store)
+    // a side no member joined has no staged dir: its keep is a no-op
+    StagedCommit.commit(fs, layout, Seq(Keep("coarse"),
+      Keep(s"codes/cluster=${mx + 1}"), Keep(s"codes/cluster=${mx + 2}"),
+      Drop(s"codes/cluster=$hot")))
     hot
   }
 
-  /** Complete (or discard) a half-finished [[rebalanceIvfPqStore]] —
-    * idempotent; run from every store entry point. Before the marker
-    * the live store is untouched (staged coarse and orphan new
-    * partitions are discarded/overwritten by the deterministic retry);
-    * after it the coarse swap + hot-partition drop replay to
-    * completion.
-    */
-  def recoverRebalance(spark: org.apache.spark.sql.SparkSession,
-                       store: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$RebalanceMarkerFile")
-    val pending = new org.apache.hadoop.fs.Path(s"$store/$RebalancePendingDir")
-    if (fs.exists(marker)) installRebalance(fs, store)
-    else if (fs.exists(pending)) fs.delete(pending, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/$RebalanceMarkerFile.tmp"), false)
-  }
-
-  private def installRebalance(fs: org.apache.hadoop.fs.FileSystem,
-                               store: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$store/$RebalanceMarkerFile")
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val plan = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-    val stagedCoarse = new org.apache.hadoop.fs.Path(
-      s"$store/$RebalancePendingDir/coarse")
-    val liveCoarse = new org.apache.hadoop.fs.Path(s"$store/coarse")
-    // staged copy still present → swap; absent → already installed
-    if (fs.exists(stagedCoarse)) {
-      fs.delete(liveCoarse, true)
-      fs.rename(stagedCoarse, liveCoarse)
-    }
-    plan.linesIterator.filter(_.startsWith("drop ")).foreach { line =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$store/codes/${line.stripPrefix("drop ")}"), true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/$RebalancePendingDir"), true)
-    fs.delete(marker, false)
-  }
+  def recoverRebalance(spark: org.apache.spark.sql.SparkSession, store: String): Unit =
+    recover(spark, store)
 
   /** Clear one batch's admission-ledger marker — the deliberate
     * re-ingest knob. [[forgetFromIvfPqStore]] removes a vector's code

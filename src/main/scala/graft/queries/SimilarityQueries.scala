@@ -1611,9 +1611,9 @@ object SimilarityQueries {
     * assignment round (seed A = min id, seed B = farthest from A,
     * ties to A — the e10 one-Lloyd-round convention), and the new
     * centroids are per-dimension floor-means of each side's
-    * reconstructions. Install is crash-safe in the x23 forget
-    * protocol's ordering (new partitions → staged coarse → marker →
-    * swap + drop; `recoverRebalance` replays from every entry point).
+    * reconstructions. Install goes through `StagedCommit`, like the
+    * x23 forget (staged coarse + new partitions → marker → install;
+    * `Similarity.recover` replays from every entry point).
     *
     * The gate reads its whole answer FROM THE POST-REBALANCE STORE
     * (sizes from the codes partitions, centroid fingerprints from the

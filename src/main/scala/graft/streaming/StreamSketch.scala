@@ -1,6 +1,9 @@
 package graft.streaming
 
 import graft.functions.TextFunctions
+import graft.io.StagedCommit
+import graft.io.StagedCommit.{Drop, Keep}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,28 +78,25 @@ object StreamSketch {
   // come back; a redelivered batch id >= frontier still overwrites its
   // own live partition exactly as before.
   //
-  // Crash safety (single compactor, the IncrementalNearDup discipline:
-  // the swap is explicit on-disk state, recovery completes it): the
-  // merged base is fully written to `_compact_pending` (ignored by
-  // Spark's file listing) BEFORE the `_compact_upto` marker commits the
-  // swap; only after the marker exists is any live data touched. Every
-  // crash point therefore leaves either (no marker → live store intact,
-  // pending is garbage) or (marker → pending/base slice is authoritative
-  // for ids < frontier, finish the install). `recoverCompaction` — run
-  // from both compact() and readMerged() — replays the install
-  // idempotently.
+  // Crash safety: the merged base is staged in `_compact_pending`
+  // (ignored by Spark's file listing) and installed through
+  // [[graft.io.StagedCommit]] behind the `_compact_upto` marker; the
+  // plan is `keep batch=-1` (the stage dir is the new base slice) plus
+  // `drop batch=<id>` per folded id. `recoverCompaction` runs from both
+  // compact() and readMerged().
 
-  private val PendingDir = "_compact_pending"
-  private val MarkerFile = "_compact_upto"
   private val BasePartition = "batch=-1"
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, store: String) = {
-    val p = new org.apache.hadoop.fs.Path(store)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  private def layout(store: String) =
+    new StagedCommit.Layout(new Path(store), "_compact_pending", "_compact_upto") {
+      override def staged(dir: String) = stageDir
+      // a marker holding just the frontier folds every id below it
+      override def legacy(fs: FileSystem, text: String) =
+        text.trim.toLongOption.map(frontier => Keep(BasePartition) +:
+          batchIds(fs, root).filter(id => id >= 0 && id < frontier).map(id => Drop(s"batch=$id")))
+    }
 
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
-                       store: org.apache.hadoop.fs.Path): Seq[Long] =
+  private def batchIds(fs: FileSystem, store: Path): Seq[Long] =
     if (!fs.exists(store)) Seq.empty
     else fs.listStatus(store).toSeq
       .filter(_.isDirectory).map(_.getPath.getName)
@@ -110,66 +110,23 @@ object StreamSketch {
   def compact(spark: org.apache.spark.sql.SparkSession, store: String,
               frontier: Long): Unit = {
     recoverCompaction(spark, store)
-    val (fs, storePath) = fsOf(spark, store)
-    if (batchIds(fs, storePath).exists(id => id >= 0 && id < frontier)) {
-      val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-      fs.delete(pending, true)
+    val fs = StagedCommit.fsOf(spark, store)
+    val folded = batchIds(fs, new Path(store)).filter(id => id >= 0 && id < frontier).sorted
+    if (folded.nonEmpty) {
+      val l = layout(store)
+      val pending = StagedCommit.reset(fs, l)
       spark.read.parquet(store)
         .filter(col("batch") < frontier)
         .groupBy("r", "bucket").agg(sum("bsum").as("bsum"))
         .coalesce(1)
         .write.mode("overwrite").parquet(pending.toString)
-      // the marker is the commit point: temp + rename, never partial
-      val tmp = new org.apache.hadoop.fs.Path(storePath, MarkerFile + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.writeBytes(frontier.toString) finally out.close()
-      fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile), false)
-      fs.rename(tmp, new org.apache.hadoop.fs.Path(storePath, MarkerFile))
-      install(fs, storePath, frontier)
+      StagedCommit.commit(fs, l, Keep(BasePartition) +: folded.map(id => Drop(s"batch=$id")))
     }
   }
 
   /** Complete (or discard) a half-done compaction. Idempotent; safe to
     * run when no compaction was in flight.
     */
-  def recoverCompaction(spark: org.apache.spark.sql.SparkSession,
-                        store: String): Unit = {
-    val (fs, storePath) = fsOf(spark, store)
-    val marker = new org.apache.hadoop.fs.Path(storePath, MarkerFile)
-    val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val frontier =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      install(fs, storePath, frontier)
-    } else if (fs.exists(pending)) {
-      // crash before the marker committed: the pending merge was never
-      // authoritative and every live partition is intact — discard it
-      fs.delete(pending, true)
-    }
-    // clean a marker temp left by a crash mid-create (never authoritative)
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile + ".tmp"), false)
-  }
-
-  /** The committed install: pending (when still present) replaces the
-    * base slice, folded ids are dropped, the marker clears. Every step
-    * is idempotent, so replaying from any crash point converges.
-    */
-  private def install(fs: org.apache.hadoop.fs.FileSystem,
-                      storePath: org.apache.hadoop.fs.Path,
-                      frontier: Long): Unit = {
-    val pending = new org.apache.hadoop.fs.Path(storePath, PendingDir)
-    val base = new org.apache.hadoop.fs.Path(storePath, BasePartition)
-    if (fs.exists(pending)) {
-      // marker exists => the pending write completed (it precedes the
-      // marker); the old base's cells are already folded into it
-      fs.delete(base, true)
-      fs.rename(pending, base)
-    }
-    batchIds(fs, storePath).filter(id => id >= 0 && id < frontier)
-      .foreach(id => fs.delete(
-        new org.apache.hadoop.fs.Path(storePath, s"batch=$id"), true))
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, MarkerFile), false)
-  }
+  def recoverCompaction(spark: org.apache.spark.sql.SparkSession, store: String): Unit =
+    StagedCommit.recover(StagedCommit.fsOf(spark, store), layout(store))
 }

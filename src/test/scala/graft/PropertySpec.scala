@@ -2049,6 +2049,34 @@ class PropertySpec extends SparkSpec {
       "replaying an already-installed plan must change nothing")
   }
 
+  test("ivfPqClusterSizes finishes a committed forget before counting") {
+    import graft.operators.Similarity
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    def build() = {
+      val store = java.nio.file.Files.createTempDirectory("forgetsizes").toString
+      Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
+        col("id") >= 8 && col("id") < 12, col("id") < 8, store)
+      store
+    }
+    val delIds = emb.filter(col("vec_id") % 10 === 3).select("vec_id")
+    val done = build()
+    Similarity.forgetFromIvfPqStore(spark, done, delIds)
+    // crash after the marker committed: staged survivors + marker, the
+    // live codes still hold every deleted vector
+    val store = build()
+    val codes = spark.read.parquet(s"$store/codes")
+    val del = delIds.select(col("vec_id").as("del_id"))
+    val hit = codes.join(del, col("vec_id") === col("del_id"), "left_semi")
+      .select(col("cluster").cast("long")).distinct().as[Long].collect()
+    codes.filter(col("cluster").isin(hit: _*))
+      .join(del, col("vec_id") === col("del_id"), "left_anti")
+      .write.partitionBy("cluster").parquet(s"$store/_forget_pending")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(store, "_forget_done"),
+      hit.map(c => s"keep cluster=$c").mkString("\n"))
+    assert(Similarity.ivfPqClusterSizes(spark, store).as[(Long, Long)].collect().toMap ==
+      Similarity.ivfPqClusterSizes(spark, done).as[(Long, Long)].collect().toMap)
+  }
+
   test("e31 rebalance: conservation, hot-dir swap, retrieval intact, crash shapes, no-op floor") {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
