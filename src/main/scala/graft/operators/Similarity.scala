@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.io.{StagedCommit, StoreRead}
 import graft.io.StagedCommit.{Drop, Keep}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exactness baseline, plus
@@ -326,27 +327,16 @@ object Similarity {
     val fs = StagedCommit.fsOf(spark, store)
     val layout = buildLayout(store)
     val stage = StagedCommit.reset(fs, layout)
-    val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val coarse = v.filter(coarsePred).select(col("id").as("g_id"), col("q").as("gq"))
-    def subs(qc: Column, out: String) =
-      explode(transform(sequence(lit(0), lit(m - 1)),
-        s => struct(s.cast("long").as("s"),
-          slice(qc, s * dsub + 1, lit(dsub)).as(out)))).as("e")
-    // the codebook frame is bound ONCE and serves both the store write
-    // and the encode below (two inline copies of the same projection
-    // are exactly the drift risk the shared encode path exists to kill)
-    val csub = v.filter(codebookPred)
-      .select(col("id").as("c_id"), subs(col("q"), "cqs"))
-      .select(col("c_id"), col("e.s").as("s"), col("e.cqs").as("cqs"))
-    // The three store dirs are independent outputs of the one persisted
-    // frame — submit them concurrently (guide §2.6 / the
-    // writeAnalyses discipline): on a cluster the two tiny model-param
-    // writes back-fill executors the codes job leaves idle, and the
-    // build stops paying 3 × serial job latency. coalesce(1) on the
-    // param dirs: model params are broadcast-class, so one file each —
-    // every retrieval re-reads these dirs, and 32 four-row task files
-    // cost footer reads for nothing. All three land in the stage dir and
+    val (v, model, _) = inMemory(vectors, idCol, embCol, coarsePred, codebookPred,
+      lit(false), m, dsub, "buildIvfPqStore")
+    // The three store dirs are independent outputs of the one model —
+    // submit them concurrently (guide §2.6 / the writeAnalyses
+    // discipline): on a cluster the two tiny model-param writes
+    // back-fill executors the codes job leaves idle, and the build stops
+    // paying 3 × serial job latency. coalesce(1) on the param dirs:
+    // model params are broadcast-class, so one file each — every
+    // retrieval re-reads these dirs, and 32 four-row task files cost
+    // footer reads for nothing. All three land in the stage dir and
     // install together through [[StagedCommit]] (plan: keep coarse,
     // codebook, codes), so a store never mixes two builds.
     locally {
@@ -354,20 +344,19 @@ object Similarity {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val writes = Seq(
-        Future(coarse.coalesce(1).write.mode("overwrite").parquet(s"$stage/coarse")),
-        Future(csub.coalesce(1).write.mode("overwrite").parquet(s"$stage/codebook")),
+        Future(model.coarse.toDF(spark).coalesce(1).write.mode("overwrite")
+          .parquet(s"$stage/coarse")),
+        Future(model.codebook.toDF(spark).coalesce(1).write.mode("overwrite")
+          .parquet(s"$stage/codebook")),
         // codes are CLUSTER-PARTITIONED (`partitionBy`): retrieval
         // probes a handful of clusters per query, and the partitioned
         // layout turns that probe set into static partition pruning on
         // the codes scan — the io07 layout applied to the index's own
         // store; a flat layout would pay O(corpus) codes I/O per query
-        // at 100 TB (VERDICT r8 #1b). ONE encode path
-        // ([[assignAndEncode]]) serves both this build and
-        // admitIvfPqBatch — the e29 rebuild-equality invariant is held
-        // by shared code, not by keeping two expression blocks in
-        // lockstep. Cluster rows by target directory first (files ∝
-        // clusters, not tasks×clusters — see bm25BuildIndex's note).
-        Future(assignAndEncode(v, coarse, csub, m, dsub)
+        // at 100 TB (VERDICT r8 #1b). Cluster rows by target directory
+        // first (files ∝ clusters, not tasks×clusters — see
+        // bm25BuildIndex's note).
+        Future(model.encode(v)
           .repartition(col("cluster"))
           .write.mode("overwrite").partitionBy("cluster")
           .parquet(s"$stage/codes")))
@@ -385,11 +374,13 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
 
   /** Driver-side twin of [[sqDistL]] for the coordinator-side routing
-    * below — same integer arithmetic, element for element.
+    * and ADC tables — same integer arithmetic, element for element, over
+    * the model-side array's length (a one-cell index's centroid is
+    * empty, so every query lies at distance 0 from it).
     */
-  private def sqDistLocal(a: Array[Long], b: Array[Long]): Long = {
+  private def sqDistLocal(query: Array[Long], model: Array[Long]): Long = {
     var acc = 0L; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
+    while (i < model.length) { val d = query(i) - model(i); acc += d * d; i += 1 }
     acc
   }
   private def asLong(v: Any): Long = v match {
@@ -400,72 +391,6 @@ object Similarity {
       s"stored IVF-PQ routing needs numeric g_id/c_id ids; got ${other.getClass.getName} " +
         s"value '$other' — build the store from integer vector ids")
   }
-
-  /** QUERY-SIDE routing and ADC tables computed on the COORDINATOR
-    * (guide §1.2 / §5): the probe list is |q|·k integer squared-L2s
-    * against the broadcast-class centroid set, the distance tables
-    * |q|·m·k more against the codebook — request-sized × model-sized
-    * work, exactly what every production ANN serving system computes on
-    * the query coordinator per request. Running each as a Spark
-    * broadcast-build job (the former folded-row form) paid a full job
-    * launch plus a scan of the query frame PER LEG; both frames are
-    * broadcast into the corpus-side plan afterward either way, so the
-    * bytes shipped are identical. Ordering is (gdist, g_id) ascending —
-    * bit-identical to the former array_sort(struct(gdist, g_id)) prefix.
-    * Returns (probeRows, tabRows): (q_id, [p_rank,] cluster) and
-    * (q_id, s, c_id, tdist) with values passed through untouched from
-    * the collected rows, so downstream join types are unchanged.
-    */
-  private def localProbesAndTab(
-      qRows: Seq[(Any, Array[Long])],
-      cents: Seq[(Any, Array[Long])],
-      cwords: Seq[(Any, Long, Array[Long])],
-      nprobe: Int, dsub: Int, withRank: Boolean)
-    : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
-    import org.apache.spark.sql.Row
-    val centsL = cents.map { case (gid, gq) => (gid, asLong(gid), gq) }
-    val cws = cwords
-      .sortBy { case (cid, sL, _) => (sL, asLong(cid)) }
-    val probes = qRows.flatMap { case (qid, qq) =>
-      val ranked = centsL
-        .map { case (gid, gidL, gq) => (sqDistLocal(qq, gq), gidL, gid) }
-        .sortBy { case (d, gl, _) => (d, gl) }
-        .take(nprobe)
-      ranked.zipWithIndex.map { case ((_, _, gid), i) =>
-        if (withRank) Row(qid, Integer.valueOf(i + 1), gid) else Row(qid, gid)
-      }
-    }
-    val tab = qRows.flatMap { case (qid, qq) =>
-      cws.map { case (cid, sL, cqs) =>
-        val off = (sL * dsub).toInt
-        Row(qid, java.lang.Long.valueOf(sL), cid,
-          java.lang.Long.valueOf(sqDistLocal(qq.slice(off, off + dsub), cqs)))
-      }
-    }
-    (probes, tab)
-  }
-
-  /** The coarse-centroid table folded to ONE broadcast-able row
-    * `cents: array<struct<g_id, gq>>` (sorted by g_id for a
-    * deterministic plan). Model params are broadcast-class by the IVF
-    * provisioning invariant (k ∝ √n), so folding them to a single array
-    * row turns every routing/encoding argmin downstream into a per-row
-    * codegen expression — ZERO shuffles on the corpus side (guide §2.4;
-    * previously each argmin was a corpus-wide keyed agg + join).
-    */
-  private def centsRow(coarse: DataFrame): DataFrame =
-    // coalesce(1): the fold needs every row in one place anyway —
-    // a single narrow task instead of a 2-stage partial/final agg
-    // (model params are broadcast-class, so one task holds them)
-    coarse.coalesce(1)
-      .agg(sort_array(collect_list(struct(col("g_id"), col("gq")))).as("cents"))
-
-  /** The PQ codebook folded to ONE row `cwords: array<struct<s, c_id,
-    * cqs>>` — same broadcast-model-row discipline as [[centsRow]].
-    */
-  private def cwordsRow(csub: DataFrame): DataFrame =
-    csub.coalesce(1)
-      .agg(sort_array(collect_list(struct(col("s"), col("c_id"), col("cqs")))).as("cwords"))
 
   /** Per-row PQ codes over the folded `cwords` array: for each subspace
     * s, argmin (dist, c_id) over that subspace's codewords — one
@@ -480,57 +405,195 @@ object Similarity {
             sqDistL(slice(q, s * dsub + lit(1), lit(dsub)), w.getField("cqs")).as("dist"),
             w.getField("c_id").as("c_id")))).as("best")))
 
-  /** THE encode path for the IVF-PQ store: nearest-coarse-centroid
-    * assignment (argmin, ties to the lower g_id) plus per-subspace PQ
-    * codes (argmin, ties to the lower codeword id) against EXPLICIT
-    * model-parameter frames — used by both [[buildIvfPqStore]] (params
-    * derived from the corpus) and [[admitIvfPqBatch]] (params read from
-    * the store), so routing and encoding can never drift between the
-    * from-scratch and the incremental path (the equality the e29 gate
-    * pins).
-    *
-    * r13 shape: the params fold to one broadcast row each ([[centsRow]]/
-    * [[cwordsRow]]) and the whole encode is a per-row projection + one
-    * explode — the former corpus-wide argmin aggs (2 exchanges) and the
-    * codes⋈cluster join (a 3rd) are gone; the arithmetic per candidate
-    * pair is unchanged, so output is bit-identical.
-    * Input `v` is the quantized frame (id, q); output one row per
-    * (vec, subspace): (vec_id, subspace, code, dist_q, cluster).
+  /** The one driver-collect bound of the in-memory residency: query and
+    * model rows together. Queries are a bounded sample/request by
+    * contract and model params broadcast-class by the IVF provisioning
+    * invariant (k ∝ √n).
     */
-  private def assignAndEncode(v: DataFrame, coarse: DataFrame,
-                              csub: DataFrame, m: Int, dsub: Int): DataFrame = {
-    // Coarse assignment stays the broadcast-join + min-struct AGG form:
-    // the per-row array_min(transform(cents, ...)) fold was tried and
-    // MEASURED 2.8× slower at the 100× tier (e16 10.3 → 28.5 s) — with
-    // √n centroids the deeply nested interpreted HOF tree's per-element
-    // constant beats the one narrow (id, cluster) agg+join it saves.
-    // The per-subspace PQ argmin keeps the folded-codebook per-row form
-    // (pqCodes): PQ codebooks are small and FIXED (≤256 codewords per
-    // subspace), and the fold measured ~2× FASTER at the 100× tier
-    // (e15 6.9 → 3.4 s) by deleting the (id, s)-keyed agg exchange.
-    val assigned = v.crossJoin(broadcast(coarse))
-      .select(col("id"), col("g_id"),
-        aggregate(zip_with(col("q"), col("gq"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _).as("gdist"))
-      .groupBy("id")
-      .agg(min(struct(col("gdist"), col("g_id"))).as("b"))
-      .select(col("id").as("a_id"), col("b.g_id").as("cluster"))
-    v.crossJoin(broadcast(cwordsRow(csub)))
-      .select(col("id"), explode(pqCodes(col("q"), col("cwords"), m, dsub)).as("e"))
-      // degenerate (empty) codebook: array_min over no codewords is null
-      // — drop such rows rather than write null codes into the store
-      // (the former keyed-agg form produced zero rows; ADVICE r13)
-      .filter(col("e.best").isNotNull)
-      .select(col("id").as("vec_id"), col("e.s").as("subspace"),
-        col("e.best.c_id").as("code"), col("e.best.dist").as("dist_q"))
-      .join(assigned, col("vec_id") === col("a_id")).drop("a_id")
+  private val MaxLocalRows = 1000000
+
+  /** THE IVF-PQ model: coarse centroids `(g_id, gq)` and PQ codebook
+    * subvectors `(c_id, s, cqs)` as coordinator-held rows, `m`
+    * subspaces of `dsub` dims, all on the int8 grid ([[quantize]]).
+    * One value serves both residencies of the codes — the stored one
+    * (rows from [[StoreRead.resident]], codes from the
+    * cluster-partitioned store) and the in-memory one (rows from one
+    * tagged collect, codes from [[IvfPq.encode]]) — so build,
+    * admission and in-query search share one encode, one ADC scorer
+    * and one top-k (the equalities e19 and e29 pin).
+    */
+  private final case class IvfPq(coarse: StoreRead.Resident, codebook: StoreRead.Resident,
+                                 m: Int, dsub: Int) {
+
+    /** The PQ half of [[encode]]: per (vec, subspace) the nearest
+      * codeword (ties to the lower codeword id) and its distortion —
+      * (vec_id, subspace, code, dist_q). The codebook folds to one
+      * broadcast row, so the argmin is a per-row projection with no
+      * corpus shuffle; PQ codebooks are small and FIXED (≤256 codewords
+      * per subspace), and the fold measured ~2× FASTER at the 100× tier
+      * (e15 6.9 → 3.4 s) than a keyed argmin agg.
+      */
+    def pq(v: DataFrame): DataFrame = {
+      val cwords = StoreRead.Resident(
+        StructType(Seq(StructField("cwords", ArrayType(codebook.schema)))),
+        Array(Row(codebook.rows.toSeq))).toDF(v.sparkSession)
+      v.crossJoin(broadcast(cwords))
+        .select(col("id"), explode(pqCodes(col("q"), col("cwords"), m, dsub)).as("e"))
+        // degenerate (empty) codebook: array_min over no codewords is
+        // null — drop such rows rather than emit null codes (ADVICE r13)
+        .filter(col("e.best").isNotNull)
+        .select(col("id").as("vec_id"), col("e.s").as("subspace"),
+          col("e.best.c_id").as("code"), col("e.best.dist").as("dist_q"))
+    }
+
+    /** Nearest-coarse-centroid assignment (ties to the lower g_id) plus
+      * [[pq]]: one row per (vec, subspace) — (vec_id, subspace, code,
+      * dist_q, cluster). Input `v` is the quantized frame (id, q).
+      * Assignment stays the broadcast-join + min-struct AGG form: the
+      * per-row array_min over folded centroids was MEASURED 2.8× slower
+      * at the 100× tier (e16 10.3 → 28.5 s) — with √n centroids the
+      * nested interpreted HOF tree's per-element constant beats the one
+      * narrow (id, cluster) agg+join it saves.
+      */
+    def encode(v: DataFrame): DataFrame = {
+      val assigned = v.crossJoin(broadcast(coarse.toDF(v.sparkSession)))
+        .select(col("id"), col("g_id"), sqDistL(col("q"), col("gq")).as("gdist"))
+        .groupBy("id")
+        .agg(min(struct(col("gdist"), col("g_id"))).as("b"))
+        .select(col("id").as("a_id"), col("b.g_id").as("cluster"))
+      pq(v).join(assigned, col("vec_id") === col("a_id")).drop("a_id")
+    }
+
+    /** Top-`k` by ADC distance over `codes` (an [[encode]] frame) for
+      * every probe width in `nprobes`: (nprobe, q_id, rank, n_id,
+      * adc_dist). `queries` are (q_id, qq) rows on the coordinator;
+      * `allowed`, when given, is a broadcast-class (`__allowed_id`)
+      * frame.
+      *
+      * Probe lists ((gdist, g_id) ascending) and per-query distance
+      * tables are request×model-sized integer arithmetic, computed on
+      * the COORDINATOR (guide §1.2 / §5) and broadcast as local frames
+      * — no job launch and no query-side scan per leg. The distinct
+      * probed clusters become a literal IN, so a cluster-partitioned
+      * codes scan is STATICALLY pruned (`PartitionFilters`; PlanSpec
+      * pins it): search I/O ∝ probed clusters. The allow-list
+      * pre-filters the codes before any ADC work (the FAISS IDSelector
+      * shape), so top-k fills from eligible candidates only.
+      *
+      * Scoring runs once at max(nprobes): every (q, vec) pair lives in
+      * exactly ONE cluster, so its probe rank is constant across its m
+      * code rows and filtering pairs by `min(p_rank) ≤ np` is exactly
+      * "score only clusters probed at width np". The rank is carried,
+      * and the scores persisted, only for a sweep.
+      */
+    def search(codes: DataFrame, queries: StoreRead.Resident, k: Int,
+               nprobes: Seq[Int], allowed: Option[DataFrame]): DataFrame = {
+      val spark = codes.sparkSession
+      val maxNp = nprobes.max
+      val sweep = nprobes.size > 1
+      val cents = coarse.rows.toSeq
+        .map(r => (r.get(0), asLong(r.get(0)), r.getSeq[Long](1).toArray))
+      val words = codebook.rows.toSeq.map { r =>
+        val s = asLong(r.get(1))
+        (r.get(0), s, (s * dsub).toInt, r.getSeq[Long](2).toArray)
+      }
+      val qs = queries.rows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray))
+      val probeRows = qs.flatMap { case (qid, qq) =>
+        cents.map { case (gid, gl, gq) => (sqDistLocal(qq, gq), gl, gid) }
+          .sortBy { case (d, gl, _) => (d, gl) }.take(maxNp)
+          .zipWithIndex.map { case ((_, _, gid), i) => Row(qid, Integer.valueOf(i + 1), gid) }
+      }
+      val tabRows = for ((qid, qq) <- qs; (cid, s, off, cqs) <- words)
+        yield Row(qid, java.lang.Long.valueOf(s), cid,
+          java.lang.Long.valueOf(sqDistLocal(qq.slice(off, off + dsub), cqs)))
+      val qIdType = queries.schema.head.dataType
+      val probes = StoreRead.Resident(StructType(Seq(StructField("q_id", qIdType),
+        StructField("p_rank", IntegerType), StructField("cluster", coarse.schema.head.dataType))),
+        probeRows.toArray).toDF(spark)
+      val tab = StoreRead.Resident(StructType(Seq(StructField("tq_id", qIdType),
+        StructField("s", codebook.schema("s").dataType),
+        StructField("c_id", codebook.schema("c_id").dataType),
+        StructField("tdist", LongType))), tabRows.toArray).toDF(spark)
+      val probed = codes.filter(col("cluster").isin(probeRows.map(_.get(2)).distinct: _*))
+      val eligible = allowed.fold(probed)(ids =>
+        probed.join(broadcast(ids), col("vec_id") === col("__allowed_id"), "left_semi"))
+      val scoredBase = eligible.join(broadcast(probes), Seq("cluster"))
+        .join(broadcast(tab),
+          col("tq_id") === col("q_id") && col("subspace") === col("s") &&
+            col("code") === col("c_id") && col("vec_id") =!= col("q_id"))
+        .groupBy(col("q_id"), col("vec_id").as("n_id"))
+        .agg(sum(col("tdist")).as("adc_dist"),
+          (if (sweep) Seq(min(col("p_rank")).as("p_rank")) else Nil): _*)
+      val scored =
+        if (sweep) scoredBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else scoredBase
+      val wTop = Window.partitionBy("q_id").orderBy(asc("adc_dist"), asc("n_id"))
+      nprobes.map { np =>
+        (if (np >= maxNp) scored else scored.filter(col("p_rank") <= np))
+          .withColumn("rank", row_number().over(wTop))
+          .filter(col("rank") <= k)
+          .select(lit(np.toLong).as("nprobe"),
+            col("q_id"), col("rank"), col("n_id"), col("adc_dist"))
+      }.reduce(_ unionByName _)
+    }
   }
+
+  /** The in-memory residency: the quantized corpus `v` (id, q),
+    * persisted for the encode that follows, and the model and query
+    * rows tagged by predicate and collected in ONE pass over it, which
+    * also materializes the cache. Returns (v, model, queries (q_id, qq)).
+    */
+  private def inMemory(vectors: DataFrame, idCol: String, embCol: String,
+                       coarsePred: Column, codebookPred: Column, queryPred: Column,
+                       m: Int, dsub: Int,
+                       caller: String): (DataFrame, IvfPq, StoreRead.Resident) = {
+    val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tagged = v.select(col("id"), col("q"), coarsePred.as("__c"),
+        codebookPred.as("__cb"), queryPred.as("__q"))
+      .filter(col("__c") || col("__cb") || col("__q"))
+      .limit(MaxLocalRows + 1).collect().toSeq
+    require(tagged.length <= MaxLocalRows,
+      s"$caller: > $MaxLocalRows query+model rows — the query side must be a " +
+        "bounded sample/request frame and the model broadcast-class; split the " +
+        "queries into batches or serve them from a buildIvfPqStore store")
+    def rows(i: Int) = tagged.filter(r => !r.isNullAt(i) && r.getBoolean(i))
+    val id = v.schema("id")
+    val q = v.schema("q")
+    // codebook subvectors cut driver-side — the slice(q, s·dsub+1, dsub)
+    // per subspace, in (codeword, s) order
+    val model = IvfPq(
+      StoreRead.Resident(StructType(Seq(id.copy(name = "g_id"), q.copy(name = "gq"))),
+        rows(2).map(r => Row(r.get(0), r.get(1))).toArray),
+      StoreRead.Resident(
+        StructType(Seq(id.copy(name = "c_id"), StructField("s", LongType, nullable = false),
+          q.copy(name = "cqs"))),
+        rows(3).flatMap(r => (0 until m).map(s =>
+          Row(r.get(0), s.toLong, r.getSeq[Long](1).slice(s * dsub, (s + 1) * dsub)))).toArray),
+      m, dsub)
+    val queries = StoreRead.Resident(StructType(Seq(id.copy(name = "q_id"), q.copy(name = "qq"))),
+      rows(4).map(r => Row(r.get(0), r.get(1))).toArray)
+    (v, model, queries)
+  }
+
+  /** The stored residency's model: resident coarse and codebook rows. */
+  private def storedModel(spark: org.apache.spark.sql.SparkSession, store: String,
+                          m: Int, dsub: Int): IvfPq =
+    IvfPq(StoreRead.resident(spark, s"$store/coarse", "g_id", "gq"),
+      StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs"), m, dsub)
 
   /** Retrieval against a [[buildIvfPqStore]] store: queries arrive as a
     * (id, embedding) frame at runtime; everything else — routing
     * centroids, distance-table codebook, corpus codes — comes from the
     * store. Must return exactly [[knnIvfPqAdc]]'s answer (the e19 gate
     * proves store fidelity against e16's oracle).
+    *
+    * FILTERED search (the FAISS IDSelector / vector-DB metadata-filter
+    * shape): `allowed`'s first column lists the eligible ids. The
+    * allow-list is request- or dimension-table-sized by contract and is
+    * broadcast; a corpus-scale predicate belongs in the store itself as
+    * a partition/stored column, and a large mid-size set degrades to
+    * x07's bloom semi-join.
     */
   def ivfPqStoredTopK(spark: org.apache.spark.sql.SparkSession, store: String,
                       queries: DataFrame, idCol: String, embCol: String,
@@ -542,22 +605,8 @@ object Similarity {
     // model params are broadcast-class and resident per store version;
     // opening the codes reads its schema from a footer — no Spark job
     // until the request-sized query frame is collected
-    val coarse = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq")
-    val csub = StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs")
-    val codes = StoreRead.parquet(spark, s"$store/codes")
+    val model = storedModel(spark, store, m, dsub)
     val q = queries.select(col(idCol).as("q_id"), quantize(col(embCol)).as("qq"))
-    // The query frame is request-sized BY CONTRACT (budgeted below, the
-    // cosinePairsTopK convention) and the model params are broadcast-
-    // class by the IVF provisioning invariant (k ∝ √n) — so compute the
-    // probe lists and per-query ADC distance tables on the coordinator
-    // ([[localProbesAndTab]]): the former
-    // folded-row form ran each leg as its own broadcast-BUILD job (a
-    // full job launch + a scan of the query frame per leg — two scans
-    // of the query side per retrieval) for request×model-sized integer
-    // arithmetic. The distinct probed clusters become a literal IN so
-    // the cluster-partitioned codes scan is STATICALLY pruned to the
-    // probed partitions (`PartitionFilters`; PlanSpec pins it) — search
-    // I/O stays ∝ probed clusters, not corpus size.
     val qCap = math.min(maxProbeRows.toLong / math.max(1, nprobe),
       Int.MaxValue.toLong - 1).toInt
     val qRows = q.limit(qCap + 1).collect()
@@ -565,71 +614,24 @@ object Similarity {
       s"ivfPqStoredTopK: > $maxProbeRows probe rows (nprobe=$nprobe × " +
         "|queries|) — the query side must be a bounded request frame; " +
         "split the queries into batches or raise maxProbeRows")
-    val (probeRows, tabRows) = localProbesAndTab(
-      qRows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray)),
-      coarse.rows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray)),
-      csub.rows.toSeq.map(r => (r.get(0), asLong(r.get(1)), r.getSeq[Long](2).toArray)),
-      nprobe, dsub, withRank = false)
-    val probedClusters = probeRows.map(_.get(1)).distinct
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val probesLocal = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*),
-      StructType(Seq(
-        StructField("q_id", q.schema("q_id").dataType),
-        StructField("cluster", coarse.schema("g_id").dataType))))
-    val tab = spark.createDataFrame(
-      java.util.Arrays.asList(tabRows: _*),
-      StructType(Seq(
-        StructField("tq_id", q.schema("q_id").dataType),
-        StructField("s", csub.schema("s").dataType),
-        StructField("c_id", csub.schema("c_id").dataType),
-        StructField("tdist", LongType))))
-    // FILTERED search (the FAISS IDSelector / vector-DB metadata-filter
-    // shape): the allow-list is applied to the codes scan BEFORE any
-    // ADC work — pre-filtering, so top-k is computed among ELIGIBLE
-    // candidates only (post-filtering k results and discarding would
-    // under-fill). The allow-list here broadcasts (request-sized or
-    // dimension-table-sized filters); a corpus-scale predicate belongs
-    // in the store itself as a partition/stored column, and a large
-    // mid-size set degrades to x07's bloom semi-join.
-    val codesEligible = allowed match {
-      case Some(a) =>
-        // budget the broadcast the maxProbeRows way: the allow-list
-        // contract is request/dimension-sized — a corpus-proportional
-        // predicate belongs in the store (partition/stored column) or
-        // behind x07's bloom semi-join, and silently broadcasting it
-        // is a driver OOM at real scale, so fail with the remedy.
-        // limit+collect to a LOCAL frame (the probeRows pattern): the
-        // bound means the ids fit the driver — they broadcast below
-        // anyway — and the previous persist() leaked one cache entry
-        // per retrieval call for the session lifetime (ADVICE r12;
-        // this is the serving path, so the leak accumulated per query)
-        val distinctIds = a.select(col(a.columns.head).as("__allowed_id"))
-          .distinct()
-        val cap = math.min(maxAllowedIds + 1, Int.MaxValue.toLong).toInt
-        val idRows = distinctIds.limit(cap).collect()
-        require(idRows.length <= maxAllowedIds,
-          s"ivfPqStoredTopK: > $maxAllowedIds allowed ids exceed the " +
-            "broadcast budget — store the filter column " +
-            "in the index (partition/stored column) or use a bloom " +
-            "semi-join (x07) for corpus-proportional predicates")
-        val ids = spark.createDataFrame(
-          java.util.Arrays.asList(idRows: _*), distinctIds.schema)
-        codes.filter(col("cluster").isin(probedClusters: _*))
-          .join(broadcast(ids), col("vec_id") === col("__allowed_id"), "left_semi")
-      case None => codes.filter(col("cluster").isin(probedClusters: _*))
+    // budget the allow-list broadcast the maxProbeRows way — silently
+    // broadcasting a corpus-proportional list is a driver OOM at real
+    // scale, so fail with the remedy. limit+collect to a LOCAL frame: the
+    // bound means the ids fit the driver, and a persist() would leak one
+    // cache entry per retrieval call (ADVICE r12)
+    val ids = allowed.map { a =>
+      val distinctIds = a.select(col(a.columns.head).as("__allowed_id")).distinct()
+      val cap = math.min(maxAllowedIds + 1, Int.MaxValue.toLong).toInt
+      val idRows = distinctIds.limit(cap).collect()
+      require(idRows.length <= maxAllowedIds,
+        s"ivfPqStoredTopK: > $maxAllowedIds allowed ids exceed the " +
+          "broadcast budget — store the filter column " +
+          "in the index (partition/stored column) or use a bloom " +
+          "semi-join (x07) for corpus-proportional predicates")
+      StoreRead.Resident(distinctIds.schema, idRows).toDF(spark)
     }
-    val scored = codesEligible
-      .join(broadcast(probesLocal), Seq("cluster"))
-      .join(broadcast(tab),
-        col("tq_id") === col("q_id") && col("subspace") === tab("s") &&
-          col("code") === tab("c_id") && col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(sum(col("tdist")).as("adc_dist"))
-    val wTop = Window.partitionBy("q_id").orderBy(asc("adc_dist"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "adc_dist")
+    model.search(StoreRead.parquet(spark, s"$store/codes"),
+      StoreRead.Resident(q.schema, qRows), k, Seq(nprobe), ids).drop("nprobe")
   }
 
   /** Right-to-be-forgotten applied to a [[buildIvfPqStore]] store —
@@ -743,11 +745,9 @@ object Similarity {
     // admitted ([[compactAdmissionLedger]] folds them).
     val fs = AdmissionLedger.fsOf(spark, store)
     if (AdmissionLedger.isAdmitted(fs, store, batchId)) return
-    val coarse = StoreRead.resident(spark, s"$store/coarse", "g_id", "gq").toDF(spark)
-    val csub = StoreRead.resident(spark, s"$store/codebook", "c_id", "s", "cqs").toDF(spark)
     val v = batch.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assignAndEncode(v, coarse, csub, m, dsub)
+    storedModel(spark, store, m, dsub).encode(v)
       .repartition(col("cluster"))
       .write.mode("append").partitionBy("cluster")
       .parquet(s"$store/codes")
@@ -849,17 +849,15 @@ object Similarity {
         array_sort(collect_list(struct(col("subspace"), col("cqs")))),
         e => e.getField("cqs"))).as("r"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def sq(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
     val seedA = recon.orderBy("vec_id").limit(1)
       .select(col("r").as("ra")).collect()(0).getSeq[Long](0)
     val withDa = recon.select(col("vec_id"), col("r"),
-      sq(col("r"), lit(seedA.toArray)).as("d_a"))
+      sqDistL(col("r"), lit(seedA.toArray)).as("d_a"))
     val seedB = withDa.orderBy(desc("d_a"), asc("vec_id")).limit(1)
       .select(col("r").as("rb")).collect()(0).getSeq[Long](0)
     // side 0 = seed A (ties), side 1 = seed B; new ids mx+1 / mx+2
     val sided = withDa.select(col("vec_id"), col("r"),
-        when(sq(col("r"), lit(seedB.toArray)) < col("d_a"), 1L)
+        when(sqDistL(col("r"), lit(seedB.toArray)) < col("d_a"), 1L)
           .otherwise(0L).as("sd"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // per-dimension floor-mean per side: dims × sides rows (m·dsub × 2)
@@ -1060,37 +1058,21 @@ object Similarity {
     * with ties to the lower codeword id, deterministic across engines.
     *
     * Returns one row per (vec, subspace): (vec_id, subspace, code,
-    * dist_q) where dist_q is the subspace quantization distortion.
+    * dist_q) where dist_q is the subspace quantization distortion —
+    * the PQ half of the IVF-PQ encode ([[IvfPq.pq]]). Ids of any
+    * orderable type: nothing here routes.
     *
-    * Scale shape: the codebook broadcasts (m × k × dsub ints); each
-    * vector meets k codewords per subspace through the broadcast join
-    * and the argmin is a map-side-combinable min-struct aggregate —
-    * one narrow shuffle of (id, s) keys. Codebook TRAINING is k-means
-    * per subspace — [[kmeansRound]]/[[trainIvfCentroids]] over the
-    * subvector slices, the same driver-looped rounds.
+    * Scale shape: the codebook is collected once and broadcast as one
+    * folded row (m × k × dsub ints); the per-(vec, subspace) argmin is
+    * a per-row projection, no corpus shuffle. Codebook TRAINING is
+    * k-means per subspace — [[kmeansRound]]/[[trainIvfCentroids]] over
+    * the subvector slices, the same driver-looped rounds.
     */
   def pqAssign(vectors: DataFrame, idCol: String, embCol: String,
                codebookPred: Column, m: Int = 4, dsub: Int = 16): DataFrame = {
-    val v = vectors
-      .select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def subs(qc: Column, out: String) =
-      explode(transform(sequence(lit(0), lit(m - 1)),
-        s => struct(s.cast("long").as("s"),
-          slice(qc, s * dsub + 1, lit(dsub)).as(out)))).as("e")
-    val csub = v.filter(codebookPred)
-      .select(col("id").as("c_id"), subs(col("q"), "cqs"))
-      .select(col("c_id"), col("e.s").as("s"), col("e.cqs").as("cqs"))
-    // codebook folded to one broadcast row; the per-(vec, subspace)
-    // argmin is a per-row HOF projection — the former corpus explode ⋈
-    // codebook + keyed agg (one exchange on (id, s)) is gone, same
-    // integer arithmetic per candidate, bit-identical output
-    v.crossJoin(broadcast(cwordsRow(csub)))
-      .select(col("id"), explode(pqCodes(col("q"), col("cwords"), m, dsub)).as("e"))
-      // empty-codebook guard — see assignAndEncode (ADVICE r13)
-      .filter(col("e.best").isNotNull)
-      .select(col("id").as("vec_id"), col("e.s").as("subspace"),
-        col("e.best.c_id").as("code"), col("e.best.dist").as("dist_q"))
+    val (v, model, _) = inMemory(vectors, idCol, embCol, lit(false), codebookPred,
+      lit(false), m, dsub, "pqAssign")
+    model.pq(v)
   }
 
   /** PQ ASYMMETRIC-DISTANCE top-k retrieval — the search half of
@@ -1100,6 +1082,11 @@ object Similarity {
     * just the SUM of m table lookups on its codes — the corpus is
     * scanned as m small ints per row, never as floats. All math on the
     * int8-quantized grid (exact integers; no float-order hazard).
+    *
+    * This is the IVF-PQ search over a ONE-CELL index (every code in
+    * cluster 0, every query probing it), so it shares
+    * [[knnIvfPqAdc]]'s scorer and top-k; like [[pqAssign]] it routes
+    * nothing and takes ids of any orderable type.
     *
     * Scale shape: the distance tables are |queries|·m·|codes| rows —
     * broadcast; the only corpus-sized work is the code scan plus a
@@ -1111,32 +1098,13 @@ object Similarity {
   def pqAdcTopK(vectors: DataFrame, idCol: String, embCol: String,
                 codebookPred: Column, queryPred: Column, k: Int,
                 m: Int = 4, dsub: Int = 16): DataFrame = {
-    val codes = pqAssign(vectors, idCol, embCol, codebookPred, m, dsub)
-    val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    def subs(qc: Column, out: String) =
-      explode(transform(sequence(lit(0), lit(m - 1)),
-        s => struct(s.cast("long").as("s"),
-          slice(qc, s * dsub + 1, lit(dsub)).as(out)))).as("e")
-    val csub = v.filter(codebookPred)
-      .select(col("id").as("c_id"), subs(col("q"), "cqs"))
-      .select(col("c_id"), col("e.s").as("s"), col("e.cqs").as("cqs"))
-    val qsub = v.filter(queryPred)
-      .select(col("id").as("q_id"), subs(col("q"), "qs"))
-      .select(col("q_id"), col("e.s").as("s"), col("e.qs").as("qs"))
-    val tab = qsub.join(csub, "s")
-      .select(col("q_id"), col("s"), col("c_id"),
-        aggregate(zip_with(col("qs"), col("cqs"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _).as("tdist"))
-    val scored = codes
-      .join(broadcast(tab),
-        codes("subspace") === tab("s") && codes("code") === tab("c_id") &&
-          codes("vec_id") =!= tab("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(sum(col("tdist")).as("adc_dist"))
-    val w = Window.partitionBy("q_id").orderBy(asc("adc_dist"), asc("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "adc_dist")
+    val (v, model, queries) = inMemory(vectors, idCol, embCol, lit(false), codebookPred,
+      queryPred, m, dsub, "pqAdcTopK")
+    val oneCell = StoreRead.Resident(StructType(Seq(StructField("g_id", LongType),
+      StructField("gq", ArrayType(LongType)))), Array(Row(0L, Seq.empty[Long])))
+    model.copy(coarse = oneCell)
+      .search(model.pq(v).withColumn("cluster", lit(0L)), queries, k, Seq(1), None)
+      .drop("nprobe")
   }
 
   /** IVF-PQ top-k — the composed billion-scale ANN index (FAISS
@@ -1150,17 +1118,16 @@ object Similarity {
     *
     * Routing metric is full-vector integer squared-L2 on the quantized
     * grid (the same metric family PQ scores in — cosine routing with L2
-    * scoring would rank differently at cluster borders), assignment and
-    * probes from one shared affinity frame.
+    * scoring would rank differently at cluster borders).
     *
-    * Scale shape: the coarse centroid table broadcasts (both for
-    * assignment and probes); codes ⋈ cluster is the index-build
-    * co-location join (in a stored index the code row CARRIES its
-    * cluster — here it is materialized once); search-time work is
-    * |probed clusters| worth of code rows through a broadcast of the
-    * per-query distance tables, then a (q, vec)-keyed partial agg —
-    * the corpus is scanned as m ints/row and only inside probed
-    * clusters, the IVF and PQ savings multiplying.
+    * Scale shape: the coarse centroid table broadcasts for assignment;
+    * codes ⋈ cluster is the index-build co-location join (in a stored
+    * index the code row CARRIES its cluster — here it is materialized
+    * once); search-time work is |probed clusters| worth of code rows
+    * through a broadcast of the per-query distance tables, then a
+    * (q, vec)-keyed partial agg — the corpus is scanned as m ints/row
+    * and only inside probed clusters, the IVF and PQ savings
+    * multiplying.
     */
   def knnIvfPqAdc(vectors: DataFrame, idCol: String, embCol: String,
                   coarsePred: Column, codebookPred: Column, queryPred: Column,
@@ -1170,147 +1137,21 @@ object Similarity {
       .drop("nprobe")
 
   /** [[knnIvfPqAdc]] evaluated at SEVERAL probe widths in one pass —
-    * the e21 tuning-curve shape. Assignment, encoding, and the ADC
-    * join are probe-width-INDEPENDENT (a neighbor's cluster and codes
-    * do not change with nprobe; only which clusters score does), so
-    * the curve scores candidates ONCE at max(nprobes) keeping each
-    * candidate cluster's probe rank, then each sweep point is a rank
-    * filter + top-k — the former per-width re-computation (full
-    * re-quantize + re-assign + re-encode + re-join per point) is gone.
+    * the e21 tuning-curve shape: a parameter sweep over one in-memory
+    * index. Assignment, encoding, and the ADC join are
+    * probe-width-INDEPENDENT (a neighbor's cluster and codes do not
+    * change with nprobe; only which clusters score does), so the index
+    * is encoded once and [[IvfPq.search]] scores once at max(nprobes).
     * Output: (nprobe, q_id, rank, n_id, adc_dist), identical per width
     * to an independent [[knnIvfPqAdc]] run at that width.
-    *
-    * Scale shape: model params fold to one broadcast row each
-    * ([[centsRow]]/[[cwordsRow]]); routing + encoding are per-row
-    * projections (zero corpus shuffles); scoring is the one
-    * (q, vec)-keyed partial agg the ADC search fundamentally needs,
-    * paid once for the whole curve.
     */
   def knnIvfPqAdcCurve(vectors: DataFrame, idCol: String, embCol: String,
                        coarsePred: Column, codebookPred: Column, queryPred: Column,
-                       k: Int, nprobes: Seq[Int], m: Int = 4, dsub: Int = 16,
-                       maxQueryRows: Int = 1000000): DataFrame = {
+                       k: Int, nprobes: Seq[Int], m: Int = 4, dsub: Int = 16): DataFrame = {
     require(nprobes.nonEmpty, "knnIvfPqAdcCurve: empty nprobes")
-    val spark = vectors.sparkSession
-    val maxNp = nprobes.max
-    val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Collect the model params and the request-sized query set in ONE
-    // predicate-tagged pass over the persisted quantized frame (which
-    // the collect also materializes — the former folded-row form ran
-    // FOUR broadcast-BUILD jobs, coarse / cents fold / cwords fold ×2
-    // legs, each re-scanning it), then compute probes and ADC tables
-    // coordinator-side ([[localProbesAndTab]]) and broadcast plain
-    // local frames: local relations broadcast without launching a job,
-    // so the query plans from here on are the same joins over the same
-    // rows with the model-param subplans gone. Budgeted like
-    // ivfPqStoredTopK: queries are a bounded sample by contract, model
-    // params broadcast-class by the provisioning invariant.
-    val tagRows = v.select(col("id"), col("q"), coarsePred.as("__c"),
-        codebookPred.as("__cb"), queryPred.as("__q"))
-      .filter(col("__c") || col("__cb") || col("__q"))
-      .limit(maxQueryRows + 1).collect()
-    require(tagRows.length <= maxQueryRows,
-      s"knnIvfPqAdcCurve: > $maxQueryRows query+model rows — the query " +
-        "side must be a bounded sample/request frame; raise maxQueryRows " +
-        "if the driver heap allows")
-    def tag(r: org.apache.spark.sql.Row, i: Int): Boolean =
-      !r.isNullAt(i) && r.getBoolean(i)
-    val centsT = tagRows.toSeq.filter(tag(_, 2))
-      .map(r => (r.get(0), r.getSeq[Long](1)))
-    val qT = tagRows.toSeq.filter(tag(_, 4))
-      .map(r => (r.get(0), r.getSeq[Long](1)))
-    // the per-subspace codebook slices, cut driver-side — the same
-    // slice(q, s·dsub+1, dsub) the former subs() explode produced
-    val cwT = tagRows.toSeq.filter(tag(_, 3)).flatMap { r =>
-      val cid = r.get(0); val qq = r.getSeq[Long](1)
-      (0 until m).map(s => (cid, s.toLong, qq.slice(s * dsub, (s + 1) * dsub)))
-    }
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
-    val idType = v.schema("id").dataType
-    val qType = v.schema("q").dataType
-    val coarseLocal = spark.createDataFrame(
-      java.util.Arrays.asList(centsT.map { case (g, gq) => Row(g, gq) }: _*),
-      StructType(Seq(StructField("g_id", idType), StructField("gq", qType))))
-    // the folded single-row codebook ([[cwordsRow]]'s shape), assembled
-    // locally: sort_array orders structs by (s, c_id, cqs) and (s, c_id)
-    // is unique, so the local sort is the same order
-    val cwStruct = StructType(Seq(
-      StructField("s", LongType),
-      StructField("c_id", idType),
-      StructField("cqs", qType)))
-    val cwordsLocal = spark.createDataFrame(
-      java.util.Arrays.asList(Row(
-        cwT.map { case (cid, sL, cqs) => (sL, asLong(cid), cid, cqs) }
-          .sortBy { case (sL, cL, _, _) => (sL, cL) }
-          .map { case (sL, _, cid, cqs) => Row(java.lang.Long.valueOf(sL), cid, cqs) })),
-      StructType(Seq(StructField("cwords", ArrayType(cwStruct)))))
-    // corpus-side cluster assignment: broadcast-join + min-struct agg
-    // (codegen-friendly; the per-row folded-cents argmin measured 2.8×
-    // slower at the 100× tier — see assignAndEncode); PQ codes keep the
-    // folded-codebook per-row form (bounded codebook, measured faster)
-    val assigned = v.crossJoin(broadcast(coarseLocal))
-      .select(col("id"), col("g_id"),
-        aggregate(zip_with(col("q"), col("gq"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _).as("gdist"))
-      .groupBy("id")
-      .agg(min(struct(col("gdist"), col("g_id"))).as("b"))
-      .select(col("id").as("a_id"), col("b.g_id").as("cluster"))
-    val clustered = v.crossJoin(broadcast(cwordsLocal))
-      .select(col("id"), explode(pqCodes(col("q"), col("cwords"), m, dsub)).as("e"))
-      // degenerate (empty) codebook: pqCodes' array_min over no
-      // codewords is null — drop such rows to keep the former keyed-agg
-      // "no codebook → no codes" semantics (ADVICE r13)
-      .filter(col("e.best").isNotNull)
-      .select(col("id").as("vec_id"), col("e.s").as("subspace"),
-        col("e.best.c_id").as("code"))
-      .join(assigned, col("vec_id") === col("a_id")).drop("a_id")
-    // per-query probe list, rank-indexed: sorted (gdist, g_id) prefix —
-    // identical ordering to the former per-query rank window
-    val (probeRows, tabRows) = localProbesAndTab(
-      qT.map { case (i, qq) => (i, qq.toArray) },
-      centsT.map { case (g, gq) => (g, gq.toArray) },
-      cwT.map { case (cid, sL, cqs) => (cid, sL, cqs.toArray) },
-      maxNp, dsub, withRank = true)
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*),
-      StructType(Seq(
-        StructField("q_id", idType),
-        StructField("p_rank", IntegerType),
-        StructField("cluster", idType))))
-    val tab = spark.createDataFrame(
-      java.util.Arrays.asList(tabRows: _*),
-      StructType(Seq(
-        StructField("tq_id", idType),
-        StructField("s", LongType),
-        StructField("c_id", idType),
-        StructField("tdist", LongType))))
-    // score once at maxNp; every (q, vec) pair lives in exactly ONE
-    // cluster, so its probe rank is constant across its m code rows and
-    // `min(p_rank)` is that rank — filtering scored pairs by rank ≤ np
-    // is exactly "score only clusters probed at width np"
-    val scoredBase = clustered.join(broadcast(probes), Seq("cluster"))
-      .join(broadcast(tab),
-        col("tq_id") === col("q_id") && col("subspace") === col("s") &&
-          col("code") === col("c_id") && col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(sum(col("tdist")).as("adc_dist"), min(col("p_rank")).as("p_rank"))
-    // persist pays only when several sweep points re-read the scores —
-    // a single-width call (the knnIvfPqAdc path) must not buy a cache
-    // write it never reads back
-    val scored =
-      if (nprobes.size > 1)
-        scoredBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else scoredBase
-    val wTop = Window.partitionBy("q_id").orderBy(asc("adc_dist"), asc("n_id"))
-    nprobes.map { np =>
-      (if (np >= maxNp) scored else scored.filter(col("p_rank") <= np))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= k)
-        .select(lit(np.toLong).as("nprobe"),
-          col("q_id"), col("rank"), col("n_id"), col("adc_dist"))
-    }.reduce(_ unionByName _)
+    val (v, model, queries) = inMemory(vectors, idCol, embCol, coarsePred, codebookPred,
+      queryPred, m, dsub, "knnIvfPqAdcCurve")
+    model.search(model.encode(v), queries, k, nprobes, None)
   }
 
   /** [[knnIvf]] against an externally-trained centroid table (c_id, c_emb)
@@ -1514,6 +1355,89 @@ object Similarity {
     pruneWithinClusters(assigned, threshold, dims)
   }
 
+  /** E22 — relational MaxSim (ColBERT late interaction, Khattab &
+    * Zaharia 2020): multi-vector docs derive by `id mod docMod`, query
+    * docs are `d < numQueryDocs`, and score(q, d) = Σ_{qv∈q}
+    * max_{dv∈d} dotFixed(qv, dv) — exact fixed-point BIGINT end to end.
+    *
+    * Scale shape: the bounded query token-vectors BROADCAST into one
+    * scan of corpus token rows (never a corpus self-join); the
+    * per-(q-token, doc) max and per-(q, doc) sum are both
+    * map-side-combinable keyed aggs; the top-k window runs on
+    * |queries|×|docs| score rows. `docMod` is the deployment knob: docs
+    * per corpus grow with the corpus (constant tokens/doc), so a scale
+    * sweep raises docMod ∝ n — running the gate's fixed modulus at
+    * 100× would grow VECTORS PER DOC 100×, a mis-shaped corpus, not
+    * the operator (the e05/e06 knob rationale).
+    */
+  def maxSimTopK(vectors: DataFrame, idCol: String, embCol: String,
+                 docMod: Long, numQueryDocs: Long, k: Int): DataFrame =
+    maxSimTopFromMax(maxSimMaxFrame(vectors, idCol, embCol, docMod, numQueryDocs), k)
+
+  /** [[maxSimTopK]] gated by a CANDIDATE SHORTLIST — the production
+    * late-interaction split (the ColBERT serving shape): stage 1 (an ANN
+    * index, e.g. [[ivfPqStoredTopK]] over the store) proposes (query-doc,
+    * candidate-doc) pairs; stage 2 re-ranks ONLY those pairs with the
+    * exact MaxSim sum. A document none of whose token vectors fell in a
+    * probed cluster NEVER scores — that gating is the point (and what
+    * the e24 gate + PropertySpec pin): corpus-wide MaxSim is a full
+    * scan per query batch, the composed form touches candidate docs
+    * only.
+    *
+    * Scale shape: `candidates` is |queries|×shortlist-sized — broadcast
+    * twice into ONE scan of corpus token rows (semi-join on the doc key,
+    * then the query tokens); both aggs stay map-side-combinable;
+    * fixed-point BIGINT scores end to end (no float-order leak).
+    */
+  def maxSimTopKShortlist(vectors: DataFrame, idCol: String, embCol: String,
+                          docMod: Long, numQueryDocs: Long,
+                          candidates: DataFrame, k: Int): DataFrame = {
+    val v = vectors.select(col(idCol).as("vid"),
+      pmod(col(idCol), lit(docMod)).as("d"), col(embCol).as("emb"))
+    val q = v.filter(col("d") < numQueryDocs)
+      .select(col("vid").as("qv"), col("d").as("qd"), col("emb").as("q_emb"))
+    val cand = candidates.select(col("qd").as("c_qd"), col("cd"))
+    val maxes = v.join(broadcast(cand), col("d") === col("cd"))
+      .join(broadcast(q), col("c_qd") === col("qd"))
+      .select(col("qd"), col("qv"), col("cd"),
+        dotFixed(col("q_emb"), col("emb")).as("dp"))
+      .groupBy("qd", "qv", "cd").agg(max("dp").as("m"))
+    maxSimTopFromMax(maxes, k)
+  }
+
+  /** The per-(query-token, doc) max frame (qd, qv, cd, m) every MaxSim
+    * ranking derives from — exposed so e26 can persist one frame for
+    * both its corpus-wide truth and candidate-restricted rankings, and
+    * MATERIALIZE it concurrently with independent eager work (the store
+    * build of the shortlist leg, guide §2.6): the frame reads only the
+    * corpus, never the store.
+    */
+  def maxSimMaxFrame(vectors: DataFrame, idCol: String, embCol: String,
+                     docMod: Long, numQueryDocs: Long): DataFrame = {
+    val v = vectors.select(col(idCol).as("vid"),
+      pmod(col(idCol), lit(docMod)).as("d"), col(embCol).as("emb"))
+    val q = v.filter(col("d") < numQueryDocs)
+      .select(col("vid").as("qv"), col("d").as("qd"), col("emb").as("q_emb"))
+    v.crossJoin(broadcast(q))
+      .filter(col("d") =!= col("qd"))
+      .select(col("qd"), col("qv"), col("d").as("cd"),
+        dotFixed(col("q_emb"), col("emb")).as("dp"))
+      .groupBy("qd", "qv", "cd").agg(max("dp").as("m"))
+  }
+
+  /** Per-query top-k ranking over a [[maxSimMaxFrame]] (or a
+    * candidate-restricted subset of one): the MaxSim sum per (query
+    * doc, candidate doc), ranked by (score desc, cd).
+    */
+  def maxSimTopFromMax(frame: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qd").orderBy(desc("score"), asc("cd"))
+    frame
+      .groupBy("qd", "cd").agg(sum("m").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("qd", "rank", "cd", "score")
+  }
+
   /** Brute-force top-k cosine pairs as a hand-written kernel: vectors
     * broadcast once, each task loops its slice of i against all j>i with
     * primitive arrays, keeping a k-bounded local top plus the pair count
@@ -1538,130 +1462,6 @@ object Similarity {
     * is a limit(cap+1).count() — it stops scanning after cap+1 rows,
     * never a full count.
     */
-  /** E22 — relational MaxSim (ColBERT late interaction, Khattab &
-    * Zaharia 2020): multi-vector docs derive by `id mod docMod`, query
-    * docs are `d < numQueryDocs`, and score(q, d) = Σ_{qv∈q}
-    * max_{dv∈d} dotFixed(qv, dv) — exact fixed-point BIGINT end to end.
-    *
-    * Scale shape: the bounded query token-vectors BROADCAST into one
-    * scan of corpus token rows (never a corpus self-join); the
-    * per-(q-token, doc) max and per-(q, doc) sum are both
-    * map-side-combinable keyed aggs; the top-k window runs on
-    * |queries|×|docs| score rows. `docMod` is the deployment knob: docs
-    * per corpus grow with the corpus (constant tokens/doc), so a scale
-    * sweep raises docMod ∝ n — running the gate's fixed modulus at
-    * 100× would grow VECTORS PER DOC 100×, a mis-shaped corpus, not
-    * the operator (the e05/e06 knob rationale).
-    */
-  def maxSimTopK(vectors: DataFrame, idCol: String, embCol: String,
-                 docMod: Long, numQueryDocs: Long, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = vectors.select(col(idCol).as("vid"),
-      pmod(col(idCol), lit(docMod)).as("d"), col(embCol).as("emb"))
-    val q = v.filter(col("d") < numQueryDocs)
-      .select(col("vid").as("qv"), col("d").as("qd"), col("emb").as("q_emb"))
-    val w = Window.partitionBy("qd").orderBy(desc("score"), asc("cd"))
-    v.crossJoin(broadcast(q))
-      .filter(col("d") =!= col("qd"))
-      .select(col("qd"), col("qv"), col("d").as("cd"),
-        dotFixed(col("q_emb"), col("emb")).as("dp"))
-      .groupBy("qd", "qv", "cd").agg(max("dp").as("m"))
-      .groupBy("qd", "cd").agg(sum("m").as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qd", "rank", "cd", "score")
-  }
-
-  /** [[maxSimTopK]] gated by a CANDIDATE SHORTLIST — the production
-    * late-interaction split (the ColBERT serving shape): stage 1 (an ANN
-    * index, e.g. [[ivfPqStoredTopK]] over the store) proposes (query-doc,
-    * candidate-doc) pairs; stage 2 re-ranks ONLY those pairs with the
-    * exact MaxSim sum. A document none of whose token vectors fell in a
-    * probed cluster NEVER scores — that gating is the point (and what
-    * the e24 gate + PropertySpec pin): corpus-wide MaxSim is a full
-    * scan per query batch, the composed form touches candidate docs
-    * only.
-    *
-    * Scale shape: `candidates` is |queries|×shortlist-sized — broadcast
-    * twice into ONE scan of corpus token rows (semi-join on the doc key,
-    * then the query tokens); both aggs stay map-side-combinable;
-    * fixed-point BIGINT scores end to end (no float-order leak).
-    */
-  def maxSimTopKShortlist(vectors: DataFrame, idCol: String, embCol: String,
-                          docMod: Long, numQueryDocs: Long,
-                          candidates: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = vectors.select(col(idCol).as("vid"),
-      pmod(col(idCol), lit(docMod)).as("d"), col(embCol).as("emb"))
-    val q = v.filter(col("d") < numQueryDocs)
-      .select(col("vid").as("qv"), col("d").as("qd"), col("emb").as("q_emb"))
-    val cand = candidates.select(col("qd").as("c_qd"), col("cd"))
-    val w = Window.partitionBy("qd").orderBy(desc("score"), asc("cd"))
-    v.join(broadcast(cand), col("d") === col("cd"))
-      .join(broadcast(q), col("c_qd") === col("qd"))
-      .select(col("qd"), col("qv"), col("cd"),
-        dotFixed(col("q_emb"), col("emb")).as("dp"))
-      .groupBy("qd", "qv", "cd").agg(max("dp").as("m"))
-      .groupBy("qd", "cd").agg(sum("m").as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qd", "rank", "cd", "score")
-  }
-
-  /** The e26 recall-evaluation shape: corpus-wide MaxSim truth AND the
-    * candidate-restricted ranking, derived from ONE shared
-    * per-(query-token, doc) max frame — the candidate scores are a
-    * strict subset of the truth leg's maxima, so re-scanning the corpus
-    * for the shortlist (a second [[maxSimTopKShortlist]] pass) computes
-    * nothing the truth pass didn't already hold. Returns
-    * (truth, shortlisted), each bit-identical to [[maxSimTopK]] /
-    * [[maxSimTopKShortlist]] run independently. Production serving runs
-    * [[maxSimTopKShortlist]] alone (e24); this shape exists only where
-    * BOTH rankings are wanted (recall evaluation).
-    */
-  def maxSimTopKWithShortlist(vectors: DataFrame, idCol: String, embCol: String,
-                              docMod: Long, numQueryDocs: Long,
-                              candidates: DataFrame, k: Int): (DataFrame, DataFrame) = {
-    val p = maxSimMaxFrame(vectors, idCol, embCol, docMod, numQueryDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (maxSimTopFromMax(p, k),
-      maxSimTopFromMax(
-        p.join(broadcast(candidates.select(col("qd"), col("cd"))), Seq("qd", "cd")), k))
-  }
-
-  /** The per-(query-token, doc) max frame (qd, qv, cd, m) both e26
-    * rankings derive from — exposed so the caller can persist and
-    * MATERIALIZE it concurrently with independent eager work (the store
-    * build of the shortlist leg, guide §2.6): the frame reads only the
-    * corpus, never the store.
-    */
-  def maxSimMaxFrame(vectors: DataFrame, idCol: String, embCol: String,
-                     docMod: Long, numQueryDocs: Long): DataFrame = {
-    val v = vectors.select(col(idCol).as("vid"),
-      pmod(col(idCol), lit(docMod)).as("d"), col(embCol).as("emb"))
-    val q = v.filter(col("d") < numQueryDocs)
-      .select(col("vid").as("qv"), col("d").as("qd"), col("emb").as("q_emb"))
-    v.crossJoin(broadcast(q))
-      .filter(col("d") =!= col("qd"))
-      .select(col("qd"), col("qv"), col("d").as("cd"),
-        dotFixed(col("q_emb"), col("emb")).as("dp"))
-      .groupBy("qd", "qv", "cd").agg(max("dp").as("m"))
-  }
-
-  /** Per-query top-k ranking over a [[maxSimMaxFrame]] (or a
-    * candidate-restricted subset of one) — [[maxSimTopK]]'s scoring and
-    * tie-break, bit for bit.
-    */
-  def maxSimTopFromMax(frame: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qd").orderBy(desc("score"), asc("cd"))
-    frame
-      .groupBy("qd", "cd").agg(sum("m").as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("qd", "rank", "cd", "score")
-  }
-
   def cosinePairsTopK(vectors: DataFrame, idCol: String, embCol: String, k: Int,
                       maxVectors: Int = 1000000,
                       maxBroadcastBytes: Long = 128L << 20): DataFrame = {

@@ -227,6 +227,29 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("needs numeric g_id/c_id"), e.getMessage)
   }
 
+  test("pqAssign and pqAdcTopK take non-numeric ids: neither routes") {
+    val vecs = (0L until 32L)
+      .map(i => (f"v$i%02d", Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vid", "emb")
+    // the same vectors under numeric ids: zero-padded names sort like
+    // their numbers, so every tie-break picks the same id
+    val numeric = vecs.select(substring(col("vid"), 2, 2).cast("long").as("vid"), col("emb"))
+    def num(id: String) = id.drop(1).toLong
+    val codes = Similarity.pqAssign(vecs, "vid", "emb", col("id") < "v08")
+      .as[(String, Long, String, Long)].collect()
+      .map { case (v, s, c, d) => (num(v), s, num(c), d) }
+    assert(codes.length == 32 * 4)
+    assert(codes.toSet == Similarity.pqAssign(numeric, "vid", "emb", col("id") < 8)
+      .as[(Long, Long, Long, Long)].collect().toSet)
+    val top = Similarity.pqAdcTopK(vecs, "vid", "emb", col("id") < "v08", col("id") < "v02", k = 3)
+      .as[(String, Int, String, Long)].collect()
+      .map { case (q, r, n, d) => (num(q), r, num(n), d) }
+    assert(top.length == 2 * 3)
+    assert(top.toSet == Similarity.pqAdcTopK(numeric, "vid", "emb",
+        col("id") < 8, col("id") < 2, k = 3)
+      .as[(Long, Int, Long, Long)].collect().toSet)
+  }
+
   test("rebalance of an empty or unsplittable store returns -1; a warm empty one launches no job") {
     val vecs = (0L until 32L)
       .map(i => (i, Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))

@@ -898,8 +898,9 @@ class PropertySpec extends SparkSpec {
   }
 
   /** e19's store fidelity: retrieval off the persisted index must
-    * return exactly the in-query e16 answer, row for row — any loss in
-    * the written codes, clusters, or centroids shows here.
+    * return exactly the in-query e16 answer, row for row, at every probe
+    * width — any loss in the written codes, clusters, or centroids shows
+    * here. The e21 sweep must equal independent single-width runs.
     */
   test("e19 stored-index retrieval equals the in-query IVF-PQ answer") {
     import graft.operators.Similarity
@@ -908,13 +909,21 @@ class PropertySpec extends SparkSpec {
     val store = java.nio.file.Files.createTempDirectory("e19_spec").toString + "/index"
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
-    val stored = Similarity.ivfPqStoredTopK(spark, store,
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10, 2)
-      .collect().map(_.toString).toSet
-    val inQuery = Similarity.knnIvfPqAdc(emb, "vec_id", "embedding",
-        col("id") >= 8 && col("id") < 12, col("id") < 8, col("id") < 5, 10, 2)
-      .collect().map(_.toString).toSet
-    assert(stored == inQuery)
+    val curve = Similarity.knnIvfPqAdcCurve(emb, "vec_id", "embedding",
+        col("id") >= 8 && col("id") < 12, col("id") < 8, col("id") < 5, 10, Seq(1, 2, 4))
+      .collect().groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => org.apache.spark.sql.Row(r.toSeq.tail: _*).toString).toSet)
+    for (nprobe <- Seq(1, 2, 4)) {
+      val stored = Similarity.ivfPqStoredTopK(spark, store,
+          emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10, nprobe)
+        .collect().map(_.toString).toSet
+      val inQuery = Similarity.knnIvfPqAdc(emb, "vec_id", "embedding",
+          col("id") >= 8 && col("id") < 12, col("id") < 8, col("id") < 5, 10, nprobe)
+        .collect().map(_.toString).toSet
+      assert(inQuery.nonEmpty, s"nprobe=$nprobe")
+      assert(stored == inQuery, s"nprobe=$nprobe")
+      assert(curve(nprobe.toLong) == inQuery, s"nprobe=$nprobe")
+    }
   }
 
   /** w09 with a 0-day trailing window degenerates to plain daily
