@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: the formatted physical plans of representative
@@ -77,22 +76,10 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table queries (b01) write managed tables here; keep them
-      // out of the repo (same as Bench/Verify)
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      // full PushedFilters/PartitionFilters in the dump — the default
-      // 100-char metadata truncation would hide pushed predicates from
-      // PLANS.md (and from plan_diff's regression lint)
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // full PushedFilters/PartitionFilters in the dump — the default
+    // 100-char metadata truncation would hide pushed predicates from
+    // PLANS.md (and from plan_diff's regression lint)
+    val spark = GraftSession.local(8, "spark.sql.maxMetadataStringLength" -> "2000")
     val names = AuditQueries
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")

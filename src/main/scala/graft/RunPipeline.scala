@@ -55,24 +55,9 @@ object RunPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    // same session shape as Verify/Bench: local master sized by env when
-    // not spark-submitted, graft extensions registered, UTC, out-of-repo
-    // warehouse. A cluster deployment overrides master via spark-submit
-    // (builder settings yield to an existing/submitted master).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    val spark = (if (sys.props.contains("spark.master") ||
-        sys.env.contains("SPARK_MASTER")) builder
-      else builder.master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a cluster deployment submits its own master (GraftSession yields)
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors(),
+      "spark.app.name" -> "graft-pipeline")
     // compute the exit code INSIDE the try and exit AFTER the finally:
     // sys.exit does not unwind the stack, so calling it inside the try
     // would skip spark.stop() on the failure path

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Asymptotic scale bench: runs the operators whose VALUE is their scale
@@ -180,7 +180,6 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val Array(scaleRoot, outJson) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // targeted-session knobs (mirror Bench's SPARK_GRAFT_BENCH_ONLY):
     // comma-separated query-name prefixes / tier names; ONLY also skips
     // the incremental experiment (it is not a named query)
@@ -189,20 +188,11 @@ object ScaleBench {
     def keep(q: String): Boolean = only.forall(_.exists(q.startsWith))
     val tierFilter = sys.env.get("SPARK_GRAFT_SCALE_TIERS")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // this sweep DELIBERATELY measures the unguarded pair forms'
-      // growth curves past the production budget (m01/s01 at 500k docs
-      // are the superlinearity evidence the guard's doc cites)
-      .config(graft.operators.Dedup.PairsMaxDocsKey, "-1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // this sweep DELIBERATELY measures the unguarded pair forms'
+    // growth curves past the production budget (m01/s01 at 500k docs
+    // are the superlinearity evidence the guard's doc cites)
+    val spark = GraftSession.local(32, graft.operators.Dedup.PairsMaxDocsKey -> "-1")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val tiers = Seq("1x", "10x", "100x")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-tier data generator for the asymptotic bench (BENCH_SCALE.json):
@@ -44,14 +44,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, copiesStr, mode) = args
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     new java.io.File(outDir).mkdirs()
 
     // one row per copy index, cross-joined in (tiny broadcast side): the

@@ -30,6 +30,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** The query names in registry order. */
+  def names: Seq[String] = registry.map(_.name)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap

@@ -1,15 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import java.util.concurrent.ConcurrentHashMap
-import scala.jdk.CollectionConverters._
 
 /** Filter-with-audit (ref: Preprocessor.py:13-21 apply_filter's
   * before/after row logging) the Spark-idiomatic way: `df.observe`
-  * metrics collected by a QueryExecutionListener — counts ride along the
+  * metrics, read back by [[graft.obs.Capture]] — counts ride along the
   * single lazy plan instead of forcing extra `count()` jobs per stage
   * (each of which would rescan the input).
   */
@@ -18,23 +14,4 @@ object Audit {
   /** Tag the current row count of the plan under `name`; zero extra jobs. */
   def observed(df: DataFrame, name: String): DataFrame =
     df.observe(name, count(lit(1)).as("rows"))
-
-  /** Collects observation results per query execution. Register once per
-    * session; read counts after any action on the audited frame.
-    */
-  final class Collector extends QueryExecutionListener {
-    private val metrics = new ConcurrentHashMap[String, Long]()
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      qe.observedMetrics.foreach { case (name, row) =>
-        metrics.put(name, row.getAs[Long]("rows"))
-      }
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    def counts: Map[String, Long] = metrics.asScala.toMap
-  }
-
-  def install(spark: SparkSession): Collector = {
-    val c = new Collector
-    spark.listenerManager.register(c)
-    c
-  }
 }

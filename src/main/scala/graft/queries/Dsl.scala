@@ -48,20 +48,25 @@ object Dsl {
 
   /** Per-run throwaway state dir for gate queries that exercise
     * persistent-store operators (x04's key store, x08's signature
-    * index): a fresh temp dir per invocation — re-runs must not see a
-    * previous run's state — swept by one JVM shutdown hook so repeated
-    * bench/verify runs in one process don't accumulate store copies.
+    * index): a fresh [[tempDir]] per invocation — re-runs must not see a
+    * previous run's state.
     */
-  def tempStore(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    tempStores.add(dir.toString)
+  def tempStore(prefix: String): String = s"${tempDir(prefix)}/store"
+
+  /** A fresh temp dir (a store's, a session's warehouse), swept by one
+    * JVM shutdown hook so repeated bench/verify/test runs don't
+    * accumulate copies.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(dir)
     hookOnce
-    dir.resolve("store").toString
+    dir
   }
-  private val tempStores = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val tempDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val hookOnce: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempStores.forEach { d =>
+      tempDirs.forEach { d =>
         try {
           import scala.jdk.CollectionConverters._
           val root = java.nio.file.Paths.get(d)

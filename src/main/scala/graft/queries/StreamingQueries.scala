@@ -578,8 +578,7 @@ object StreamingQueries {
       |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.streaming.Trigger
     withStagedEventsStream(spark, dir, "sm07_src") { events =>
-      val store = java.nio.file.Files
-        .createTempDirectory("sm07_store").toString + "/snap"
+      val store = Dsl.tempStore("sm07_store")
       events
         .select("user_id", "ts", "event_id", "event_type", "value")
         .writeStream

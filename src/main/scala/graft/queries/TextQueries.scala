@@ -913,7 +913,7 @@ object TextQueries {
     // the three store dirs are independent outputs of the one persisted
     // frame — submit them concurrently (guide §2.6, the buildIvfPqStore
     // discipline) instead of paying three serial job latencies
-    locally {
+    val done = try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
@@ -934,9 +934,11 @@ object TextQueries {
           .withColumn("buckets", lit(buckets))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$store/stats")))
-      Await.result(Future.sequence(writes), Duration.Inf)
-    }
-    tfc.unpersist()
+      // await EVERY write before failing: a sibling still running would
+      // keep writing into the store after the caller saw the failure
+      writes.map(f => Await.ready(f, Duration.Inf).value.get)
+    } finally tfc.unpersist()
+    done.foreach(_.get)
   }
 
   /** The online half of t21b: reads ONLY the store — one broadcast of

@@ -1,23 +1,19 @@
 package graft
 
+import graft.obs.Capture
 import graft.operators.Audit
-import org.apache.spark.sql.functions._
 
 /** observe-based before/after filter audits (P16) ride the lazy plan. */
 class AuditSpec extends SparkSpec {
   import spark.implicits._
 
   test("observed counts report before/after rows without extra jobs") {
-    val collector = Audit.install(spark)
     val df = (1 to 100).map(i => (i.toLong, i % 4 == 0)).toDF("id", "keep")
-    val audited = Audit.observed(
-      Audit.observed(df, "before_filter").filter($"keep"), "after_filter")
-    audited.collect()
-    // listener callbacks are async; poll briefly
-    val deadline = System.currentTimeMillis() + 10000
-    while (collector.counts.size < 2 && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    assert(collector.counts.get("before_filter").contains(100L))
-    assert(collector.counts.get("after_filter").contains(25L))
+    val audited = Capture.during(spark)(Audit.observed(
+      Audit.observed(df, "before_filter").filter($"keep"), "after_filter").collect())._2
+    assert(audited.observed.get("before_filter").map(_.getAs[Long]("rows")).contains(100L))
+    assert(audited.observed.get("after_filter").map(_.getAs[Long]("rows")).contains(25L))
+    // the collect is the one job; a count() per audit point would add two
+    assert(audited.jobs == 1, s"the audited collect ran ${audited.jobs} jobs")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions
+import graft.obs.Capture
 import graft.operators.{Dedup, Similarity}
 import graft.schema.Schemas
 import org.apache.spark.sql.functions._
@@ -259,8 +260,8 @@ class OpsSpec extends SparkSpec {
     Similarity.buildIvfPqStore(vecs, "vid", "emb",
       col("id") < 0, col("id") < 8, empty)
     assert(Similarity.rebalanceIvfPqStore(spark, empty) == -1L)
-    val (again, jobs) = jobsDuring(Similarity.rebalanceIvfPqStore(spark, empty))
-    assert(again == -1L && jobs == 0, s"warm empty-store rebalance launched $jobs jobs")
+    val (again, cap) = Capture.during(spark)(Similarity.rebalanceIvfPqStore(spark, empty))
+    assert(again == -1L && cap.jobs == 0, s"warm empty-store rebalance launched ${cap.jobs} jobs")
     val small = java.nio.file.Files
       .createTempDirectory("e31_small").toString + "/store"
     Similarity.buildIvfPqStore(vecs, "vid", "emb",

@@ -451,10 +451,10 @@ class PlanSpec extends SparkSpec {
     for ((gate, budget) <- StoreAudit.warmOpenJobs) {
       val serve = open(gate)
       serve().collect() // warm: model params become resident
-      val (df, jobs) = jobsDuring(serve())
-      assert(jobs <= budget,
+      val (df, cap) = graft.obs.Capture.during(spark)(serve())
+      assert(cap.jobs <= budget,
         s"$gate: building the serving DataFrame on a warm store launched " +
-          s"$jobs Spark jobs (budget $budget)")
+          s"${cap.jobs} Spark jobs (budget $budget)")
       assert(df.collect().nonEmpty, s"$gate: warm open served nothing")
     }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Capture
 import graft.operators.Skew
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -67,23 +68,8 @@ class SkewSpec extends SparkSpec {
     * the direct observable of join-key skew (the hot key's rows all land
     * on one reduce task).
     */
-  private def maxTaskShuffleRecords(action: => Unit): Long = {
-    val max = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val r = Option(te.taskMetrics)
-          .map(_.shuffleReadMetrics.recordsRead).getOrElse(0L)
-        max.getAndUpdate(m => math.max(m, r))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      org.apache.spark.graftspark.ListenerFlush.flush(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    max.get
-  }
+  private def maxTaskShuffleRecords(action: => Unit): Long =
+    Capture.during(spark)(action)._2.total.maxTaskShuffleRecords
 
   /** Run `body` with AQE off: these tests measure the STATIC partitioning
     * property (how a hot key maps to reduce tasks); AQE's coalescing

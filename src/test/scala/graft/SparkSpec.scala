@@ -9,26 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sql = spark.sqlContext
-
-  /** `body`'s result and the Spark jobs started while it ran, counted by
-    * a listener with the listener bus drained on both sides.
-    */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graftspark.ListenerFlush.flush(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graftspark.ListenerFlush.flush(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 }
 
 object SparkSpec {
@@ -40,8 +20,7 @@ object SparkSpec {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", graft.queries.Dsl.tempDir("graft-warehouse"))
     .config("spark.ui.enabled", "false")
     // plan audits read PushedFilters/PartitionFilters out of plan
     // STRINGS; the default 100-char metadata truncation silently hides

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.operators.{IncrementalComponents, Similarity}
+import graft.queries.TextQueries
 import graft.streaming.StreamSketch
 import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -214,6 +215,20 @@ class StagedCommitSpec extends SparkSpec {
       "the coarse and codes writes must have finished when the build fails")
     assert(!new java.io.File(s"$dir/_build_done").exists(), "no marker after a failed write")
     assert(ivfRead(dir) == before)
+  }
+
+  test("a failed BM25 index write awaits its sibling writes and unpersists its frame") {
+    val sc = cs.sparkContext
+    val store = base.resolve("bm25_sibling").resolve("store").toString
+    val cached = sc.getPersistentRDDs.size
+    val terms = s"$store/terms/"
+    CrashFs.arm(_.startsWith(terms), 0, scope = _.startsWith(terms))
+    val result = try Try(TextQueries.bm25BuildIndex(cs, sf, store)) finally CrashFs.disarm()
+    assert(CrashFs.tripped && result.isFailure)
+    org.apache.spark.graftspark.ListenerFlush.flush(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      "the postings and stats writes must have finished when the build fails")
+    assert(sc.getPersistentRDDs.size == cached, "the term-frequency frame must be unpersisted")
   }
 
   test("a bad plan line fails naming the marker and the line before any dir is touched") {

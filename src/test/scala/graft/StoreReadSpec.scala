@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.StoreRead
+import graft.obs.Capture
 import graft.operators.{IncrementalNearDup, Similarity}
 import graft.queries.TextQueries
 import graft.streaming.StreamUpsert
@@ -58,8 +59,8 @@ class StoreReadSpec extends SparkSpec {
       Seq("stats", "terms", "postings").map(d => s"$bm/$d") ++ Seq(nd, s"$up/v00001")
     for (d <- dirs) {
       val plain = spark.read.parquet(d)
-      val (fast, jobs) = jobsDuring(StoreRead.parquet(spark, d))
-      assert(jobs == 0, s"$d: footer-schema open launched $jobs jobs")
+      val (fast, cap) = Capture.during(spark)(StoreRead.parquet(spark, d))
+      assert(cap.jobs == 0, s"$d: footer-schema open launched ${cap.jobs} jobs")
       assert(fast.schema == plain.schema, s"$d:\n${fast.schema}\nvs\n${plain.schema}")
       assert(same(fast, plain), s"$d: rows differ")
     }

@@ -8,7 +8,7 @@ corresponding oracle SQL in DuckDB over the same tables, sorts columns
 by name and rows by all columns, and compares values exactly. If this
 strict check passes, any laxer driver compare passes too.
 """
-import json, math, os, sys
+import json, math, os, sys, time
 import duckdb
 import pandas as pd
 
@@ -52,38 +52,47 @@ def main():
     if os.path.isfile(manifest_path):
         manifest = {l.strip() for l in open(manifest_path) if l.strip()}
     n_pass = n_fail = n_skip = 0
+    secs = {}  # name -> seconds its check took (load, oracle, compare)
+
+    def took(name, t0):
+        secs[name] = time.monotonic() - t0
+        return f" {secs[name]:.2f}s"
+
     for name, sql in sorted(oracles.items()):
+        t0 = time.monotonic()
         if not os.path.isdir(f"{out_dir}/{name}"):
             if manifest is not None and name not in manifest:
                 n_skip += 1
                 continue
             print(f"FAIL {name}: no output dir — query crashed in Verify "
-                  "(see its '[verify] ... failed:' stderr line)")
+                  "(see its '[verify] ... failed:' stderr line)" + took(name, t0))
             n_fail += 1
             continue
         try:
             mine = canon(pd.read_parquet(f"{out_dir}/{name}"))
             ora = canon(con.sql(sql).df())
         except Exception as e:
-            print(f"FAIL {name}: load error: {e}")
+            print(f"FAIL {name}: load error: {e}" + took(name, t0))
             n_fail += 1
             continue
         if list(mine.columns) != list(ora.columns):
-            print(f"FAIL {name}: columns {list(mine.columns)} vs {list(ora.columns)}")
+            print(f"FAIL {name}: columns {list(mine.columns)} vs {list(ora.columns)}"
+                  + took(name, t0))
             n_fail += 1
             continue
         if len(mine) != len(ora):
-            print(f"FAIL {name}: rows {len(mine)} vs {len(ora)}")
+            print(f"FAIL {name}: rows {len(mine)} vs {len(ora)}" + took(name, t0))
             n_fail += 1
             continue
         if mine.equals(ora):
-            print(f"PASS {name} ({len(mine)} rows)")
+            print(f"PASS {name} ({len(mine)} rows)" + took(name, t0))
             n_pass += 1
         else:
             neq = (mine != ora)
             bad = neq.any(axis=1)
             idx = bad[bad].index[:3]
-            print(f"FAIL {name}: {int(bad.sum())}/{len(mine)} rows differ; first diffs:")
+            print(f"FAIL {name}: {int(bad.sum())}/{len(mine)} rows differ; first diffs:"
+                  + took(name, t0))
             for i in idx:
                 cols = [c for c in mine.columns if neq.at[i, c]]
                 for c in cols[:4]:
@@ -91,6 +100,9 @@ def main():
             n_fail += 1
     print(f"== {n_pass} pass / {n_fail} fail"
           + (f" / {n_skip} not-run (filtered dump)" if n_skip else "") + " ==")
+    print("slowest checks:")
+    for name, t in sorted(secs.items(), key=lambda kv: -kv[1])[:10]:
+        print(f"  {t:8.2f}s {name}")
     sys.exit(1 if n_fail else 0)
 
 
