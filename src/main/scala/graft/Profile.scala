@@ -9,8 +9,10 @@ import scala.util.control.NonFatal
   * Each gate runs twice on a cache-cleared session. The warm run is split
   * into construct (building the DataFrame, which may run store builds and
   * coordinator collects), plan (Catalyst, to the executed plan) and exec
-  * (the forced count), and carries the jobs, stages and task aggregates
-  * [[obs.Capture]] saw over all three, plus the formatted physical plan.
+  * (the forced count), and carries the jobs, stages, task aggregates and
+  * codegen compiles [[obs.Capture]] saw over all three (the compile counter
+  * is JVM-global, so it counts every thread's), plus the formatted
+  * physical plan.
   *
   * Usage: `tools/run.sh graft.Profile [gate ...]`; no gates profiles every
   * gate in registry order. Reads `SPARK_GRAFT_SF_DIR` (default sf0.1) and
@@ -28,7 +30,8 @@ object Profile {
       Profile.json(Seq("gate" -> gate, "rows" -> rows, "cold_s" -> coldS, "warm_s" -> warmS,
         "construct_s" -> constructS, "plan_s" -> planS, "exec_s" -> execS,
         "jobs" -> capture.jobs, "stages" -> capture.stages.size,
-        "catalyst_ms" -> capture.planMs) ++ tasks ++ Seq("plan" -> plan))
+        "catalyst_ms" -> capture.planMs,
+        "codegen_compiles" -> capture.codegenCompiles) ++ tasks ++ Seq("plan" -> plan))
     }
   }
 

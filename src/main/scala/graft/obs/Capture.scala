@@ -1,6 +1,7 @@
 package graft.obs
 
 import org.apache.spark.graftspark.ListenerFlush
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -25,15 +26,17 @@ final case class Tasks(
 
 /** What Spark itself reports while a body runs: job starts, per-stage
   * task aggregates, Catalyst's analysis + optimization + planning time,
-  * and the `df.observe` metrics of every finished query. Register it with
-  * [[Capture.during]], which also drains the listener bus so no event of
-  * the body is missed and none from before it is counted.
+  * the `df.observe` metrics of every finished query, and the generated
+  * classes Janino compiled. Register it with [[Capture.during]], which also
+  * drains the listener bus so no event of the body is missed and none from
+  * before it is counted.
   */
 final class Capture extends SparkListener with QueryExecutionListener {
   private var jobCount = 0
   private val stageTasks = mutable.Map.empty[Int, Tasks]
   private var catalystMs = 0L
   private val metrics = mutable.Map.empty[String, Row]
+  private var compiled = 0L
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobCount += 1 }
 
@@ -63,6 +66,12 @@ final class Capture extends SparkListener with QueryExecutionListener {
   def planMs: Long = synchronized(catalystMs)
   /** `df.observe` name → metrics row, from the queries that finished. */
   def observed: Map[String, Row] = synchronized(metrics.toMap)
+  /** Generated classes compiled while the body ran: codegen-cache misses,
+    * each one a Janino compile on the driver or in a task. Spark's counter
+    * is JVM-global, so compiles of bodies running concurrently (another
+    * thread's query, another test) are included.
+    */
+  def codegenCompiles: Long = synchronized(compiled)
 }
 
 object Capture {
@@ -73,9 +82,12 @@ object Capture {
     ListenerFlush.flush(sc)
     sc.addSparkListener(c)
     spark.listenerManager.register(c)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
     try {
       val r = body
       ListenerFlush.flush(sc)
+      c.synchronized(c.compiled = compiles.getCount - before)
       (r, c)
     } finally {
       spark.listenerManager.unregister(c)

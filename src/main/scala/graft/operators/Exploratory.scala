@@ -144,7 +144,8 @@ object Exploratory {
     df.schema.fields.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name }.toSeq
 
   /** The full fan-out over a posts-preprocessed frame: cache once, run
-    * every aggregate off the cached plan.
+    * every aggregate off the cached plan. The caller unpersists `df` once
+    * the aggregates have run.
     */
   def analyze(df: DataFrame): Map[String, DataFrame] = {
     val cached = df.cache()

@@ -1,8 +1,11 @@
 package graft.operators
 
-import graft.io.StoreRead
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.io.{Local, StoreRead}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental NEAR-dup admission against a persistent banded-signature
   * index — the streaming-ingestion twin of [[Dedup.nearDupPairs]], the
@@ -22,10 +25,10 @@ import org.apache.spark.sql.functions._
   * which is why the index-all form is the default here.)
   *
   * Scale shape: per batch — one LSH signature pass over the BATCH, one
-  * band equi-join batch×index (index side is bucketable by band_key),
-  * one intra-batch self-join, one append of O(batch·bands) narrow rows.
-  * Cost is O(batch), not O(corpus); the corpus only ever contributes
-  * its (id, band_id, band_key) index rows.
+  * index scan filtered to the batch's band keys (pushed down to the
+  * parquet reader), one append of O(batch·bands) narrow rows. Cost is
+  * O(batch), not O(corpus); the corpus only ever contributes the index
+  * rows that share a band key with the batch.
   */
 object IncrementalNearDup {
 
@@ -34,56 +37,62 @@ object IncrementalNearDup {
       Some(StoreRead.parquet(spark, storeDir))
     else None
 
+  /** The docs, and their band rows, one batch may hold on the driver. */
+  private val MaxBatchRows = 1000000
+
   /** Admit `batch` against the index at `storeDir`: returns the admitted
     * rows (no band collision with anything seen before, nor with an
     * earlier-`idCol` row of this batch), and appends ALL of the batch's
     * band rows to the index.
+    *
+    * The batch is collected once (O(batch), budgeted) and everything
+    * after reads the driver's copy, so the batch lineage never re-runs:
+    * one job collects the batch, one signs it, one reads the index rows
+    * whose band keys the batch holds, one appends. The blocked-id set is
+    * settled on the driver BEFORE the append, so admissions never see the
+    * batch's own bands, and the admitted rows come back as a local frame.
     */
   def dedupeBatch(batch: DataFrame, idCol: String, textCol: String,
                   storeDir: String, shingleK: Int = 2, numPerms: Int = 16,
                   bands: Int = 8): DataFrame = {
     val spark = batch.sparkSession
-    val banded = Dedup.bandedSignatures(batch, idCol, textCol, shingleK, numPerms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vsIndex = readIndex(spark, storeDir) match {
-      // NOTE (measured, round 5): bloom-pruning the index side by the
-      // batch's band keys does NOT pay here — the index rows are narrow
-      // (24 B) and the two bloom-construction jobs cost more than the
-      // scan they save (1.56 s vs 1.42 s per batch at a 4M-row index,
-      // and strictly worse at small stores). The scale lever for a truly
-      // corpus-independent batch is BUCKETING the store by band_key
-      // (operators/Bucketing) so the join co-locates without scanning.
-      case Some(idx) => banded.as("b")
-        .join(idx.as("i"),
-          col("b.band_id") === col("i.band_id") &&
-            col("b.band_key") === col("i.band_key"))
-        .select(col("b.id"))
-      case None => spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
+    def local(rows: Array[Row], schema: StructType) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val docs = Local.rows(batch, MaxBatchRows)(
+      s"dedupeBatch: > $MaxBatchRows docs in one batch — split it into smaller micro-batches")
+    val signed = Dedup.bandedSignatures(local(docs, batch.schema), idCol, textCol,
+      shingleK, numPerms, bands)
+    val rows = Local.rows(signed, MaxBatchRows)(
+      s"dedupeBatch: > $MaxBatchRows band rows (docs × $bands bands) in one " +
+        "batch — split it into smaller micro-batches")
+    val idType = signed.schema("id").dataType
+    // (band_id, band_key) pairs the index already holds
+    val indexed = readIndex(spark, storeDir).fold(Set.empty[(Any, Any)]) { idx =>
+      Local.rows(idx.filter(Local.isIn(col("band_key"), signed.schema("band_key").dataType,
+          rows.map(_.get(2)))).select("band_id", "band_key"), MaxBatchRows)(
+        s"dedupeBatch: > $MaxBatchRows index rows share a band key with the " +
+          "batch — compact the index or split the batch")
+        .map(r => (r.get(0), r.get(1))).toSet
     }
-    val intra = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id"))
-      .select(col("y.id"))
-    // Materialize the blocked-id set BEFORE appending this batch's band
-    // rows: `admitted` is returned lazily, so without the checkpoint its
-    // correctness would hinge on the parquet read above having snapshotted
-    // the file listing — a refresh/lazy file index would make every doc
-    // collide with its own just-appended bands. localCheckpoint (eager)
-    // pins the pre-append contents; the set is O(batch) ids.
-    val blocked = vsIndex.union(intra).distinct().localCheckpoint()
-    val admitted = batch.join(blocked.withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    // append THIS batch's band rows after computing admissions (the
-    // batch must not collide with itself through the index)
-    banded.write.mode("append").parquet(storeDir)
-    banded.unpersist() // blocked is checkpointed; nothing references the cache
-    admitted
+    // a band row is blocked by the index, or by a smaller id of this batch
+    // in the same band (null ids never compare)
+    val order = TypeUtils.getInterpretedOrdering(idType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val blocked = rows.groupBy(r => (r.get(1), r.get(2))).valuesIterator.flatMap { band =>
+      val ids = band.map(_.get(0)).filter(_ != null)
+      if (indexed((band.head.get(1), band.head.get(2)))) ids
+      else ids.minByOption(toCatalyst)(order).toSeq.flatMap(first =>
+        ids.filter(id => order.gt(toCatalyst(id), toCatalyst(first))))
+    }.map(toCatalyst).toSet
+    // the band rows again from the driver's copy of the batch: the plan
+    // the collect above compiled
+    signed.coalesce(1).write.mode("append").parquet(storeDir)
+    val id = batch.schema.fieldIndex(idCol)
+    local(docs.filter(d => d.isNullAt(id) || !blocked(toCatalyst(d.get(id)))), batch.schema)
   }
 
   /** [[dedupeBatch]] against a BUCKETED index table — the layout lever
-    * the flat-store path names as its 100 TB form (the round-5 note on
-    * `dedupeBatch`): the index is a `bucketBy(band_key)` parquet table,
+    * for the flat store's 100 TB form: the index is a `bucketBy(band_key)` parquet table,
     * so the per-batch collision join reads the corpus-sized side
     * PRE-PARTITIONED — no exchange ever touches the index (PlanSpec
     * pins it); only the O(batch) banded rows shuffle, to the bucket

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.io.{StagedCommit, StoreRead}
+import graft.io.{Local, StagedCommit, StoreRead}
 import graft.io.StagedCommit.{Drop, Keep}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -405,10 +405,10 @@ object Similarity {
             sqDistL(slice(q, s * dsub + lit(1), lit(dsub)), w.getField("cqs")).as("dist"),
             w.getField("c_id").as("c_id")))).as("best")))
 
-  /** The one driver-collect bound of the in-memory residency: query and
-    * model rows together. Queries are a bounded sample/request by
-    * contract and model params broadcast-class by the IVF provisioning
-    * invariant (k ∝ √n).
+  /** The one driver-collect bound of the IVF-PQ paths: the in-memory
+    * residency's query and model rows together, an admitted batch, an
+    * erasure's ids. Queries and batches are bounded by contract and model
+    * params broadcast-class by the IVF provisioning invariant (k ∝ √n).
     */
   private val MaxLocalRows = 1000000
 
@@ -418,9 +418,11 @@ object Similarity {
     * One value serves both residencies of the codes — the stored one
     * (rows from [[StoreRead.resident]], codes from the
     * cluster-partitioned store) and the in-memory one (rows from one
-    * tagged collect, codes from [[IvfPq.encode]]) — so build,
-    * admission and in-query search share one encode, one ADC scorer
-    * and one top-k (the equalities e19 and e29 pin).
+    * tagged collect, codes from [[IvfPq.encode]]) — so build and
+    * in-query search share one encode, one ADC scorer and one top-k, and
+    * admission runs [[IvfPq.encodeLocal]], encode's coordinator twin over
+    * the rows search routes queries with (the equalities e19 and e29
+    * pin).
     */
   private final case class IvfPq(coarse: StoreRead.Resident, codebook: StoreRead.Resident,
                                  m: Int, dsub: Int) {
@@ -464,6 +466,49 @@ object Similarity {
       pq(v).join(assigned, col("vec_id") === col("a_id")).drop("a_id")
     }
 
+    /** The model rows parsed once for the coordinator-side twins:
+      * centroids (g_id, its long, gq) and codewords (c_id, s, offset of
+      * subspace s in a vector, cqs).
+      */
+    private lazy val cents = coarse.rows.toSeq
+      .map(r => (r.get(0), asLong(r.get(0)), r.getSeq[Long](1).toArray))
+    private lazy val words = codebook.rows.toSeq.map { r =>
+      val s = asLong(r.get(1))
+      (r.get(0), s, (s * dsub).toInt, r.getSeq[Long](2).toArray)
+    }
+
+    /** Centroid ids by ascending (distance to `qq`, g_id). */
+    private def ranked(qq: Array[Long]): Seq[Any] =
+      cents.map { case (gid, gl, gq) => (sqDistLocal(qq, gq), gl, gid) }
+        .sortBy { case (d, gl, _) => (d, gl) }.map(_._3)
+
+    /** [[encode]] on the coordinator, for batch-sized `(id, q)` rows: the
+      * same integer distances ([[sqDistLocal]], [[search]]'s routing) and
+      * the same ties (the lower g_id, then per subspace the lower c_id),
+      * so an admitted vector's code rows equal the ones a build over it
+      * writes (e29 pins it). A `q` of another width than the model's fails
+      * here instead of encoding to null distances.
+      */
+    def encodeLocal(v: StoreRead.Resident): StoreRead.Resident = {
+      val dims = cents.map(_._3.length).filter(_ > 0).distinct
+      val bySub = words.groupBy(_._2)
+      val rows = v.rows.toSeq.flatMap { r =>
+        val qq = Option(r.getSeq[Long](1)).map(_.toArray).orNull
+        require(qq != null && qq.length >= m * dsub && dims.forall(_ == qq.length),
+          s"IVF-PQ encode: vector ${r.get(0)} has ${Option(qq).fold("no")(_.length.toString)} " +
+            s"dims; the store's model encodes ${(dims :+ m * dsub).max}")
+        ranked(qq).headOption.toSeq.flatMap { cluster =>
+          (0L until m).flatMap(s => bySub.getOrElse(s, Nil)
+            .map { case (cid, _, off, cqs) => (sqDistLocal(qq.slice(off, off + dsub), cqs), asLong(cid), cid) }
+            .minByOption { case (d, cl, _) => (d, cl) }
+            .map { case (d, _, cid) => Row(r.get(0), s, cid, d, cluster) })
+        }
+      }
+      StoreRead.Resident(StructType(Seq(v.schema.head.copy(name = "vec_id"),
+        StructField("subspace", LongType), codebook.schema.head.copy(name = "code"),
+        StructField("dist_q", LongType), coarse.schema.head.copy(name = "cluster"))), rows.toArray)
+    }
+
     /** Top-`k` by ADC distance over `codes` (an [[encode]] frame) for
       * every probe width in `nprobes`: (nprobe, q_id, rank, n_id,
       * adc_dist). `queries` are (q_id, qq) rows on the coordinator;
@@ -491,17 +536,10 @@ object Similarity {
       val spark = codes.sparkSession
       val maxNp = nprobes.max
       val sweep = nprobes.size > 1
-      val cents = coarse.rows.toSeq
-        .map(r => (r.get(0), asLong(r.get(0)), r.getSeq[Long](1).toArray))
-      val words = codebook.rows.toSeq.map { r =>
-        val s = asLong(r.get(1))
-        (r.get(0), s, (s * dsub).toInt, r.getSeq[Long](2).toArray)
-      }
       val qs = queries.rows.toSeq.map(r => (r.get(0), r.getSeq[Long](1).toArray))
       val probeRows = qs.flatMap { case (qid, qq) =>
-        cents.map { case (gid, gl, gq) => (sqDistLocal(qq, gq), gl, gid) }
-          .sortBy { case (d, gl, _) => (d, gl) }.take(maxNp)
-          .zipWithIndex.map { case ((_, _, gid), i) => Row(qid, Integer.valueOf(i + 1), gid) }
+        ranked(qq).take(maxNp)
+          .zipWithIndex.map { case (gid, i) => Row(qid, Integer.valueOf(i + 1), gid) }
       }
       val tabRows = for ((qid, qq) <- qs; (cid, s, off, cqs) <- words)
         yield Row(qid, java.lang.Long.valueOf(s), cid,
@@ -663,20 +701,27 @@ object Similarity {
                            store: String, deleteIds: DataFrame): Unit = {
     recover(spark, store) // finish any half-installed mutation before reading
     val codes = StoreRead.parquet(spark, s"$store/codes")
-    val del = deleteIds.select(col(deleteIds.columns.head).as("__del_id")).distinct()
-    // affected clusters: bounded by |clusters| (the IVF provisioning
-    // invariant k ∝ √n), so the collect is broadcast-class
-    val affected = codes.join(broadcast(del),
-        col("vec_id") === col("__del_id"), "left_semi")
-      .select("cluster").distinct().collect().map(_.get(0))
+    val idType = codes.schema("vec_id").dataType
+    val del = Local.rows(deleteIds.select(col(deleteIds.columns.head).cast(idType)), MaxLocalRows)(
+      s"forgetFromIvfPqStore: > $MaxLocalRows ids in one erasure — split it")
+      .map(_.get(0)).toSet
+    def deleted = Local.isIn(col("vec_id"), idType, del)
+    // the clusters holding a deleted vector, read off its code rows:
+    // |ids| × m values at most
+    val clusterType = codes.schema("cluster").dataType
+    val affected = Local.rows(codes.filter(deleted).select("cluster"), MaxLocalRows)(
+      s"forgetFromIvfPqStore: > $MaxLocalRows code rows to erase — split the erasure")
+      .map(_.get(0)).distinct
     if (affected.isEmpty) return
     // survivors are staged from the live codes to a disjoint path (an
     // in-place dynamic overwrite would read the partitions it truncates)
     val fs = StagedCommit.fsOf(spark, store)
     val layout = forgetLayout(store)
     val pending = StagedCommit.reset(fs, layout)
-    codes.filter(col("cluster").isin(affected.toIndexedSeq: _*))
-      .join(broadcast(del), col("vec_id") === col("__del_id"), "left_anti")
+    // cluster as admission writes it (the coarse g_id's long), so the
+    // two writes share one set of generated writer classes
+    codes.filter(Local.isIn(col("cluster"), clusterType, affected) && (col("vec_id").isNull || !deleted))
+      .withColumn("cluster", col("cluster").cast(LongType))
       .repartition(col("cluster"))
       .write.mode("overwrite").partitionBy("cluster").parquet(pending.toString)
     val staged = (if (fs.exists(pending)) fs.listStatus(pending).toSeq else Seq.empty)
@@ -727,11 +772,13 @@ object Similarity {
     * StreamNearDup's discipline) is the exactly-once variant; this
     * batch API trades that for plain appends and documents the window.
     *
-    * Scale shape: O(batch) work end to end — the batch meets the
-    * broadcast centroids/codebook, and the append touches only the
-    * partitions the batch routes to; the existing corpus is never
-    * read or rewritten (contrast x04's incremental-dedup admission,
-    * same O(batch) discipline).
+    * Scale shape: O(batch) work end to end, in two jobs — the
+    * quantized batch is collected (budgeted) and routed and encoded on
+    * the coordinator like [[ivfPqStoredTopK]]'s queries
+    * ([[IvfPq.encodeLocal]]), and the append touches only the
+    * partitions the batch routes to, one file each; the existing corpus
+    * is never read or rewritten (contrast x04's incremental-dedup
+    * admission, same O(batch) discipline).
     */
   def admitIvfPqBatch(spark: org.apache.spark.sql.SparkSession, store: String,
                       batch: DataFrame, idCol: String, embCol: String,
@@ -745,13 +792,17 @@ object Similarity {
     // admitted ([[compactAdmissionLedger]] folds them).
     val fs = AdmissionLedger.fsOf(spark, store)
     if (AdmissionLedger.isAdmitted(fs, store, batchId)) return
+    // the quantized batch is collected once and encoded on the coordinator
+    // against the resident model; one task appends one file per cluster
+    // the batch routes to
     val v = batch.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    storedModel(spark, store, m, dsub).encode(v)
-      .repartition(col("cluster"))
+    val rows = Local.rows(v, MaxLocalRows)(
+      s"admitIvfPqBatch: > $MaxLocalRows vectors in one batch — split it into " +
+        "smaller micro-batches")
+    storedModel(spark, store, m, dsub).encodeLocal(StoreRead.Resident(v.schema, rows))
+      .toDF(spark).coalesce(1)
       .write.mode("append").partitionBy("cluster")
       .parquet(s"$store/codes")
-    v.unpersist()
     AdmissionLedger.record(fs, store, batchId)
   }
 

@@ -86,8 +86,11 @@ object Pipeline {
   object ExploratoryAnalysisStage extends Stage {
     // no params (config/test.json ships an empty object)
     def run(spark: SparkSession, in: String, out: String, params: JsonNode,
-            datasetName: String): Unit =
-      writeAnalyses(Exploratory.analyze(CsvIo.readPreprocessed(spark, in)), out)
+            datasetName: String): Unit = {
+      val posts = CsvIo.readPreprocessed(spark, in)
+      // analyze caches the frame; release it once every write has settled
+      try writeAnalyses(Exploratory.analyze(posts), out) finally posts.unpersist()
+    }
 
     /** The fan-out sink: independent aggregate jobs off ONE cached frame,
       * submitted concurrently (Spark's scheduler is thread-safe and fills

@@ -1,8 +1,12 @@
 package graft.streaming
 
 import graft.io.StoreRead
-import graft.operators.Upsert
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedUnsafeProjection}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 
 /** foreachBatch CDC-APPLY: maintain a latest-wins keyed snapshot store
@@ -21,11 +25,10 @@ import java.nio.file.{Files, Paths}
   * final version and changes nothing except writing an equal snapshot
   * under a fresh version id (UpsertStreamSpec pins this).
   *
-  * Scale shape: per batch, one keyed full-outer join of O(store) vs
-  * O(batch) — the store side is a plain parquet scan (bucketable on
-  * the key in a real lake), the batch side is compacted map-side
-  * first; nothing driver-side. Old versions are retired by io06-style
-  * compaction/GC, not by this operator.
+  * Scale shape: per batch, one keyed shuffle and sort of O(store) +
+  * O(batch) rows — the store side is a plain parquet scan (bucketable on
+  * the key in a real lake); nothing driver-side. Old versions are retired by
+  * io06-style compaction/GC, not by this operator.
   */
 object StreamUpsert {
 
@@ -67,18 +70,53 @@ object StreamUpsert {
     StoreRead.parquet(spark, f"$store/v$version%05d")
   }
 
-  /** Merge one micro-batch into the store (the foreachBatch body). */
+  /** Merge one micro-batch into the store (the foreachBatch body): per
+    * key the greatest `version` tuple wins, the snapshot's row on a tie —
+    * [[graft.operators.Upsert.latestWins]]' rule (NULL the smallest
+    * version, keys compared null-safely), or
+    * [[graft.operators.Upsert.compact]]'s on the first batch.
+    *
+    * One shuffle, then the write: the snapshot's and the batch's rows are
+    * hash-partitioned by key and sorted so that each key's rows are
+    * adjacent and its winner comes last, and one pass over each sorted
+    * partition keeps the last row of every key — a merge of sorted runs,
+    * with no window or join operator and their generated classes.
+    */
   def applyBatch(spark: SparkSession, store: String, batch: DataFrame,
                  keys: Seq[String], version: Seq[String]): Unit = {
     val cur = latestVersion(store)
-    val merged = cur match {
-      case Some(v) =>
-        Upsert.latestWins(
-          StoreRead.parquet(spark, f"$store/v$v%05d"), batch, keys, version)
-      case None => Upsert.compact(batch, keys, version)
+    val updates = batch.withColumn("__snap", lit(false))
+    val rows = cur.fold(updates) { v =>
+      val snapshot = StoreRead.parquet(spark, f"$store/v$v%05d")
+      require(snapshot.columns.sameElements(batch.columns),
+        s"schema mismatch: ${snapshot.columns.mkString(",")} vs ${batch.columns.mkString(",")}")
+      snapshot.withColumn("__snap", lit(true)).unionByName(updates)
+    }
+    val sorted = rows.repartition(keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col) ++ version.map(col(_).asc_nulls_first) :+ col("__snap"): _*)
+    val schema = sorted.schema
+    def refs(names: Seq[String]): Seq[Expression] = names.map { n =>
+      val i = schema.fieldIndex(n)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    val (keyRefs, outRefs) = (refs(keys), refs(batch.columns.toSeq))
+    val winners = sorted.queryExecution.toRdd.mapPartitions { it =>
+      val keyOf = InterpretedUnsafeProjection.createProjection(keyRefs)
+      val out = InterpretedUnsafeProjection.createProjection(outRefs)
+      val in = it.buffered
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = in.hasNext
+        def next(): InternalRow = {
+          var row = in.next().copy()
+          val key = keyOf(row).copy()
+          while (in.hasNext && keyOf(in.head) == key) row = in.next().copy()
+          out(row)
+        }
+      }
     }
     val next = cur.map(_ + 1).getOrElse(0)
-    merged.write.mode("overwrite").parquet(f"$store/v$next%05d")
+    ColumnBridge.dataFrame(spark, winners, StructType(schema.filter(_.name != "__snap")))
+      .write.mode("overwrite").parquet(f"$store/v$next%05d")
   }
 
   /** VACUUM — retention for the versioned store: keep the newest

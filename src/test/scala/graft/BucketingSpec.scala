@@ -97,8 +97,7 @@ class BucketingSpec extends SparkSpec {
       }
     }
     // and the admission result equals the flat-store twin's
-    val flatStore = java.nio.file.Files
-      .createTempDirectory("x18_flat_twin").toString + "/store"
+    val flatStore = graft.queries.Dsl.tempDir("x18_flat_twin") + "/store"
     val table2 = "x18_planpin_idx2"
     spark.sql(s"DROP TABLE IF EXISTS $table2")
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =

@@ -24,9 +24,9 @@ class ChunkFileSourceSpec extends SparkSpec {
       .option("start", Start).option("end", End).option("chunkDays", "7")
 
   test("chunk offsets resume at the committed chunk; no chunk re-fetched") {
-    val landing = Files.createTempDirectory("graft-chunks").toString
-    val outDir = Files.createTempDirectory("graft-chunks-out").toString + "/rows"
-    val cp = Files.createTempDirectory("graft-chunks-cp").toString
+    val landing = graft.queries.Dsl.tempDir("graft-chunks")
+    val outDir = graft.queries.Dsl.tempDir("graft-chunks-out") + "/rows"
+    val cp = graft.queries.Dsl.tempDir("graft-chunks-cp")
 
     def drainStream(): Unit = {
       val q = spark.readStream.format("graft.sources.ChunkFileSource")
@@ -91,9 +91,9 @@ class ChunkFileSourceSpec extends SparkSpec {
   }
 
   test("a FRESH query over a rotated chunk dir backfills the remaining window") {
-    val landing = Files.createTempDirectory("graft-chunks-rot").toString
-    val outDir = Files.createTempDirectory("graft-chunks-rot-out").toString + "/rows"
-    val cp = Files.createTempDirectory("graft-chunks-rot-cp").toString
+    val landing = graft.queries.Dsl.tempDir("graft-chunks-rot")
+    val outDir = graft.queries.Dsl.tempDir("graft-chunks-rot-out") + "/rows"
+    val cp = graft.queries.Dsl.tempDir("graft-chunks-rot-cp")
     ChunkScraper.run(landing, Start, End, 7, maxChunks = 4, maxTries = 1)(fetch)
     (0L until 2L).foreach(i =>
       Files.delete(java.nio.file.Paths.get(landing, f"chunk_$i%05d.json")))
@@ -111,7 +111,7 @@ class ChunkFileSourceSpec extends SparkSpec {
   }
 
   test("a failing window aborts resumably and retries within budget") {
-    val landing = Files.createTempDirectory("graft-chunks-retry").toString
+    val landing = graft.queries.Dsl.tempDir("graft-chunks-retry")
     var calls = 0
     // window 1 fails twice then succeeds — maxTries 3 absorbs it
     def flaky(s: LocalDate, e: LocalDate): Either[String, String] = {

@@ -11,7 +11,7 @@ class CompactionSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("compaction hits the planned byte-derived file count and preserves rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("compact-spec").toString
+    val tmp = graft.queries.Dsl.tempDir("compact-spec")
     val small = s"$tmp/small"
     val out = s"$tmp/out"
     val docs = Tables.documents(spark, dir)
@@ -31,7 +31,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compacting one oversized input still plans a single file") {
-    val tmp = java.nio.file.Files.createTempDirectory("compact-spec2").toString
+    val tmp = graft.queries.Dsl.tempDir("compact-spec2")
     val small = s"$tmp/one"
     val out = s"$tmp/out"
     Tables.documents(spark, dir).coalesce(1).write.mode("overwrite").parquet(small)

@@ -20,9 +20,9 @@ class FeedPageSourceSpec extends SparkSpec {
   }
 
   test("streaming offsets resume at the committed page; batch sees all pages") {
-    val landing = Files.createTempDirectory("graft-dsv2-pages").toString
-    val outDir = Files.createTempDirectory("graft-dsv2-out").toString + "/rows"
-    val cp = Files.createTempDirectory("graft-dsv2-cp").toString
+    val landing = graft.queries.Dsl.tempDir("graft-dsv2-pages")
+    val outDir = graft.queries.Dsl.tempDir("graft-dsv2-out") + "/rows"
+    val cp = graft.queries.Dsl.tempDir("graft-dsv2-cp")
 
     def drainStream(): Unit = {
       val q = spark.readStream.format("graft.sources.FeedPageSource")
@@ -80,9 +80,9 @@ class FeedPageSourceSpec extends SparkSpec {
   }
 
   test("a FRESH query over a rotated landing dir backfills the remaining window") {
-    val landing = Files.createTempDirectory("graft-dsv2-rot").toString
-    val outDir = Files.createTempDirectory("graft-dsv2-rot-out").toString + "/rows"
-    val cp = Files.createTempDirectory("graft-dsv2-rot-cp").toString
+    val landing = graft.queries.Dsl.tempDir("graft-dsv2-rot")
+    val outDir = graft.queries.Dsl.tempDir("graft-dsv2-rot-out") + "/rows"
+    val cp = graft.queries.Dsl.tempDir("graft-dsv2-rot-cp")
 
     FeedPager.run(landing, FeedPager.initialState, maxPages = 5, maxTries = 1)(fetch)
     // rotate the first three pages away BEFORE any checkpoint exists:

@@ -25,7 +25,7 @@ class GoldenFixtureSpec extends SparkSpec {
 
   /** Extract posts.csv from the reference's data.zip (read-only source). */
   private lazy val postsCsvPath: String = {
-    val outDir = Files.createTempDirectory("graft-golden")
+    val outDir = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-golden"))
     val zis = new ZipInputStream(
       Files.newInputStream(Paths.get("/root/reference/data.zip")))
     try {
@@ -97,7 +97,7 @@ class GoldenFixtureSpec extends SparkSpec {
   test("golden: preprocessed output round-trips through the CSV edge sink") {
     val posts = CsvIo.readPosts(spark, postsCsvPath)
     val out = Preprocess.run(posts, cfg)
-    val dir = Files.createTempDirectory("graft-golden-out").resolve("pp.csv").toString
+    val dir = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-golden-out")).resolve("pp.csv").toString
     CsvIo.writeCsv(out, dir, singleFile = true)
     val back = CsvIo.readPreprocessed(spark, dir)
     assert(back.count() == 118)
@@ -118,7 +118,7 @@ class GoldenFixtureSpec extends SparkSpec {
     // (~10^10, squares overflow Long) while every synthetic gate stayed
     // green. Asserts exit code, per-stage status, and golden values over
     // the exploratory outputs.
-    val root = Files.createTempDirectory("graft-golden-e2e")
+    val root = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-golden-e2e"))
     val zis = new ZipInputStream(
       Files.newInputStream(Paths.get("/root/reference/data.zip")))
     try {
@@ -175,7 +175,7 @@ class GoldenFixtureSpec extends SparkSpec {
     val df = Seq(1L).toDF("id")
       .withColumn("ts_ltz", timestamp_micros(lit(us)))
       .withColumn("ts_ntz", timestamp_micros(lit(us)).cast(TimestampNTZType))
-    val dir = Files.createTempDirectory("graft-csv-us").resolve("t.csv").toString
+    val dir = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-csv-us")).resolve("t.csv").toString
     CsvIo.writeCsv(df, dir)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("ts_ltz", TimestampType),

@@ -186,7 +186,7 @@ class MergeRangeSpec extends SparkSpec {
   // -------------------------------------------------- IncrementalNearDup
   test("IncrementalNearDup: cross-batch and intra-batch blocking, fresh docs admitted") {
     import graft.operators.IncrementalNearDup
-    val store = java.nio.file.Files.createTempDirectory("ind_store")
+    val store = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("ind_store"))
       .resolve("bands").toString
     val b1 = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),

@@ -14,7 +14,7 @@ class MultimodalSpec extends SparkSpec {
     * grayscale PNG (the reference's B/W-skip case), one corrupt file.
     */
   private lazy val imageDir: String = {
-    val dir = Files.createTempDirectory("graft-img")
+    val dir = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-img"))
     (1 to 6).foreach { i =>
       Files.write(dir.resolve(s"img_$i.png"), Multimodal.syntheticImage(i.toLong))
     }
@@ -110,7 +110,7 @@ class MultimodalSpec extends SparkSpec {
   test("writeImages round-trips anonymized binaries through the sink") {
     val imgs = Multimodal.readImages(spark, imageDir)
     val anon = Multimodal.anonymizeImages(imgs, model)
-    val outDir = Files.createTempDirectory("graft-img-out").toString
+    val outDir = graft.queries.Dsl.tempDir("graft-img-out")
     Multimodal.writeImages(anon, outDir)
     val back = Multimodal.readImages(spark, outDir)
     assert(back.count() == imgs.count())

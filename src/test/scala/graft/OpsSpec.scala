@@ -192,8 +192,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ivfPqStoredTopK fails fast above the probe-row budget") {
-    val store = java.nio.file.Files
-      .createTempDirectory("e19_budget").toString + "/store"
+    val store = graft.queries.Dsl.tempDir("e19_budget") + "/store"
     val vecs = (0L until 32L)
       .map(i => (i, Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
       .toDF("vid", "emb")
@@ -214,8 +213,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("stored IVF-PQ routing refuses non-numeric ids with a message, not a MatchError") {
-    val store = java.nio.file.Files
-      .createTempDirectory("e19_strids").toString + "/store"
+    val store = graft.queries.Dsl.tempDir("e19_strids") + "/store"
     val vecs = (0L until 32L)
       .map(i => (f"v$i%02d", Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
       .toDF("vid", "emb")
@@ -255,15 +253,13 @@ class OpsSpec extends SparkSpec {
     val vecs = (0L until 32L)
       .map(i => (i, Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
       .toDF("vid", "emb")
-    val empty = java.nio.file.Files
-      .createTempDirectory("e31_empty").toString + "/store"
+    val empty = graft.queries.Dsl.tempDir("e31_empty") + "/store"
     Similarity.buildIvfPqStore(vecs, "vid", "emb",
       col("id") < 0, col("id") < 8, empty)
     assert(Similarity.rebalanceIvfPqStore(spark, empty) == -1L)
     val (again, cap) = Capture.during(spark)(Similarity.rebalanceIvfPqStore(spark, empty))
     assert(again == -1L && cap.jobs == 0, s"warm empty-store rebalance launched ${cap.jobs} jobs")
-    val small = java.nio.file.Files
-      .createTempDirectory("e31_small").toString + "/store"
+    val small = graft.queries.Dsl.tempDir("e31_small") + "/store"
     Similarity.buildIvfPqStore(vecs, "vid", "emb",
       col("id") >= 8 && col("id") < 12, col("id") < 8, small)
     assert(Similarity.rebalanceIvfPqStore(spark, small, minSplitVectors = 33) == -1L)
@@ -354,7 +350,7 @@ class OpsSpec extends SparkSpec {
     // reliable checkpoint dir and assert (a) the fixpoint is the exact
     // union-find labeling, (b) round state actually went to the dir
     // (i.e. the loop really ran on reliable checkpoints, not local ones)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val ckpt = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-ckpt"))
     val chain = (0 until 119).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
     val labels = Dedup.connectedComponents(chain, localEdgeLimit = 0L,
         streamEdgeLimit = 0L, checkpointDir = Some(ckpt.toString))
@@ -398,7 +394,7 @@ class OpsSpec extends SparkSpec {
 
   test("IncrementalDedup: batches dedupe against the persistent corpus store") {
     import graft.operators.IncrementalDedup
-    val store = java.nio.file.Files.createTempDirectory("graft-incdedup").toString
+    val store = graft.queries.Dsl.tempDir("graft-incdedup")
     def batchDf(rows: (Long, String)*) = rows.toSeq.toDF("id", "text")
     val key = TextFunctions.rollingHash($"text")
 
@@ -570,8 +566,7 @@ class OpsSpec extends SparkSpec {
 
   test("ZoneMap range read opens a strict subset of files; misses open zero") {
     import graft.operators.ZoneMap
-    val lake = java.nio.file.Files
-      .createTempDirectory("zonemap_spec").toString + "/lake"
+    val lake = graft.queries.Dsl.tempDir("zonemap_spec") + "/lake"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "event_type", "value")
     ZoneMap.writeClustered(ev, lake, "ts", numFiles = 16)
@@ -654,7 +649,7 @@ class OpsSpec extends SparkSpec {
     */
   test("io15: zstd parquet landing bounds part size at the writer and names the codec") {
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("io15_spec").toString + "/land"
+    val out = graft.queries.Dsl.tempDir("io15_spec") + "/land"
     val src = graft.Tables.events(spark, dir).select("event_id", "event_type")
     val n = src.count()
     src.repartition(1)

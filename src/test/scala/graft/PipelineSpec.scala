@@ -57,7 +57,7 @@ class PipelineSpec extends SparkSpec {
       |}""".stripMargin
 
   test("pipeline runs stages in order, skips disabled, memoizes outputs") {
-    val root = Files.createTempDirectory("graft-pipe").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe")
     writeFixture(root)
     Files.writeString(Paths.get(s"$root/config.json"), configJson)
     val cfg = Pipeline.loadConfig(s"$root/config.json")
@@ -98,7 +98,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("training-data stages run over a documents parquet") {
-    val root = Files.createTempDirectory("graft-pipe3").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe3")
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta"), // exact dup of 1
@@ -126,7 +126,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CurationStage removes near-dup group members and contaminated docs") {
-    val root = Files.createTempDirectory("graft-pipe4").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe4")
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta"), // near-dup group with 1 → removed
@@ -150,7 +150,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CTPreprocessorStage parses repr-dict columns and derives the reference's columns") {
-    val root = Files.createTempDirectory("graft-pipe-ct").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-ct")
     // the CT CSV shape: statistics/account are python-repr dicts
     // (single quotes, True/False/None), as pandas to_csv leaves them
     val csv =
@@ -202,7 +202,7 @@ class PipelineSpec extends SparkSpec {
   test("full test.json stage set: scrapers, vision stages, null input, summary CSV, memoized rerun") {
     import graft.pipeline.Stages
     import graft.sources.FeedPager
-    val root = Files.createTempDirectory("graft-pipe-full").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-full")
     // two-page feed with one flaky fetch (retries inside max_tries) and
     // a cross-page duplicate (id 101 appears on both pages)
     def post(id: Long, video: Boolean, ts: Long): String =
@@ -310,7 +310,7 @@ class PipelineSpec extends SparkSpec {
       try new ProcessBuilder("python3", "-c", "import numpy").start().waitFor() == 0
       catch { case _: Exception => false }
     assume(canRun, "python3 + numpy not available")
-    val path = Files.createTempDirectory("graft-npy").resolve("m.npy").toString
+    val path = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-npy")).resolve("m.npy").toString
     graft.pipeline.NpyIo.writeFloat32Matrix(path,
       Array(Array(1.5f, -2.25f, 0f), Array(3f, 4.125f, -5f)))
     val p = new ProcessBuilder("python3", "-c",
@@ -324,7 +324,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("unconfigured image fetcher fails every item — never fabricates images") {
-    val root = Files.createTempDirectory("graft-pipe-unconf").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-unconf")
     val posts = Seq((5L, "sc5", "t5")).toDF("id", "shortcode", "thumbnail_src")
       .withColumn("scrape_image", lit(true))
     // minimal preprocessed-shaped CSV: only the columns the stage reads
@@ -351,7 +351,7 @@ class PipelineSpec extends SparkSpec {
   test("a budget-exhausted partial scrape fails loudly and resumes from the persisted cursor") {
     import graft.pipeline.Stages
     import graft.sources.FeedPager
-    val root = Files.createTempDirectory("graft-pipe-resume").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-resume")
     def post(id: Long): String =
       s"""{"id": $id, "shortcode": "sc$id", "type": "GraphImage",
          | "is_video": false, "likes": 1, "comments": 1,
@@ -401,7 +401,7 @@ class PipelineSpec extends SparkSpec {
 
   test("a throwing stage becomes a failed row; later stages still run; exit non-zero") {
     import graft.operators.Multimodal
-    val root = Files.createTempDirectory("graft-pipe-fail").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-fail")
     Files.createDirectories(Paths.get(s"$root/imgs"))
     Files.write(Paths.get(s"$root/imgs/a.png"), Multimodal.syntheticImage(7L))
     val cfgJson =
@@ -441,7 +441,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("missing input is reported, not fatal") {
-    val root = Files.createTempDirectory("graft-pipe2").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe2")
     Files.writeString(Paths.get(s"$root/config.json"), configJson)
     val cfg = Pipeline.loadConfig(s"$root/config.json")
     val summary = Pipeline.run(spark, root, cfg)
@@ -451,7 +451,7 @@ class PipelineSpec extends SparkSpec {
 
   test("labeler honors limit (sorted-name subset) and print_only (no table)") {
     import graft.pipeline.Stages
-    val root = Files.createTempDirectory("graft-pipe-label").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-label")
     val imgDir = s"$root/images"
     Files.createDirectories(Paths.get(imgDir))
     for (id <- Seq(5L, 3L, 9L))
@@ -472,7 +472,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("unknown stage params warn on stderr with the known set") {
-    val root = Files.createTempDirectory("graft-pipe-warn").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-warn")
     writeFixture(root)
     val cfg =
       """{"dataset_name": "Lens_Louvre", "stages": [
@@ -496,7 +496,7 @@ class PipelineSpec extends SparkSpec {
   test("a corrupt feed-pager state file fails with an actionable error") {
     import graft.pipeline.Stages
     import graft.sources.FeedPager
-    val root = Files.createTempDirectory("graft-pipe-state").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-state")
     val landing = Paths.get(s"$root/_scrape/hashtag-golf")
     Files.createDirectories(landing)
     // a crash mid-write used to leave exactly this: a truncated file
@@ -533,7 +533,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exploratory fan-out: staging promotes all-or-nothing") {
     import graft.pipeline.Pipeline.ExploratoryAnalysisStage
-    val root = Files.createTempDirectory("graft-pipe-staging").toString
+    val root = graft.queries.Dsl.tempDir("graft-pipe-staging")
     val ok = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
     // a frame that fails at EXECUTION time (assert_true trips per row),
     // after planning succeeds — the shape of a mid-write analysis failure
@@ -554,5 +554,23 @@ class PipelineSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s"$root/analysis/one")))
     assert(Files.exists(Paths.get(s"$root/analysis/two")))
     assert(!Files.exists(Paths.get(s"$root/analysis._staging")))
+  }
+
+  test("exploratory runs release their cached frame") {
+    // the reference config's preprocess → explore chain, translation off
+    val config = configJson.replace(
+      "\"posts_translated.csv\", \"enabled\": true", "\"posts_translated.csv\", \"enabled\": false")
+    // only this test's frames: other suites' lazily cached frames may
+    // materialize while it runs
+    def cached = spark.sparkContext.getPersistentRDDs.values.filter(_.toString.contains("graft-pipe-cache"))
+    for (i <- 1 to 2) {
+      val root = graft.queries.Dsl.tempDir(s"graft-pipe-cache$i")
+      writeFixture(root)
+      Files.writeString(Paths.get(s"$root/config.json"), config)
+      val summary = Pipeline.run(spark, root, Pipeline.loadConfig(s"$root/config.json"))
+        .select("stage", "status").as[(String, String)].collect().toMap
+      assert(summary("Exploratory Analysis") == "ok" && summary("Translation") == "disabled", summary)
+    }
+    assert(cached.isEmpty, cached.mkString("\n"))
   }
 }

@@ -128,7 +128,7 @@ class PlanSpec extends SparkSpec {
     // the SURVEY §4 layout lever: facts written partitioned by a coarse
     // time key are read with PartitionFilters, so a day-scoped query
     // never opens the other days' files at any corpus size
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = graft.queries.Dsl.tempDir("graft-part")
     Tables.events(spark, sf)
       .withColumn("day", org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("ts")))

@@ -88,7 +88,7 @@ class PostExtractSpec extends SparkSpec {
     spark.read.schema(Schemas.postJson).json(Seq(fullPost, minimalPost).toDS)
 
   test("readPostJsons: a landing DIRECTORY scans onto the same frame as inline JSON") {
-    val dir = java.nio.file.Files.createTempDirectory("postjsons").toString
+    val dir = graft.queries.Dsl.tempDir("postjsons")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "a.json"), fullPost)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "b.json"), minimalPost)
     val viaDir = PostExtract.flattenPosts(PostExtract.readPostJsons(spark, dir), "s")
@@ -135,7 +135,7 @@ class PostExtractSpec extends SparkSpec {
 
   test("JSON sink round-trips post_metadata (S8)") {
     val out = PostExtract.flattenPosts(postsDf, "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString + "/meta"
+    val dir = graft.queries.Dsl.tempDir("graft-json") + "/meta"
     out.write.json(dir)
     val back = spark.read.schema(out.schema).json(dir)
     assert(back.count() == out.count())

@@ -13,7 +13,8 @@ class ProfileSpec extends SparkSpec {
       assert(r.constructS + r.planS + r.execS <= r.warmS, s"$gate: $r")
       assert(r.plan.contains("== Physical Plan =="), s"$gate: ${r.plan}")
       val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.json)
-      assert(json.get("rows").asLong == r.rows && json.get("jobs").asInt == r.capture.jobs, r.json)
+      assert(json.get("rows").asLong == r.rows && json.get("jobs").asInt == r.capture.jobs &&
+        json.get("codegen_compiles").asLong == r.capture.codegenCompiles, r.json)
       if (gate == "e19_ivfpq_stored") {
         spark.catalog.clearCache()
         val warm = Capture.during(spark)(Eval.forcedCount(SparkEntry.queries(gate)(spark, sf)))._2

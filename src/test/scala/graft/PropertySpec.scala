@@ -781,7 +781,7 @@ class PropertySpec extends SparkSpec {
     val allDays = base.select("day").distinct().count()
     assert(allDays > 3)
     def writeLake(mode: String): Long = {
-      val lake = java.nio.file.Files.createTempDirectory("io10_spec").toString + "/lake"
+      val lake = graft.queries.Dsl.tempDir("io10_spec") + "/lake"
       base.repartition(col("day")).write.mode("overwrite").partitionBy("day").parquet(lake)
       val batch = base.filter(col("day").isin("2024-01-05", "2024-01-06", "2024-01-07"))
       val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -809,7 +809,7 @@ class PropertySpec extends SparkSpec {
     val base = Tables.events(spark, dir)
       .select(to_date(col("ts")).cast("string").as("day"), col("event_id"))
     val allDays = base.select("day").distinct().count()
-    val lake = java.nio.file.Files.createTempDirectory("io10_opt").toString + "/lake"
+    val lake = graft.queries.Dsl.tempDir("io10_opt") + "/lake"
     base.repartition(col("day")).write.mode("overwrite").partitionBy("day").parquet(lake)
     val batch = base.filter(col("day") === "2024-01-05")
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -906,7 +906,7 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Similarity
     val dir = "/root/testdata/sf0.001"
     val emb = Tables.embeddings(spark, dir)
-    val store = java.nio.file.Files.createTempDirectory("e19_spec").toString + "/index"
+    val store = graft.queries.Dsl.tempDir("e19_spec") + "/index"
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
     val curve = Similarity.knnIvfPqAdcCurve(emb, "vec_id", "embedding",
@@ -1063,7 +1063,7 @@ class PropertySpec extends SparkSpec {
 
   test("streaming CMS merge is additive and redelivery-idempotent (sm09)") {
     import graft.streaming.StreamSketch
-    val base = java.nio.file.Files.createTempDirectory("cms_spec")
+    val base = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("cms_spec"))
     val streamed = base.resolve("streamed").toString
     val onepass = base.resolve("onepass").toString
     val all = (1 to 600).map(i => s"k${(i * i) % 53}")
@@ -1093,7 +1093,7 @@ class PropertySpec extends SparkSpec {
     */
   test("sm09 compaction folds committed batches into the base slice; merge and redelivery unchanged") {
     import graft.streaming.StreamSketch
-    val root = java.nio.file.Files.createTempDirectory("cms_compact")
+    val root = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("cms_compact"))
     val store = root.resolve("store").toString
     val all = (1 to 900).map(i => s"k${(i * 7) % 41}")
     val slices = all.grouped(300).toSeq // batches 0, 1, 2
@@ -1134,7 +1134,7 @@ class PropertySpec extends SparkSpec {
   test("sm09 compaction recovery converges from both crash states without dropping cells") {
     import graft.streaming.StreamSketch
     def build(): (String, Set[(Int, Long, Long)]) = {
-      val store = java.nio.file.Files.createTempDirectory("cms_crash")
+      val store = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("cms_crash"))
         .resolve("store").toString
       (0 to 2).foreach { id =>
         StreamSketch.mergeBatch(
@@ -1332,7 +1332,7 @@ class PropertySpec extends SparkSpec {
     for (t <- 1 to 3)
       rows += ((22L + 25 * t, block(0, 0.4f, Map(3 -> 0.7f))))
     val emb = rows.toSeq.toDF("vec_id", "embedding")
-    val store = java.nio.file.Files.createTempDirectory("e24_fix")
+    val store = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("e24_fix"))
       .toString + "/index"
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
@@ -1498,7 +1498,7 @@ class PropertySpec extends SparkSpec {
   test("x23 forget: codes purged exactly, idempotent, emptied cluster dir dropped, unretrievable") {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
-    val store = java.nio.file.Files.createTempDirectory("x23spec").toString
+    val store = graft.queries.Dsl.tempDir("x23spec")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
@@ -1533,7 +1533,7 @@ class PropertySpec extends SparkSpec {
   test("e28 filtered ANN: all-pass filter ≡ unfiltered; strict filter excludes every ineligible id") {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
-    val store = java.nio.file.Files.createTempDirectory("e28spec").toString
+    val store = graft.queries.Dsl.tempDir("e28spec")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
@@ -1561,11 +1561,11 @@ class PropertySpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val isBatch = col("vec_id") >= 12 && col("vec_id") % 7 === 3
-    val incr = java.nio.file.Files.createTempDirectory("e29incr").toString
+    val incr = graft.queries.Dsl.tempDir("e29incr")
     Similarity.buildIvfPqStore(emb.filter(!isBatch), "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, incr)
     Similarity.admitIvfPqBatch(spark, incr, emb.filter(isBatch), "vec_id", "embedding", 1L)
-    val full = java.nio.file.Files.createTempDirectory("e29full").toString
+    val full = graft.queries.Dsl.tempDir("e29full")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, full)
     def rows(s: String) = spark.read.parquet(s"$s/codes")
@@ -1645,7 +1645,7 @@ class PropertySpec extends SparkSpec {
 
   test("w12 MAD flags a planted outlier day and nothing else on a quiet series") {
     // synthetic events table: 29 quiet days + one 10× day
-    val dir = java.nio.file.Files.createTempDirectory("w12spec").toString
+    val dir = graft.queries.Dsl.tempDir("w12spec")
     val rows = (0 until 30).flatMap { d =>
       val ts = Timestamp.valueOf(f"2025-03-${d + 1}%02d 12:00:00")
       val v = if (d == 17) 1000.0 else 10.0 + (d % 5)
@@ -1664,7 +1664,7 @@ class PropertySpec extends SparkSpec {
 
   test("sm10 mixture store: redelivered batch replaces its slice; TV is 0 for identical batches") {
     import graft.streaming.StreamMixture
-    val store = java.nio.file.Files.createTempDirectory("sm10spec").toString
+    val store = graft.queries.Dsl.tempDir("sm10spec")
     val b0 = Seq("a", "a", "b").toDF("k")
     val b1 = Seq("a", "a", "b").toDF("k")
     StreamMixture.mergeBatch(b0, 0L, "k", store)
@@ -1759,7 +1759,7 @@ class PropertySpec extends SparkSpec {
   test("w13 CUSUM: prefix-min closed form ≡ the sequential recursion; sustained drift alarms") {
     // 20 quiet days then a sustained +35% shift — the change CUSUM is
     // for (no single day is a spike; the drift accumulates)
-    val dir = java.nio.file.Files.createTempDirectory("w13spec").toString
+    val dir = graft.queries.Dsl.tempDir("w13spec")
     val rows = (0 until 30).map { d =>
       val ts = Timestamp.valueOf(f"2025-05-${d + 1}%02d 09:00:00")
       val v = if (d < 20) 100.0 + (d % 3) else 135.0 + (d % 3)
@@ -1796,11 +1796,11 @@ class PropertySpec extends SparkSpec {
     // and the donor id failed it, which is the boundary made visible.)
     val del = emb.filter(col("vec_id") % 10 === 7 && col("vec_id") >= 12)
       .select("vec_id")
-    val purged = java.nio.file.Files.createTempDirectory("e30purged").toString
+    val purged = graft.queries.Dsl.tempDir("e30purged")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, purged)
     Similarity.forgetFromIvfPqStore(spark, purged, del)
-    val fresh = java.nio.file.Files.createTempDirectory("e30fresh").toString
+    val fresh = graft.queries.Dsl.tempDir("e30fresh")
     Similarity.buildIvfPqStore(
       emb.join(del.withColumnRenamed("vec_id", "__d"),
         col("vec_id") === col("__d"), "left_anti"),
@@ -1814,7 +1814,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("t38: crafted mono/mixed docs get the exact verdict; ties break lexicographically") {
-    val dir = java.nio.file.Files.createTempDirectory("t38spec").toString
+    val dir = graft.queries.Dsl.tempDir("t38spec")
     def doc(id: Long, text: String) = (id, text, "x", "src0", text.length.toLong)
     Seq(
       doc(1L, Seq.fill(40)("data").mkString(" ")),               // 2 chunks, pure datish
@@ -1881,7 +1881,7 @@ class PropertySpec extends SparkSpec {
     val edges = (1 to 90).map { _ =>
       (r.nextInt(120).toLong, r.nextInt(120).toLong)
     }.filter(e => e._1 != e._2).distinct
-    val store = java.nio.file.Files.createTempDirectory("g15spec").toString
+    val store = graft.queries.Dsl.tempDir("g15spec")
     // admit in 4 random batches, compacting mid-stream
     val batches = edges.zipWithIndex.groupBy(_._2 % 4).toSeq.sortBy(_._1)
       .map(_._2.map(_._1))
@@ -1916,9 +1916,10 @@ class PropertySpec extends SparkSpec {
     // monotonicity fence (ADVICE r12): a NEVER-admitted id behind the
     // ledger's high watermark is the out-of-order misconfiguration —
     // its rows could never win max-version resolution; refuse loudly
-    IncrementalComponents.admitEdges(spark, s"${store}2", Seq((1L, 2L)).toDF("a", "b"), 5L)
+    val fenced = graft.queries.Dsl.tempDir("g15spec")
+    IncrementalComponents.admitEdges(spark, fenced, Seq((1L, 2L)).toDF("a", "b"), 5L)
     val err = intercept[IllegalArgumentException] {
-      IncrementalComponents.admitEdges(spark, s"${store}2", Seq((3L, 4L)).toDF("a", "b"), 3L)
+      IncrementalComponents.admitEdges(spark, fenced, Seq((3L, 4L)).toDF("a", "b"), 3L)
     }
     assert(err.getMessage.contains("monotonically increasing"))
     // crash shapes: pending-without-marker is discarded (live intact);
@@ -1971,7 +1972,7 @@ class PropertySpec extends SparkSpec {
 
   test("g15 admission is bounded: lookup broadcasts the batch side; relabel scan partition-prunes to losing lbuckets") {
     import graft.operators.IncrementalComponents
-    val store = java.nio.file.Files.createTempDirectory("g15plan").toString
+    val store = graft.queries.Dsl.tempDir("g15plan")
     // two components whose labels will merge: 10—11—12 and 40—41—42,
     // then a bridge 12—40 relabels 40's members to label 10
     IncrementalComponents.admitEdges(spark, store,
@@ -1996,7 +1997,7 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("ledgerspec").toString
+    val store = graft.queries.Dsl.tempDir("ledgerspec")
     // the resident corpus is vec_id >= 100, so the model-param picks
     // must come from inside it (an 8..12 pred would select ZERO
     // centroids and build an unreadable empty store)
@@ -2028,7 +2029,7 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("forgetcrash").toString
+    val store = graft.queries.Dsl.tempDir("forgetcrash")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
     val intact = spark.read.parquet(s"$store/codes").collect().map(_.toSeq).toSet
@@ -2062,7 +2063,7 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def build() = {
-      val store = java.nio.file.Files.createTempDirectory("forgetsizes").toString
+      val store = graft.queries.Dsl.tempDir("forgetsizes")
       Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
         col("id") >= 8 && col("id") < 12, col("id") < 8, store)
       store
@@ -2090,7 +2091,7 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("e31spec").toString
+    val store = graft.queries.Dsl.tempDir("e31spec")
     Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
     val before = Similarity.ivfPqClusterSizes(spark, store)
@@ -2141,8 +2142,8 @@ class PropertySpec extends SparkSpec {
 
   test("sm10 retention: dropBefore removes old slices; report over survivors equals a survivors-only store") {
     import graft.streaming.StreamMixture
-    val a = java.nio.file.Files.createTempDirectory("sm10retA").toString
-    val b = java.nio.file.Files.createTempDirectory("sm10retB").toString
+    val a = graft.queries.Dsl.tempDir("sm10retA")
+    val b = graft.queries.Dsl.tempDir("sm10retB")
     val slices = Seq(
       0L -> Seq("a", "a", "b"), 1L -> Seq("a", "b", "b"), 2L -> Seq("b", "b", "b"))
     slices.foreach { case (id, ks) =>

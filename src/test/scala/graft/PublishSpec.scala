@@ -13,7 +13,7 @@ class PublishSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshRoot() =
-    java.nio.file.Files.createTempDirectory("publish-spec").toString + "/lake"
+    graft.queries.Dsl.tempDir("publish-spec") + "/lake"
 
   test("publish is versioned and the snapshot is exactly the committed batches") {
     val root = freshRoot()
@@ -66,8 +66,7 @@ class PublishSpec extends SparkSpec {
 
   test("readIncrement: processed-state + increment reconstructs the snapshot exactly") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("pub_incr").toString + "/lake"
+    val root = graft.queries.Dsl.tempDir("pub_incr") + "/lake"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang")
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =

@@ -19,7 +19,7 @@ class SourcesSpec extends SparkSpec {
 
   test("FeedPager pages through cursors with retries and lands scannable JSON") {
     import graft.sources.FeedPager
-    val dir = java.nio.file.Files.createTempDirectory("graft-feed").toString
+    val dir = graft.queries.Dsl.tempDir("graft-feed")
     var calls = 0
     // 3 pages; every first attempt per cursor fails (retry needed)
     def fetch(cursor: Option[String]): Either[String, FeedPager.Page] = {
@@ -51,7 +51,7 @@ class SourcesSpec extends SparkSpec {
 
   test("FeedPager aborts resumably when the retry budget is exhausted") {
     import graft.sources.FeedPager
-    val dir = java.nio.file.Files.createTempDirectory("graft-feed2").toString
+    val dir = graft.queries.Dsl.tempDir("graft-feed2")
     val st = FeedPager.run(dir, FeedPager.initialState, maxPages = 5, maxTries = 2) {
       _ => Left("down")
     }

@@ -82,7 +82,7 @@ object CrashFs {
   */
 class StagedCommitSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val base = Files.createTempDirectory("stagedcommit").toRealPath()
+  private lazy val base = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("stagedcommit")).toRealPath()
 
   /** A child session whose "file" scheme is [[CrashFs]], uncached so
     * every filesystem lookup sees this session's conf.

@@ -20,7 +20,7 @@ class StoreReadSpec extends SparkSpec {
     * short documents over a 40-word vocabulary.
     */
   private lazy val sf: String = {
-    val dir = java.nio.file.Files.createTempDirectory("sr_data").toString
+    val dir = graft.queries.Dsl.tempDir("sr_data")
     val rnd = new scala.util.Random(7)
     (0L until 200L).map(i => (i, Seq.fill(64)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
@@ -30,7 +30,7 @@ class StoreReadSpec extends SparkSpec {
   }
 
   private def tmpStore(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
+    graft.queries.Dsl.tempStore(prefix)
 
   private def same(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
@@ -74,7 +74,7 @@ class StoreReadSpec extends SparkSpec {
   }
 
   test("an empty dir, a missing one, and a file without Spark metadata read like spark.read.parquet") {
-    val empty = java.nio.file.Files.createTempDirectory("sr_empty").toString
+    val empty = graft.queries.Dsl.tempDir("sr_empty")
     val missing = s"$empty/absent"
     for (d <- Seq(empty, missing))
       assert(failure(StoreRead.parquet(spark, d)) == failure(spark.read.parquet(d)), d)
@@ -85,7 +85,7 @@ class StoreReadSpec extends SparkSpec {
     import org.apache.parquet.schema.MessageTypeParser
     val schema = MessageTypeParser.parseMessageType(
       "message m { required int64 id; optional binary name (UTF8); }")
-    val plainDir = java.nio.file.Files.createTempDirectory("sr_plain").toString
+    val plainDir = graft.queries.Dsl.tempDir("sr_plain")
     val conf = spark.sessionState.newHadoopConf()
     val w = ExampleParquetWriter.builder(
         HadoopOutputFile.fromPath(new Path(s"$plainDir/part-0.parquet"), conf))

@@ -18,8 +18,7 @@ class StreamNearDupSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val table = "sm08_band_idx"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("sm08_out").toString + "/admitted"
+    val outDir = graft.queries.Dsl.tempDir("sm08_out") + "/admitted"
 
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -43,8 +42,7 @@ class StreamNearDupSpec extends SparkSpec {
       }
 
     // flat-store twin over the SAME batch sequence — x08's backfill rule
-    val flatStore = java.nio.file.Files
-      .createTempDirectory("sm08_flat").toString + "/idx"
+    val flatStore = graft.queries.Dsl.tempDir("sm08_flat") + "/idx"
     val expected = batches.zipWithIndex.map { case (b, i) =>
       i.toLong -> IncrementalNearDup.dedupeBatch(
         b.toDF("doc_id", "text"), "doc_id", "text", flatStore)
@@ -109,8 +107,7 @@ class StreamNearDupSpec extends SparkSpec {
     val table = "sm08_guard_idx"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_compacting")
-    val out = java.nio.file.Files
-      .createTempDirectory("sm08_guard").toString + "/admitted"
+    val out = graft.queries.Dsl.tempDir("sm08_guard") + "/admitted"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val b0 = docs.filter(col("doc_id") % 3 === 0)

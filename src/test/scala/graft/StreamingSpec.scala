@@ -66,7 +66,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the file stream source needs a directory; testdata is one file
     val src = java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet")
-    val dirP = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dirP = java.nio.file.Paths.get(graft.queries.Dsl.tempDir("graft-stream"))
     java.nio.file.Files.copy(src, dirP.resolve("events.parquet"))
     val dir = dirP.toString
     val schema = spark.read.parquet(dir).schema
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Upsert
     import java.nio.file.{Files, Paths}
     implicit val ctx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-cdc").toString
+    val root = graft.queries.Dsl.tempDir("graft-cdc")
     val snap = s"$root/snap"
     val keys = Seq("user_id", "event_type")
     val version = Seq("ts", "event_id")

@@ -40,7 +40,7 @@ class TranslationJobSpec extends SparkSpec {
   import spark.implicits._
 
   test("killed run checkpoints batches; resume re-translates only the lost tail") {
-    val stateDir = Files.createTempDirectory("graft-trans").toString
+    val stateDir = graft.queries.Dsl.tempDir("graft-trans")
     // every row is streamish → every row needs a service call to 'datish'
     val input = (1 to 250).map(i => (i.toLong, s"stream batch value v$i"))
       .toDF("id", "text").repartition(4)
@@ -76,7 +76,7 @@ class TranslationJobSpec extends SparkSpec {
   }
 
   test("a retried task never re-sends flushed rows to the service") {
-    val stateDir = Files.createTempDirectory("graft-trans-retry").toString
+    val stateDir = graft.queries.Dsl.tempDir("graft-trans-retry")
     // one partition; every row needs the service; flush after every row
     // (checkpointEvery=1, serviceBatch=1) so the failing attempt has
     // nothing in flight when it dies — the strongest exactly-once claim
@@ -105,7 +105,7 @@ class TranslationJobSpec extends SparkSpec {
   }
 
   test("target-language and empty rows short-circuit without service calls") {
-    val stateDir = Files.createTempDirectory("graft-trans2").toString
+    val stateDir = graft.queries.Dsl.tempDir("graft-trans2")
     val input = Seq(
       (1L, "data row column table"), // datish score 1.0 > 0.9 → identity
       (2L, ""),                      // empty sentinel → ""
@@ -123,7 +123,7 @@ class TranslationJobSpec extends SparkSpec {
   }
 
   test("Translator seam: a batched endpoint drops in; service calls arrive batched") {
-    val stateDir = Files.createTempDirectory("graft-trans3").toString
+    val stateDir = graft.queries.Dsl.tempDir("graft-trans3")
     // 10 needy rows + 1 short-circuit row, one partition
     val input = ((1 to 10).map(i => (i.toLong, s"stream batch value v$i")) :+
       (99L, "data row column table")).toDF("id", "text").repartition(1)
@@ -186,7 +186,7 @@ class TranslationJobSpec extends SparkSpec {
       val oversized = "x" * 300 // over the cap → "<error>", never on the wire
       val input = ((1 to 60).map(i => (i.toLong, s"stream batch value nummer $i")) :+
         (61L -> oversized)).toDF("id", "text").repartition(3)
-      val stateDir = Files.createTempDirectory("graft-trans-http").toString
+      val stateDir = graft.queries.Dsl.tempDir("graft-trans-http")
       Enrich.TranslationLimiter.reset()
       Enrich.HttpPacer.reset()
       val out = Enrich.runTranslationJob(input, stateDir, "id", "text", "text_en",

@@ -25,8 +25,7 @@ class UpsertStreamSpec extends SparkSpec {
 
   test("three micro-batches evolve the store; final state = one backfill compaction") {
     implicit val ctx = spark.sqlContext
-    val store = java.nio.file.Files
-      .createTempDirectory("ups_stream").toString + "/snap"
+    val store = graft.queries.Dsl.tempDir("ups_stream") + "/snap"
     val mem = MemoryStream[Event]
     val q = mem.toDF()
       .writeStream
@@ -80,8 +79,7 @@ class UpsertStreamSpec extends SparkSpec {
   }
 
   test("vacuum keeps the newest committed versions, drops expired + orphans, idempotent") {
-    val store = java.nio.file.Files
-      .createTempDirectory("ups_vacuum").toString + "/snap"
+    val store = graft.queries.Dsl.tempDir("ups_vacuum") + "/snap"
     def versions: Set[String] = {
       import scala.jdk.CollectionConverters._
       val root = java.nio.file.Paths.get(store)
@@ -130,5 +128,34 @@ class UpsertStreamSpec extends SparkSpec {
     // it (could be a writer racing THIS pass) — spared again
     assert(StreamUpsert.vacuum(store, keepVersions = 1) == Seq("v00004"))
     assert(versions == Set("v00005", "v00007", "v", "v99999999999"))
+  }
+
+  test("a merge follows latestWins on ties, null versions and null keys, over several batches") {
+    val store = graft.queries.Dsl.tempStore("ups_ties")
+    val cols = Seq("k", "v", "p")
+    val batches = Seq(
+      // key 1: a tie inside the batch's own latest version is settled by
+      // the batch; null versions rank lowest; a null key is a key
+      Seq((Some(1L), Some(5L), "a"), (Some(2L), None, "b"), (None, Some(1L), "c"),
+        (Some(3L), Some(2L), "d"), (Some(3L), None, "e")),
+      // equal versions: the snapshot's row stays (key 1 and the null key);
+      // any version beats a null one (key 2); older rows lose (key 3)
+      Seq((Some(1L), Some(5L), "x"), (Some(2L), Some(0L), "y"), (None, Some(1L), "z"),
+        (Some(3L), Some(1L), "w"), (Some(4L), None, "n")),
+      Seq((Some(4L), None, "m"), (Some(2L), Some(7L), "q"), (Some(2L), Some(6L), "r")))
+      .map(_.toDF(cols: _*))
+    var expected = Option.empty[org.apache.spark.sql.DataFrame]
+    for (b <- batches) {
+      StreamUpsert.applyBatch(spark, store, b, Seq("k"), Seq("v"))
+      expected = Some(expected.fold(Upsert.compact(b, Seq("k"), Seq("v")))(
+        s => Upsert.latestWins(s, b, Seq("k"), Seq("v")))
+        .localCheckpoint())
+      val got = StreamUpsert.readSnapshot(spark, store).get
+      assert(got.exceptAll(expected.get).isEmpty && expected.get.exceptAll(got).isEmpty,
+        s"${got.collect().toSeq} vs ${expected.get.collect().toSeq}")
+    }
+    assert(StreamUpsert.readSnapshot(spark, store).get.as[(Option[Long], Option[Long], String)]
+      .collect().toSet == Set((Some(1L), Some(5L), "a"), (Some(2L), Some(7L), "q"),
+        (None, Some(1L), "c"), (Some(3L), Some(2L), "d"), (Some(4L), None, "n")))
   }
 }
