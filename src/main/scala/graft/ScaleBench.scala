@@ -674,8 +674,14 @@ object ScaleBench {
           .dedupeBatch(b, key, Seq(col("doc_id")), exactStore).count())
 
       val ndStore = queries.Dsl.tempStore(s"scale_x08_$t")
-      graft.operators.IncrementalNearDup
-        .dedupeBatch(docs, "doc_id", "text", ndStore).count()
+      // seeded the way the store grows, in micro-batches: dedupeBatch
+      // holds a batch on the driver (budgeted), and index-all appends
+      // every batch's band rows, so the seeded index is the same rows a
+      // single whole-corpus batch would write
+      val seedBatches = math.max(1L, (docs.count() + 19999L) / 20000L)
+      (0L until seedBatches).foreach(i => graft.operators.IncrementalNearDup
+        .dedupeBatch(docs.filter(pmod(col("doc_id"), lit(seedBatches)) === i),
+          "doc_id", "text", ndStore).count())
       val (ndSec, ndAdmitted) = timedBatches((b, _) =>
         graft.operators.IncrementalNearDup
           .dedupeBatch(b, "doc_id", "text", ndStore).count())

@@ -47,10 +47,11 @@ object IncrementalNearDup {
     *
     * The batch is collected once (O(batch), budgeted) and everything
     * after reads the driver's copy, so the batch lineage never re-runs:
-    * one job collects the batch, one signs it, one reads the index rows
-    * whose band keys the batch holds, one appends. The blocked-id set is
-    * settled on the driver BEFORE the append, so admissions never see the
-    * batch's own bands, and the admitted rows come back as a local frame.
+    * one job collects the batch, one signs it, one reads the index pairs
+    * whose band keys the batch holds (each task ships a pair once), one
+    * appends. The blocked-id set is settled on the driver BEFORE the
+    * append, so admissions never see the batch's own bands, and the
+    * admitted rows come back as a local frame.
     */
   def dedupeBatch(batch: DataFrame, idCol: String, textCol: String,
                   storeDir: String, shingleK: Int = 2, numPerms: Int = 16,
@@ -66,13 +67,13 @@ object IncrementalNearDup {
       s"dedupeBatch: > $MaxBatchRows band rows (docs × $bands bands) in one " +
         "batch — split it into smaller micro-batches")
     val idType = signed.schema("id").dataType
-    // (band_id, band_key) pairs the index already holds
-    val indexed = readIndex(spark, storeDir).fold(Set.empty[(Any, Any)]) { idx =>
-      Local.rows(idx.filter(Local.isIn(col("band_key"), signed.schema("band_key").dataType,
-          rows.map(_.get(2)))).select("band_id", "band_key"), MaxBatchRows)(
-        s"dedupeBatch: > $MaxBatchRows index rows share a band key with the " +
-          "batch — compact the index or split the batch")
-        .map(r => (r.get(0), r.get(1))).toSet
+    // (band_id, band_key) pairs the index already holds among the batch's
+    // keys: each task ships a pair once, however many index rows repeat it
+    val indexed = readIndex(spark, storeDir).fold(Set.empty[Any]) { idx =>
+      Local.values(idx.filter(Local.isIn(col("band_key"), signed.schema("band_key").dataType,
+          rows.map(_.get(2)))).select(struct("band_id", "band_key")), MaxBatchRows)(
+        s"dedupeBatch: > $MaxBatchRows indexed band keys in one batch — split it " +
+          "into smaller micro-batches")
     }
     // a band row is blocked by the index, or by a smaller id of this batch
     // in the same band (null ids never compare)
@@ -80,7 +81,7 @@ object IncrementalNearDup {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
     val blocked = rows.groupBy(r => (r.get(1), r.get(2))).valuesIterator.flatMap { band =>
       val ids = band.map(_.get(0)).filter(_ != null)
-      if (indexed((band.head.get(1), band.head.get(2)))) ids
+      if (indexed(Row(band.head.get(1), band.head.get(2)))) ids
       else ids.minByOption(toCatalyst)(order).toSeq.flatMap(first =>
         ids.filter(id => order.gt(toCatalyst(id), toCatalyst(first))))
     }.map(toCatalyst).toSet

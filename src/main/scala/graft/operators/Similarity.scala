@@ -483,25 +483,36 @@ object Similarity {
         .sortBy { case (d, gl, _) => (d, gl) }.map(_._3)
 
     /** [[encode]] on the coordinator, for batch-sized `(id, q)` rows: the
-      * same integer distances ([[sqDistLocal]], [[search]]'s routing) and
-      * the same ties (the lower g_id, then per subspace the lower c_id),
-      * so an admitted vector's code rows equal the ones a build over it
-      * writes (e29 pins it). A `q` of another width than the model's fails
+      * same integer distances ([[sqDistLocal]], [[search]]'s routing), the
+      * same ties (the lower g_id, then per subspace the lower c_id) and
+      * the same id semantics as encode's join of codes to assignments —
+      * null ids drop out, and the vectors one id names all take the
+      * cluster nearest to any of them — so an admitted vector's code rows
+      * equal the ones a build over it writes (e29 and PropertySpec's
+      * twin case pin it). A `q` of another width than the model's fails
       * here instead of encoding to null distances.
       */
     def encodeLocal(v: StoreRead.Resident): StoreRead.Resident = {
       val dims = cents.map(_._3.length).filter(_ > 0).distinct
       val bySub = words.groupBy(_._2)
-      val rows = v.rows.toSeq.flatMap { r =>
+      val vecs = v.rows.toSeq.filterNot(_.isNullAt(0)).map { r =>
         val qq = Option(r.getSeq[Long](1)).map(_.toArray).orNull
         require(qq != null && qq.length >= m * dsub && dims.forall(_ == qq.length),
           s"IVF-PQ encode: vector ${r.get(0)} has ${Option(qq).fold("no")(_.length.toString)} " +
             s"dims; the store's model encodes ${(dims :+ m * dsub).max}")
-        ranked(qq).headOption.toSeq.flatMap { cluster =>
+        (r.get(0), qq)
+      }
+      val byDist = Ordering.by[(Long, Long, Any), (Long, Long)](c => (c._1, c._2))
+      val cluster = vecs.flatMap { case (id, qq) =>
+        cents.map { case (gid, gl, gq) => (sqDistLocal(qq, gq), gl, gid: Any) }
+          .minOption(byDist).map(id -> _)
+      }.groupMapReduce(_._1)(_._2)(byDist.min)
+      val rows = vecs.flatMap { case (id, qq) =>
+        cluster.get(id).toSeq.flatMap { case (_, _, gid) =>
           (0L until m).flatMap(s => bySub.getOrElse(s, Nil)
             .map { case (cid, _, off, cqs) => (sqDistLocal(qq.slice(off, off + dsub), cqs), asLong(cid), cid) }
             .minByOption { case (d, cl, _) => (d, cl) }
-            .map { case (d, _, cid) => Row(r.get(0), s, cid, d, cluster) })
+            .map { case (d, _, cid) => Row(id, s, cid, d, gid) })
         }
       }
       StoreRead.Resident(StructType(Seq(v.schema.head.copy(name = "vec_id"),
@@ -702,16 +713,13 @@ object Similarity {
     recover(spark, store) // finish any half-installed mutation before reading
     val codes = StoreRead.parquet(spark, s"$store/codes")
     val idType = codes.schema("vec_id").dataType
-    val del = Local.rows(deleteIds.select(col(deleteIds.columns.head).cast(idType)), MaxLocalRows)(
+    val del = Local.values(deleteIds.select(col(deleteIds.columns.head).cast(idType)), MaxLocalRows)(
       s"forgetFromIvfPqStore: > $MaxLocalRows ids in one erasure — split it")
-      .map(_.get(0)).toSet
     def deleted = Local.isIn(col("vec_id"), idType, del)
-    // the clusters holding a deleted vector, read off its code rows:
-    // |ids| × m values at most
+    // the clusters holding a deleted vector, read off its code rows
     val clusterType = codes.schema("cluster").dataType
-    val affected = Local.rows(codes.filter(deleted).select("cluster"), MaxLocalRows)(
-      s"forgetFromIvfPqStore: > $MaxLocalRows code rows to erase — split the erasure")
-      .map(_.get(0)).distinct
+    val affected = Local.values(codes.filter(deleted).select("cluster"), MaxLocalRows)(
+      s"forgetFromIvfPqStore: > $MaxLocalRows clusters to rewrite — split the erasure")
     if (affected.isEmpty) return
     // survivors are staged from the live codes to a disjoint path (an
     // in-place dynamic overwrite would read the partitions it truncates)

@@ -125,6 +125,21 @@ class IngestBudgetSpec extends SparkSpec {
     c.getClass.getMethod("invalidateAll").invoke(c)
   }
 
+  test("index rows piled up under one band key put no ceiling on admission") {
+    import graft.operators.Dedup
+    val store = s"$dir/pileup"
+    val dup = Seq((9000L, "a b c d e f g h i j k l")).toDF("doc_id", "text")
+    // 1.1M index rows, every one under the same band key as `dup`
+    val key = Dedup.bandedSignatures(dup, "doc_id", "text", 2, 16, 8)
+      .filter(col("band_id") === 0).drop("id")
+    spark.range(0, 1100000, 1, 4).crossJoin(key)
+      .select(col("id"), col("band_id"), col("band_key")).write.parquet(store)
+    val batch = dup.unionByName(Seq((9001L, "m n o p q r s t u v w x")).toDF("doc_id", "text"))
+    val admitted = IncrementalNearDup.dedupeBatch(batch, "doc_id", "text", store)
+      .select("doc_id").as[Long].collect()
+    assert(admitted.toSeq == Seq(9001L))
+  }
+
   test("a micro-batch runs a pinned number of jobs and its classes stay cached for the next") {
     stores
     clearCodegenCache()

@@ -1591,6 +1591,32 @@ class PropertySpec extends SparkSpec {
     assert(rows(incr) == incrRows, "cleared ledger re-admit must restore the store")
   }
 
+  test("e29 twin: admission encodes a null id and an id naming two vectors as a build does") {
+    import graft.operators.Similarity
+    val rnd = new Random(29)
+    val base = (0L until 40L).map(i => i -> Seq.fill(64)(rnd.nextGaussian().toFloat))
+      .toDF("vec_id", "embedding")
+    // copies of centroids 8 and 9 under one id (they route to different
+    // clusters on their own), and a copy of vector 20 under a null id
+    val extra = base.filter(col("vec_id").isin(8L, 9L, 20L))
+      .select(when(col("vec_id") === 20L, lit(null).cast("long")).otherwise(lit(7000L)).as("vec_id"),
+        col("embedding"))
+    val incr = graft.queries.Dsl.tempDir("e29twin_incr")
+    val full = graft.queries.Dsl.tempDir("e29twin_full")
+    Similarity.buildIvfPqStore(base, "vec_id", "embedding",
+      col("id") >= 8 && col("id") < 12, col("id") < 8, incr)
+    Similarity.admitIvfPqBatch(spark, incr, extra, "vec_id", "embedding", 1L)
+    Similarity.buildIvfPqStore(base.unionByName(extra), "vec_id", "embedding",
+      col("id") >= 8 && col("id") < 12, col("id") < 8, full)
+    def rows(s: String) = spark.read.parquet(s"$s/codes")
+      .select("vec_id", "subspace", "code", "dist_q", "cluster")
+      .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val admitted = rows(incr).filter(_.startsWith("7000,"))
+    assert(admitted.size == 2 * 4, s"two vectors × 4 subspaces: $admitted")
+    assert(admitted.map(_.split(",").last).distinct.size == 1, s"one cluster per id: $admitted")
+    assert(rows(incr) == rows(full))
+  }
+
   test("e27 matryoshka: the full-width prefix is exact (recall 1.0); narrower prefixes bounded") {
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
