@@ -92,16 +92,6 @@ object IncrementalNearDup {
     local(docs.filter(d => d.isNullAt(id) || !blocked(toCatalyst(d.get(id)))), batch.schema)
   }
 
-  /** [[dedupeBatch]] against a BUCKETED index table — the layout lever
-    * for the flat store's 100 TB form: the index is a `bucketBy(band_key)` parquet table,
-    * so the per-batch collision join reads the corpus-sized side
-    * PRE-PARTITIONED — no exchange ever touches the index (PlanSpec
-    * pins it); only the O(batch) banded rows shuffle, to the bucket
-    * count. Same admission semantics as [[dedupeBatch]] (index-all,
-    * backfill-stable — the x18 gate reuses x08's oracle verbatim), and
-    * each batch's bands append into the same bucket layout, keeping
-    * files-per-bucket ∝ batches, never tasks×buckets.
-    */
   /** Finish a [[compactIndex]] swap that crashed between its DROP and
     * RENAME: the staged table is the complete compacted index. Called
     * by BOTH compactIndex and every admission — without the admission
@@ -216,6 +206,16 @@ object IncrementalNearDup {
       .find(_.getString(0) == "graft.maxBatchId")
       .flatMap(r => r.getString(1).toLongOption)
 
+  /** [[dedupeBatch]] against a BUCKETED index table — the layout lever
+    * for the flat store's 100 TB form: the index is a `bucketBy(band_key)` parquet table,
+    * so the per-batch collision join reads the corpus-sized side
+    * PRE-PARTITIONED — no exchange ever touches the index (PlanSpec
+    * pins it); only the O(batch) banded rows shuffle, to the bucket
+    * count. Same admission semantics as [[dedupeBatch]] (index-all,
+    * backfill-stable — the x18 gate reuses x08's oracle verbatim), and
+    * each batch's bands append into the same bucket layout, keeping
+    * files-per-bucket ∝ batches, never tasks×buckets.
+    */
   def dedupeBatchBucketed(batch: DataFrame, idCol: String, textCol: String,
                           table: String, shingleK: Int = 2, numPerms: Int = 16,
                           bands: Int = 8, buckets: Int = 16,

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.io.CsvIo
+import graft.io.{CsvIo, Overlap}
 import graft.operators.{Enrich, Exploratory, Preprocess}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
@@ -89,56 +89,31 @@ object Pipeline {
             datasetName: String): Unit = {
       val posts = CsvIo.readPreprocessed(spark, in)
       // analyze caches the frame; release it once every write has settled
-      try writeAnalyses(Exploratory.analyze(posts), out) finally posts.unpersist()
+      try writeAnalyses(spark, Exploratory.analyze(posts), out) finally posts.unpersist()
     }
 
     /** The fan-out sink: independent aggregate jobs off ONE cached frame,
-      * submitted concurrently (Spark's scheduler is thread-safe and fills
-      * executor slots across jobs) instead of paying |analyses| × serial
-      * job latency — the same wall-clock win on a 1000-executor cluster,
-      * where each small aggregate would otherwise leave the cluster idle
-      * between jobs. Each lands as the reference's one-CSV-per-analysis
+      * overlapped ([[Overlap]]) instead of paying |analyses| × serial job
+      * latency. Each lands as the reference's one-CSV-per-analysis
       * artifact (aggregates are small by construction).
       *
       * All CSVs land under a staging dir promoted (rename) only after
-      * EVERY future has settled: stage memoization trusts outputExists,
-      * so the output dir must never be visible half-populated — and a
-      * failed analysis must not leave sibling futures writing into the
-      * published path in the background.
+      * every write has succeeded: stage memoization trusts outputExists,
+      * so the output dir must never be visible half-populated.
       */
     private[graft] def writeAnalyses(
-        analyses: Map[String, DataFrame], out: String): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
+        spark: SparkSession, analyses: Map[String, DataFrame], out: String): Unit = {
       val staging = Paths.get(s"$out._staging")
       deleteTree(staging) // leftovers from a prior crash
-      val settled = analyses.toSeq.map { case (name, result) =>
-        Future(CsvIo.writeCsv(result, s"$staging/$name", singleFile = true))
-          .map(_ => name -> Option.empty[Throwable])
-          .recover { case scala.util.control.NonFatal(e) => name -> Some(e) }
-      }
-      val failures = Await.result(Future.sequence(settled), Duration.Inf)
-        .collect { case (name, Some(e)) => name -> e }
-      if (failures.nonEmpty) {
-        deleteTree(staging)
-        val (name, cause) = failures.head
-        throw new IllegalStateException(
-          s"exploratory analyses failed: ${failures.map(_._1).mkString(", ")} " +
-            s"(${failures.size}/${analyses.size}); first cause from '$name'", cause)
-      }
+      try Overlap.all(spark, "exploratory analyses")(analyses.toSeq.map { case (name, result) =>
+        name -> (() => CsvIo.writeCsv(result, s"$staging/$name", singleFile = true))
+      }) catch { case e: Throwable => deleteTree(staging); throw e }
       deleteTree(Paths.get(out)) // rerun with skip_if_exists=false overwrites
       Files.move(staging, Paths.get(out))
     }
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
+  private def deleteTree(p: java.nio.file.Path): Unit = org.apache.hadoop.fs.FileUtil.fullyDelete(p.toFile)
 
   /** The translation stage (ref: stages.py Translation entry,
     * Translator.py:50-65): translates `target_column` into
@@ -347,8 +322,8 @@ object Pipeline {
     * already exists, time each stage; returns the summary frame with the
     * reference's time-share column (orchestrator.py:59-65).
     *
-    * r14 (guide §2.6 job overlap): stages whose file hand-offs are
-    * independent run CONCURRENTLY — in pl02's config the three
+    * Stages whose file hand-offs are independent run concurrently, one
+    * [[Overlap]] branch each — in pl02's config the three
     * consumers of `posts_preprocessed.csv` and the image chain overlap
     * instead of paying serial wall-clock; pl01's two corpus stages
     * both read `docs` and overlap entirely. The sequential orchestrator's
@@ -364,9 +339,6 @@ object Pipeline {
     */
   def run(spark: SparkSession, rootDir: String, cfg: PipelineConfig,
           skipIfExists: Boolean = true): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     def runOne(st: StageConfig): StageResult = {
       val in = s"$rootDir/${st.input}"
       val out = s"$rootDir/${st.output}"
@@ -402,14 +374,19 @@ object Pipeline {
       }
     }
     val stages = cfg.stages.toIndexedSeq
-    val futures = new Array[Future[StageResult]](stages.size)
-    dependencies(stages).zipWithIndex.foreach { case (ds, i) =>
-      val deps = ds.map(futures(_))
-      futures(i) =
-        if (deps.isEmpty) Future(runOne(stages(i)))
-        else Future.sequence(deps).map(_ => runOne(stages(i)))
-    }
-    val results = futures.toSeq.map(f => Await.result(f, Duration.Inf))
+    val deps = dependencies(stages)
+    val finished = stages.map(_ => new java.util.concurrent.CountDownLatch(1))
+    // a throw (runOne turns NonFatal ones into rows) releases every stage
+    // still waiting, which then runs nothing: the call fails either way
+    val aborted = new java.util.concurrent.atomic.AtomicBoolean
+    val results = Overlap.all(spark, "pipeline")(stages.indices.map { i =>
+      stages(i).name -> { () =>
+        deps(i).foreach(finished(_).await())
+        try if (aborted.get) StageResult(stages(i).name, "aborted", 0.0) else runOne(stages(i))
+        catch { case e: Throwable => aborted.set(true); finished.foreach(_.countDown()); throw e }
+        finally finished(i).countDown()
+      }
+    })
     import spark.implicits._
     val total = math.max(results.map(_.seconds).sum, 1e-9)
     results.toDF()

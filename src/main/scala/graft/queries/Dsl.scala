@@ -66,16 +66,5 @@ object Dsl {
   private val tempDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val hookOnce: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val root = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.isDirectory(root)) {
-            val all = java.nio.file.Files.walk(root)
-            try all.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-            finally all.close()
-          }
-        } catch { case _: Throwable => () }
-      }))
+      tempDirs.forEach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))))
 }

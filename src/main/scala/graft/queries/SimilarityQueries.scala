@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.io.Overlap
 import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -1227,30 +1228,22 @@ object SimilarityQueries {
     // frame (the candidate scores are a subset of the truth leg's) —
     // results identical to independent maxSimTopK/maxSimTopKShortlist.
     // The max frame reads ONLY the corpus, never the store, so its
-    // materialization runs CONCURRENTLY with the store build + stored
-    // search of the shortlist leg (guide §2.6 job overlap) instead of
-    // serializing after them.
+    // materialization overlaps the store build + stored search of the
+    // shortlist leg instead of serializing after them.
     val p = Similarity.maxSimMaxFrame(emb, "vec_id", "embedding",
         docMod = 100, numQueryDocs = 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(p.count())
-    }
-    Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
-      col("id") >= NumCentroids && col("id") < NumCentroids + 4,
-      col("id") < NumCentroids, store)
-    val qTokens = emb.filter(pmod(col("vec_id"), lit(100)) < 2)
-    val short = Similarity.ivfPqStoredTopK(spark, store, qTokens,
-      "vec_id", "embedding", K, NProbe)
-    val cand = short.select(pmod(col("q_id"), lit(100)).as("qd"),
-        pmod(col("n_id"), lit(100)).as("cd"))
-      .filter(col("cd") =!= col("qd")).distinct()
-    locally {
-      import scala.concurrent.{Await, duration}
-      Await.result(pF, duration.Duration.Inf)
-    }
+    val Seq(_, cand) = Overlap.all(spark, "e26")(Seq(
+      "truth" -> { () => p.count(); p },
+      "shortlist" -> { () =>
+        Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
+          col("id") >= NumCentroids && col("id") < NumCentroids + 4,
+          col("id") < NumCentroids, store)
+        val qTokens = emb.filter(pmod(col("vec_id"), lit(100)) < 2)
+        Similarity.ivfPqStoredTopK(spark, store, qTokens, "vec_id", "embedding", K, NProbe)
+          .select(pmod(col("q_id"), lit(100)).as("qd"), pmod(col("n_id"), lit(100)).as("cd"))
+          .filter(col("cd") =!= col("qd")).distinct()
+      }))
     val truthFull = Similarity.maxSimTopFromMax(p, 5)
     val gotFull = Similarity.maxSimTopFromMax(
       p.join(broadcast(cand.select(col("qd"), col("cd"))), Seq("qd", "cd")), 5)
@@ -1568,30 +1561,25 @@ object SimilarityQueries {
        |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin) { (spark, dir) =>
     val store = Dsl.tempStore("e30_index")
     val emb = Tables.embeddings(spark, dir)
-    // the survivor-restricted brute truth reads only the corpus —
-    // materialize it concurrently with the store build + forget + stored
-    // search (guide §2.6 job overlap) instead of serializing after them
+    // the survivor-restricted brute truth reads only the corpus — its
+    // materialization overlaps the store build + forget + stored search
+    // instead of serializing after them
     val truth = Similarity.knnBrute(emb.filter(col("vec_id") % 10 =!= 7),
         "vec_id", "embedding", col("id") < NumQueries, K)
       .select("q_id", "n_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(truth.count())
-    }
-    Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
-      col("id") >= NumCentroids && col("id") < NumCentroids + 4,
-      col("id") < NumCentroids, store)
-    Similarity.forgetFromIvfPqStore(spark, store,
-      emb.filter(col("vec_id") % 10 === 7).select("vec_id"))
-    val cand = Similarity.ivfPqStoredTopK(spark, store,
-        emb.filter(col("vec_id") < NumQueries), "vec_id", "embedding", K, NProbe)
-      .select(col("q_id"), col("n_id"), lit(1).as("hit"))
-    locally {
-      import scala.concurrent.{Await, duration}
-      Await.result(tF, duration.Duration.Inf)
-    }
+    val Seq(_, cand) = Overlap.all(spark, "e30")(Seq(
+      "truth" -> { () => truth.count(); truth },
+      "search" -> { () =>
+        Similarity.buildIvfPqStore(emb, "vec_id", "embedding",
+          col("id") >= NumCentroids && col("id") < NumCentroids + 4,
+          col("id") < NumCentroids, store)
+        Similarity.forgetFromIvfPqStore(spark, store,
+          emb.filter(col("vec_id") % 10 === 7).select("vec_id"))
+        Similarity.ivfPqStoredTopK(spark, store,
+            emb.filter(col("vec_id") < NumQueries), "vec_id", "embedding", K, NProbe)
+          .select(col("q_id"), col("n_id"), lit(1).as("hit"))
+      }))
     truth.join(cand, Seq("q_id", "n_id"), "left")
       .groupBy("q_id")
       .agg(sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Det, GraftQuery, Tables}
 import graft.functions.TextFunctions._
-import graft.io.StoreRead
+import graft.io.{Overlap, StoreRead}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table: token statistics,
@@ -911,34 +911,25 @@ object TextQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dl = tfc.groupBy("doc_id").agg(sum("tf").as("dl"))
     // the three store dirs are independent outputs of the one persisted
-    // frame — submit them concurrently (guide §2.6, the buildIvfPqStore
-    // discipline) instead of paying three serial job latencies
-    val done = try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        // cluster rows by their target directory first: without it every
-        // write task opens a file in every bucket dir (tasks×buckets
-        // small files + committer overhead — measured ~2× on the build
-        // leg); with it, file count ∝ buckets. At 100 TB the same
-        // repartition is what bounds files-per-bucket.
-        Future(tfc.join(dl, "doc_id")
-          .withColumn("bucket", termBucket(col("term"), buckets))
-          .repartition(buckets, col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$store/postings")),
-        Future(tfc.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$store/terms")),
-        Future(dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("s_tokens"))
-          .withColumn("buckets", lit(buckets))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$store/stats")))
-      // await EVERY write before failing: a sibling still running would
-      // keep writing into the store after the caller saw the failure
-      writes.map(f => Await.ready(f, Duration.Inf).value.get)
-    } finally tfc.unpersist()
-    done.foreach(_.get)
+    // frame: they overlap instead of paying three serial job latencies
+    try Overlap.all(spark, "bm25BuildIndex")(Seq(
+      // cluster rows by their target directory first: without it every
+      // write task opens a file in every bucket dir (tasks×buckets
+      // small files + committer overhead — measured ~2× on the build
+      // leg); with it, file count ∝ buckets. At 100 TB the same
+      // repartition is what bounds files-per-bucket.
+      "postings" -> (() => tfc.join(dl, "doc_id")
+        .withColumn("bucket", termBucket(col("term"), buckets))
+        .repartition(buckets, col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$store/postings")),
+      "terms" -> (() => tfc.groupBy("term").agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$store/terms")),
+      "stats" -> (() => dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("s_tokens"))
+        .withColumn("buckets", lit(buckets))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$store/stats"))))
+    finally tfc.unpersist()
   }
 
   /** The online half of t21b: reads ONLY the store — one broadcast of

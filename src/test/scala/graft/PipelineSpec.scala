@@ -533,24 +533,52 @@ class PipelineSpec extends SparkSpec {
 
   test("exploratory fan-out: staging promotes all-or-nothing") {
     import graft.pipeline.Pipeline.ExploratoryAnalysisStage
+    val sc = spark.sparkContext
     val root = graft.queries.Dsl.tempDir("graft-pipe-staging")
     val ok = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
     // a frame that fails at EXECUTION time (assert_true trips per row),
     // after planning succeeds — the shape of a mid-write analysis failure
-    val boom = Seq(1L).toDF("x")
-      .select(expr("assert_true(x = 0)").cast("string").as("q"))
-    val e = intercept[IllegalStateException] {
-      ExploratoryAnalysisStage.writeAnalyses(
-        Map("good" -> ok, "bad" -> boom), s"$root/analysis")
+    // (a range, not a local Seq, which the optimizer would fold, failing
+    // the query while it plans)
+    def failing(x: org.apache.spark.sql.DataFrame) = x.select(expr("assert_true(x = 0)").cast("string").as("q"))
+    val boom = failing(spark.range(1, 2).toDF("x"))
+    // a healthy analysis still running when its sibling fails: its task
+    // runs until its job is cancelled (a minute at most), and the sibling
+    // fails only once that task has started (the latch is read from the
+    // companion inside the closures: a latch does not serialize)
+    val slow = spark.range(0, 4, 1, 4).select(udf { (x: Long) =>
+      PipelineSpec.slowStarted.countDown()
+      val (ctx, end) = (org.apache.spark.TaskContext.get, System.nanoTime() + 60000000000L)
+      while (!ctx.isInterrupted && System.nanoTime() < end) Thread.sleep(10)
+      x
+    }.apply(col("id")).as("id"))
+    val boomAfterSlow = failing(spark.range(1, 2).toDF("x").select(udf { (x: Long) =>
+      PipelineSpec.slowStarted.await(60, java.util.concurrent.TimeUnit.SECONDS); x
+    }.apply(col("x")).as("x")))
+    for ((analyses, row) <- Seq(Map("good" -> ok, "bad" -> boom),
+        Map("slow" -> slow, "bad" -> boomAfterSlow)).zipWithIndex) {
+      val group = s"graft-pipe-staging-$row"
+      sc.setJobGroup(group, "PipelineSpec")
+      val e = try intercept[IllegalStateException] {
+        ExploratoryAnalysisStage.writeAnalyses(spark, analyses, s"$root/analysis")
+      } finally sc.clearJobGroup()
+      assert(e.getMessage.contains("bad"), e.getMessage)
+      // NOTHING is published: no half-populated dir for memoization to
+      // trust, no staging leftovers for the next run to trip on
+      assert(!Files.exists(Paths.get(s"$root/analysis")))
+      assert(!Files.exists(Paths.get(s"$root/analysis._staging")))
+      if (analyses.contains("slow")) {
+        // the slow write's job ended cancelled, not finished
+        org.apache.spark.graftspark.ListenerFlush.flush(sc)
+        val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq.flatMap(sc.statusTracker.getJobInfo(_))
+        assert(jobs.nonEmpty && jobs.forall(_.status == org.apache.spark.JobExecutionStatus.FAILED),
+          jobs.map(_.status))
+        assert(e.getSuppressed.exists(_.getMessage.contains("cancelled")), e.getSuppressed.toSeq)
+      }
     }
-    assert(e.getMessage.contains("bad"), e.getMessage)
-    // NOTHING is published: no half-populated dir for memoization to
-    // trust, no staging leftovers for the next run to trip on
-    assert(!Files.exists(Paths.get(s"$root/analysis")))
-    assert(!Files.exists(Paths.get(s"$root/analysis._staging")))
     // the healthy path publishes every analysis atomically
     ExploratoryAnalysisStage.writeAnalyses(
-      Map("one" -> ok, "two" -> ok), s"$root/analysis")
+      spark, Map("one" -> ok, "two" -> ok), s"$root/analysis")
     assert(Files.exists(Paths.get(s"$root/analysis/one")))
     assert(Files.exists(Paths.get(s"$root/analysis/two")))
     assert(!Files.exists(Paths.get(s"$root/analysis._staging")))
@@ -573,4 +601,8 @@ class PipelineSpec extends SparkSpec {
     }
     assert(cached.isEmpty, cached.mkString("\n"))
   }
+}
+
+object PipelineSpec {
+  val slowStarted = new java.util.concurrent.CountDownLatch(1)
 }
