@@ -28,11 +28,18 @@ object Local {
   /** The rows of `df`, failing with `remedy` when there are more than
     * `max` of them.
     */
-  def rows(df: DataFrame, max: Int)(remedy: => String): Array[Row] = {
+  def rows(df: DataFrame, max: Int)(remedy: => String): Array[Row] =
+    atMost(df, max).getOrElse(throw new IllegalArgumentException(s"requirement failed: $remedy"))
+
+  /** The rows of `df`, or None when there are more than `max` of them
+    * (the job stops as soon as it has shipped more).
+    */
+  def atMost(df: DataFrame, max: Int): Option[Array[Row]] = {
     val out = mutable.ArrayBuffer.empty[InternalRow]
-    ship[InternalRow](df, max, remedy)(identity, out ++= _, out.size)
-    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-    out.iterator.map(r => toRow(r).asInstanceOf[Row]).toArray
+    Option.when(ship[InternalRow](df, max)(identity, out ++= _, out.size)) {
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      out.iterator.map(r => toRow(r).asInstanceOf[Row]).toArray
+    }
   }
 
   /** The distinct values of `df`'s first column (nulls dropped), as
@@ -43,23 +50,23 @@ object Local {
   def values(df: DataFrame, max: Int)(remedy: => String): Set[Any] = {
     val dt = df.schema.head.dataType
     val out = mutable.HashSet.empty[Any]
-    ship[Any](df.select(df.columns.head), max, remedy)(
-      _.filterNot(_.isNullAt(0)).map(_.get(0, dt)).distinct, out ++= _, out.size)
+    require(ship[Any](df.select(df.columns.head), max)(
+      _.filterNot(_.isNullAt(0)).map(_.get(0, dt)).distinct, out ++= _, out.size), remedy)
     val toScala = CatalystTypeConverters.createToScalaConverter(dt)
     out.iterator.map(toScala).toSet
   }
 
   /** One job over `df`: each task ships at most `max + 1` of `perTask`'s
     * values, `take` folds each task's values into the driver's copy as the
-    * task finishes, and the job fails with `remedy` once `held` passes
-    * `max`; results that arrive after that are dropped, so the driver
-    * never holds more than the budget plus one task's share.
+    * task finishes, and the job stops once `held` passes `max` (false);
+    * results that arrive after that are dropped, so the driver never
+    * holds more than the budget plus one task's share.
     */
-  private def ship[T: scala.reflect.ClassTag](df: DataFrame, max: Int, remedy: => String)(
+  private def ship[T: scala.reflect.ClassTag](df: DataFrame, max: Int)(
       perTask: Iterator[InternalRow] => Iterator[T],
-      take: Array[T] => Unit, held: => Int): Unit = {
+      take: Array[T] => Unit, held: => Int): Boolean = {
     val qe = df.queryExecution
-    val overBudget = new IllegalArgumentException(s"requirement failed: $remedy")
+    val overBudget = new IllegalArgumentException(s"more than $max rows")
     var over = false
     try SQLExecution.withNewExecutionId(qe, Some("Local.rows")) {
       val rdd = qe.toRdd
@@ -70,8 +77,9 @@ object Local {
           over = held > max
           if (over) throw overBudget
         })
+      true
     } catch {
-      case e: SparkException if e.getCause eq overBudget => throw overBudget
+      case e: SparkException if e.getCause eq overBudget => false
     }
   }
 

@@ -524,8 +524,9 @@ object Dedup {
     * budget (`localEdgeLimit` edges ≤ tens of MB on the driver — the same
     * size class Spark broadcasts for joins), path-compressed union-find
     * on the collected edges replaces the loop: exact same min-id labels,
-    * zero iterative shuffles. The count guard makes the bound ENFORCED,
-    * not advisory; above it the distributed loop runs. Candidate-pair
+    * zero iterative shuffles. The collect is one job that stops as soon as
+    * it passes the bound, so the bound is ENFORCED, not advisory; above it
+    * the distributed loop runs. Candidate-pair
     * graphs are usually tiny relative to the corpus (edges ≈ near-dups),
     * so most runs take the fast path even at large SF, while a 100 TB
     * worst case degrades gracefully to O(log d) shuffles instead of OOM.
@@ -582,8 +583,9 @@ object Dedup {
     // pipeline (LSH join + verify) would otherwise run once per side
     val edges = cut(pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst")))
+    val collected = graft.io.Local.atMost(edges, math.min(localEdgeLimit, Int.MaxValue - 1L).toInt)
+    if (collected.isDefined) return localComponents(edges.sparkSession, collected.get)
     val nEdges = edges.count()
-    if (nEdges <= localEdgeLimit) return localComponents(edges)
     if (nEdges <= streamEdgeLimit) {
       // probe-and-collect in ONE job: pull at most limit+1 distinct
       // vertex ids — if the limit+1'th exists the graph is beyond driver
@@ -658,10 +660,10 @@ object Dedup {
     * its component (a second pass over the roots), matching the
     * distributed loop's fixpoint exactly.
     */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def localComponents(spark: org.apache.spark.sql.SparkSession,
+                              edges: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
+    val es = edges.map(e => (e.getLong(0), e.getLong(1)))
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     val rank = scala.collection.mutable.HashMap.empty[Long, Int]
     def find(x: Long): Long = {

@@ -114,17 +114,6 @@ class IngestBudgetSpec extends SparkSpec {
       .map { case (n, c) => (n, c.jobs, c.codegenCompiles) }
   }
 
-  /** Empty Spark's codegen cache, so the first batch's count does not
-    * depend on which suites ran before this one in the JVM.
-    */
-  private def clearCodegenCache(): Unit = {
-    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val cache = gen.getClass.getDeclaredMethod("cache")
-    cache.setAccessible(true)
-    val c = cache.invoke(gen)
-    c.getClass.getMethod("invalidateAll").invoke(c)
-  }
-
   test("index rows piled up under one band key put no ceiling on admission") {
     import graft.operators.Dedup
     val store = s"$dir/pileup"
@@ -142,7 +131,7 @@ class IngestBudgetSpec extends SparkSpec {
 
   test("a micro-batch runs a pinned number of jobs and its classes stay cached for the next") {
     stores
-    clearCodegenCache()
+    SparkSpec.clearCodegenCache()
     val first = ingest(1)
     val second = ingest(2)
     val calls = first.map(_._1)

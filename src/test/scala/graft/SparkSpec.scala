@@ -28,4 +28,15 @@ object SparkSpec {
     // the first to cross it)
     .config("spark.sql.maxMetadataStringLength", "2000")
     .getOrCreate()
+
+  /** Empty Spark's codegen cache, so a count of generated classes does not
+    * depend on which suites ran before it in the JVM.
+    */
+  def clearCodegenCache(): Unit = {
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val cache = gen.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val c = cache.invoke(gen)
+    c.getClass.getMethod("invalidateAll").invoke(c)
+  }
 }
