@@ -77,12 +77,15 @@ object StagedCommit {
     }
   }
 
-  /** `text` at `path` or not at all: written to `path.tmp`, then renamed. */
+  /** `text` at `path` or not at all: written to `path.tmp`, then renamed.
+    * `path` must be absent (a marker is, once [[recover]] has run): a
+    * delete before the rename would leave neither copy if the rename
+    * never happened.
+    */
   def writeAtomic(fs: FileSystem, path: Path, text: String): Unit = {
     val tmp = tmpOf(path)
     val out = fs.create(tmp, true)
     try out.write(text.getBytes(UTF_8)) finally out.close()
-    fs.delete(path, false)
     if (!fs.rename(tmp, path)) throw new java.io.IOException(s"rename $tmp -> $path failed")
   }
 

@@ -18,10 +18,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * exactly as strong as "marker exists" for those ids, and
   * redelivery only ever hits the FRONTIER batch, whose marker
   * survives the fold. [[compact]] is crash-safe in the StreamSketch
-  * ordering: the watermark (which only ever grows) is swapped in via
-  * tmp+rename BEFORE any marker is deleted, so every crash state
-  * still answers `isAdmitted` correctly — at worst a folded marker
-  * lingers until the next fold.
+  * ordering: the watermark (which only ever grows) is swapped in BEFORE
+  * any marker is deleted, and the swap never leaves the ledger without
+  * one — the new value lands as `_upto.next` first, and the reader takes
+  * the larger of the two files — so every crash state still answers
+  * `isAdmitted` correctly; at worst a folded marker lingers until the
+  * next fold.
   */
 object AdmissionLedger {
 
@@ -29,21 +31,19 @@ object AdmissionLedger {
   private def marker(store: String, id: Long) =
     new Path(ledgerDir(store), s"batch=$id")
   private def uptoFile(store: String) = new Path(ledgerDir(store), "_upto")
+  private def uptoNext(store: String) = new Path(ledgerDir(store), "_upto.next")
 
   def fsOf(spark: SparkSession, store: String): FileSystem =
     ledgerDir(store).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Max folded batch id, or Long.MinValue if nothing folded yet. */
-  def upTo(fs: FileSystem, store: String): Long = {
-    val p = uptoFile(store)
-    if (!fs.exists(p)) Long.MinValue
-    else {
+  def upTo(fs: FileSystem, store: String): Long =
+    Seq(uptoFile(store), uptoNext(store)).filter(fs.exists).map { p =>
       val in = fs.open(p)
       try new String(org.apache.commons.io.IOUtils.toByteArray(in),
         java.nio.charset.StandardCharsets.UTF_8).trim.toLong
       finally in.close()
-    }
-  }
+    }.maxOption.getOrElse(Long.MinValue)
 
   /** Live (unfolded) marker ids. */
   def markerIds(fs: FileSystem, store: String): Seq[Long] = {
@@ -96,10 +96,22 @@ object AdmissionLedger {
     val frontier = ids.max
     val folded = ids.filter(_ < frontier)
     val newUpTo = math.max(upTo(fs, store), folded.max)
-    // watermark first, via tmp+rename (the only ordering where a crash
-    // can never un-admit a batch: markers are deleted only once the
-    // watermark covering them is durably in place)
-    graft.io.StagedCommit.writeAtomic(fs, uptoFile(store), newUpTo.toString)
+    // watermark first (the only ordering where a crash can never
+    // un-admit a batch: markers are deleted only once the watermark
+    // covering them is durably in place)
+    settle(fs, store)
+    graft.io.StagedCommit.writeAtomic(fs, uptoNext(store), newUpTo.toString)
+    settle(fs, store)
     folded.foreach(id => fs.delete(marker(store, id), true))
   }
+
+  /** Move a written `_upto.next` over `_upto`. Until the rename one of
+    * the two holds the newer value, so [[upTo]] never reads a fold undone.
+    */
+  private def settle(fs: FileSystem, store: String): Unit =
+    if (fs.exists(uptoNext(store))) {
+      fs.delete(uptoFile(store), false)
+      if (!fs.rename(uptoNext(store), uptoFile(store)))
+        throw new java.io.IOException(s"rename ${uptoNext(store)} -> ${uptoFile(store)} failed")
+    }
 }

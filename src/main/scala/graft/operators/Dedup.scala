@@ -500,6 +500,9 @@ object Dedup {
         expr("bit_count(x.sim ^ y.sim)").cast("long").as("hamming"))
   }
 
+  /** The streamed path's resident-state bound, in vertices. */
+  private val LocalVertexLimit = 8000000
+
   /** Connected components over an undirected pair list (id_a, id_b) —
     * the clustering step after near-dup pair generation: duplicates form
     * groups, the pipeline keeps one representative per group. Iterative
@@ -537,10 +540,10 @@ object Dedup {
     * the driver can hold the VERTEX arrays but not the edge list: stream
     * the edges partition-at-a-time (`toLocalIterator`) through an
     * index-compressed union-find (sorted vertex-id array + Int parents:
-    * ~13 B/vertex, ~100 MB at the 8M default). Engages when
+    * ~13 B/vertex, ~100 MB at 8M vertices). Engages when
     * `nEdges ≤ streamEdgeLimit` (driver pull throughput bound — edges
     * transit the driver once but are never held) AND
-    * `nVertices ≤ localVertexLimit` (resident-state bound). Same min-id
+    * `nVertices ≤` [[LocalVertexLimit]] (resident-state bound). Same min-id
     * labels as both other paths (OpsSpec pins the three-way agreement).
     * This is what keeps the near-dup graph of a 50M-doc corpus off the
     * iterative loop: 2M docs in dup groups is 2M vertices — driver-sized
@@ -569,8 +572,7 @@ object Dedup {
                           localEdgeLimit: Long = 2000000L,
                           checkpointDir: Option[String] = None,
                           onRound: (Int, Double) => Unit = (_, _) => (),
-                          streamEdgeLimit: Long = 50000000L,
-                          localVertexLimit: Long = 8000000L): DataFrame = {
+                          streamEdgeLimit: Long = 50000000L): DataFrame = {
     // Cut lineage EVERY round (checkpoint, not persist): each round's
     // plan references the previous round's, so un-truncated lineage
     // grows exponentially and OOMs the DRIVER in plan optimization
@@ -587,15 +589,14 @@ object Dedup {
     if (collected.isDefined) return localComponents(edges.sparkSession, collected.get)
     val nEdges = edges.count()
     if (nEdges <= streamEdgeLimit) {
-      // probe-and-collect in ONE job: pull at most limit+1 distinct
-      // vertex ids — if the limit+1'th exists the graph is beyond driver
-      // state and the distributed loop runs (the bounded collect is the
-      // probe; a separate count_distinct pass would scan the edges twice)
-      val verts = edges
-        .select(explode(array(col("src"), col("dst"))).as("id"))
-        .distinct().limit(localVertexLimit.toInt + 1)
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-      if (verts.length <= localVertexLimit) return streamedComponents(edges, verts)
+      // probe-and-collect in ONE job: the distinct vertex ids, or None
+      // once they pass the bound — then the graph is beyond driver state
+      // and the distributed loop runs (the bounded collect is the probe;
+      // a separate count_distinct pass would scan the edges twice)
+      val verts = graft.io.Local.valuesAtMost(
+        edges.select(explode(array(col("src"), col("dst")))), LocalVertexLimit)
+      if (verts.isDefined)
+        return streamedComponents(edges, verts.get.iterator.map(_.asInstanceOf[Long]).toArray)
     }
     // SELF-TUNED loop parallelism: the frames the loop shuffles are the
     // label table (≈ vertex count ≤ 2·edges rows of 16 B) and the

@@ -154,22 +154,18 @@ object Exploratory {
     * distinct counts). Both results come back to the driver ([[Local]]),
     * where they are split into local frames, each holding the rows of its
     * per-analysis operator above in that operator's order; only the
-    * hashtags grow with the data, and past [[GroupBudget]] groups they
+    * hashtags grow with the data, and past [[Local.MaxRows]] groups they
     * stay a Spark frame, [[hashtagFreqs]]'s. Nothing the
     * data yields is inlined into generated code (the histograms' bounds
     * reach the grouped pass inside a UDF's closure), and no
     * multi-distinct aggregate is planned (its Expand declares its fields
     * in a different order on every planning), so one night's classes
-    * serve the next.
+    * serve the next. Every kind of group but the hashtags stays under
+    * that budget whatever the data: Spark's years 1-9999 hold under 700k
+    * weeks, months, quarters and years, a histogram has at most 30
+    * buckets and the category 3 values.
     */
-  def analyze(df: DataFrame): Seq[(String, DataFrame)] = analyze(df, GroupBudget)
-
-  /** The most grouped rows [[analyze]] collects. Every kind of group but
-    * the hashtags stays under it whatever the data: Spark's years 1-9999
-    * hold under 700k weeks, months, quarters and years, a histogram has
-    * at most 30 buckets and the category 3 values.
-    */
-  private val GroupBudget = 1000000
+  def analyze(df: DataFrame): Seq[(String, DataFrame)] = analyze(df, Local.MaxRows)
 
   private[graft] def analyze(df: DataFrame, groupBudget: Int): Seq[(String, DataFrame)] = {
     val spark = df.sparkSession
@@ -224,8 +220,8 @@ object Exploratory {
       .agg(sum("n"), count(when(types.indices.map(i => col(s"g.v$i").isNotNull).reduce(_ || _), 1)))
     val (rows, tagFreqs) = Local.atMost(grouped, groupBudget) match {
       case Some(all) => (all, None)
-      case None => (Local.rows(grouped.filter(col("k") =!= 7), GroupBudget)(
-        s"more than $GroupBudget time, histogram and category groups"), Some(hashtagFreqs(df)))
+      case None => (Local.rows(grouped.filter(col("k") =!= 7), Local.MaxRows)(
+        s"more than ${Local.MaxRows} time, histogram and category groups"), Some(hashtagFreqs(df)))
     }
     val groups = rows.groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
     def local(rows: Seq[Row], fields: (String, DataType)*) =

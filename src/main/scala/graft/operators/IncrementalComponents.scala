@@ -123,9 +123,14 @@ object IncrementalComponents {
     * already-admitted id is a no-op; a never-seen id behind the
     * ledger's high watermark is the out-of-order misconfiguration and
     * fails loudly — its rows could never win max-version resolution).
+    * A batch holds at most 2M distinct edges.
     */
   def admitEdges(spark: SparkSession, store: String, edges: DataFrame,
-                 batchId: Long, maxBatchEdges: Int = 2000000): Unit = {
+                 batchId: Long): Unit =
+    admitEdges(spark, store, edges, batchId, 2000000)
+
+  private[graft] def admitEdges(spark: SparkSession, store: String, edges: DataFrame,
+                                batchId: Long, maxBatchEdges: Int): Unit = {
     recoverCompaction(spark, store)
     val fs = AdmissionLedger.fsOf(spark, store)
     if (AdmissionLedger.isAdmitted(fs, store, batchId)) return
@@ -138,12 +143,10 @@ object IncrementalComponents {
     val Seq(ca, cb) = edges.columns.toSeq.take(2).map(col)
     // the batch is driver-bounded BY CONTRACT (micro-batches) — the
     // union-find below holds its labels; fail loudly past the budget
-    val e = edges.select(ca.cast("long").as("a"), cb.cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .limit(maxBatchEdges + 1).collect()
-    require(e.length <= maxBatchEdges,
+    val e = graft.io.Local.values(edges.select(ca.cast("long").as("a"), cb.cast("long").as("b"))
+      .filter(col("a") =!= col("b")).select(struct("a", "b")), maxBatchEdges)(
       s"admitEdges: batch exceeds $maxBatchEdges edges — split the batch " +
-        "(micro-batch contract) or raise maxBatchEdges")
+        "(micro-batch contract)").iterator.map(_.asInstanceOf[org.apache.spark.sql.Row]).toArray
     val nodesB = e.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
     val nodesDf = spark.createDataFrame(
       java.util.Arrays.asList(nodesB.map(org.apache.spark.sql.Row(_)): _*),

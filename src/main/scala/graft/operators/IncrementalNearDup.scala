@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.io.{Local, StoreRead}
+import graft.io.Local.MaxRows
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -37,9 +38,6 @@ object IncrementalNearDup {
       Some(StoreRead.parquet(spark, storeDir))
     else None
 
-  /** The docs, and their band rows, one batch may hold on the driver. */
-  private val MaxBatchRows = 1000000
-
   /** Admit `batch` against the index at `storeDir`: returns the admitted
     * rows (no band collision with anything seen before, nor with an
     * earlier-`idCol` row of this batch), and appends ALL of the batch's
@@ -59,20 +57,20 @@ object IncrementalNearDup {
     val spark = batch.sparkSession
     def local(rows: Array[Row], schema: StructType) =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val docs = Local.rows(batch, MaxBatchRows)(
-      s"dedupeBatch: > $MaxBatchRows docs in one batch — split it into smaller micro-batches")
+    val docs = Local.rows(batch, MaxRows)(
+      s"dedupeBatch: > $MaxRows docs in one batch — split it into smaller micro-batches")
     val signed = Dedup.bandedSignatures(local(docs, batch.schema), idCol, textCol,
       shingleK, numPerms, bands)
-    val rows = Local.rows(signed, MaxBatchRows)(
-      s"dedupeBatch: > $MaxBatchRows band rows (docs × $bands bands) in one " +
+    val rows = Local.rows(signed, MaxRows)(
+      s"dedupeBatch: > $MaxRows band rows (docs × $bands bands) in one " +
         "batch — split it into smaller micro-batches")
     val idType = signed.schema("id").dataType
     // (band_id, band_key) pairs the index already holds among the batch's
     // keys: each task ships a pair once, however many index rows repeat it
     val indexed = readIndex(spark, storeDir).fold(Set.empty[Any]) { idx =>
       Local.values(idx.filter(Local.isIn(col("band_key"), signed.schema("band_key").dataType,
-          rows.map(_.get(2)))).select(struct("band_id", "band_key")), MaxBatchRows)(
-        s"dedupeBatch: > $MaxBatchRows indexed band keys in one batch — split it " +
+          rows.map(_.get(2)))).select(struct("band_id", "band_key")), MaxRows)(
+        s"dedupeBatch: > $MaxRows indexed band keys in one batch — split it " +
           "into smaller micro-batches")
     }
     // a band row is blocked by the index, or by a smaller id of this batch

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.io.{Local, Overlap, StagedCommit, StoreRead}
+import graft.io.Local.MaxRows
 import graft.io.StagedCommit.{Drop, Keep}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
@@ -394,13 +395,6 @@ object Similarity {
             sqDistL(slice(q, s * dsub + lit(1), lit(dsub)), w.getField("cqs")).as("dist"),
             w.getField("c_id").as("c_id")))).as("best")))
 
-  /** The one driver-collect bound of the IVF-PQ paths: the in-memory
-    * residency's query and model rows together, an admitted batch, an
-    * erasure's ids. Queries and batches are bounded by contract and model
-    * params broadcast-class by the IVF provisioning invariant (k ∝ √n).
-    */
-  private val MaxLocalRows = 1000000
-
   /** THE IVF-PQ model: coarse centroids `(g_id, gq)` and PQ codebook
     * subvectors `(c_id, s, cqs)` as coordinator-held rows, `m`
     * subspaces of `dsub` dims, all on the int8 grid ([[quantize]]).
@@ -529,8 +523,9 @@ object Similarity {
       * Scoring runs once at max(nprobes): every (q, vec) pair lives in
       * exactly ONE cluster, so its probe rank is constant across its m
       * code rows and filtering pairs by `min(p_rank) ≤ np` is exactly
-      * "score only clusters probed at width np". The rank is carried,
-      * and the scores persisted, only for a sweep.
+      * "score only clusters probed at width np". The rank is carried
+      * only for a sweep, which fans each scored pair out to the widths
+      * that probe it and ranks per (width, query) in the same pass.
       */
     def search(codes: DataFrame, queries: StoreRead.Resident, k: Int,
                nprobes: Seq[Int], allowed: Option[DataFrame]): DataFrame = {
@@ -556,31 +551,29 @@ object Similarity {
       val probed = codes.filter(col("cluster").isin(probeRows.map(_.get(2)).distinct: _*))
       val eligible = allowed.fold(probed)(ids =>
         probed.join(broadcast(ids), col("vec_id") === col("__allowed_id"), "left_semi"))
-      val scoredBase = eligible.join(broadcast(probes), Seq("cluster"))
+      val scored = eligible.join(broadcast(probes), Seq("cluster"))
         .join(broadcast(tab),
           col("tq_id") === col("q_id") && col("subspace") === col("s") &&
             col("code") === col("c_id") && col("vec_id") =!= col("q_id"))
         .groupBy(col("q_id"), col("vec_id").as("n_id"))
         .agg(sum(col("tdist")).as("adc_dist"),
           (if (sweep) Seq(min(col("p_rank")).as("p_rank")) else Nil): _*)
-      val scored =
-        if (sweep) scoredBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else scoredBase
-      val wTop = Window.partitionBy("q_id").orderBy(asc("adc_dist"), asc("n_id"))
-      nprobes.map { np =>
-        (if (np >= maxNp) scored else scored.filter(col("p_rank") <= np))
-          .withColumn("rank", row_number().over(wTop))
+      def top(df: DataFrame, w: WindowSpec) =
+        df.withColumn("rank", row_number().over(w.orderBy(asc("adc_dist"), asc("n_id"))))
           .filter(col("rank") <= k)
-          .select(lit(np.toLong).as("nprobe"),
-            col("q_id"), col("rank"), col("n_id"), col("adc_dist"))
-      }.reduce(_ unionByName _)
+      val out = Seq(col("q_id"), col("rank"), col("n_id"), col("adc_dist"))
+      if (!sweep) top(scored, Window.partitionBy("q_id")).select(lit(maxNp.toLong).as("nprobe") +: out: _*)
+      else top(scored.withColumn("nprobe",
+          explode(filter(typedLit(nprobes.distinct.map(_.toLong)), np => np >= col("p_rank")))),
+        Window.partitionBy("nprobe", "q_id")).select(col("nprobe") +: out: _*)
     }
   }
 
   /** The in-memory residency: the quantized corpus `v` (id, q),
     * persisted for the encode that follows, and the model and query
     * rows tagged by predicate and collected in ONE pass over it, which
-    * also materializes the cache. Returns (v, model, queries (q_id, qq)).
+    * also materializes the cache. Returns (v, model, queries (q_id, qq));
+    * the caller unpersists `v`.
     */
   private def inMemory(vectors: DataFrame, idCol: String, embCol: String,
                        coarsePred: Column, codebookPred: Column, queryPred: Column,
@@ -588,14 +581,13 @@ object Similarity {
                        caller: String): (DataFrame, IvfPq, StoreRead.Resident) = {
     val v = vectors.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tagged = v.select(col("id"), col("q"), coarsePred.as("__c"),
+    val picks = v.select(col("id"), col("q"), coarsePred.as("__c"),
         codebookPred.as("__cb"), queryPred.as("__q"))
       .filter(col("__c") || col("__cb") || col("__q"))
-      .limit(MaxLocalRows + 1).collect().toSeq
-    require(tagged.length <= MaxLocalRows,
-      s"$caller: > $MaxLocalRows query+model rows — the query side must be a " +
+    val tagged = Local.rows(picks, MaxRows)(
+      s"$caller: > $MaxRows query+model rows — the query side must be a " +
         "bounded sample/request frame and the model broadcast-class; split the " +
-        "queries into batches or serve them from a buildIvfPqStore store")
+        "queries into batches or serve them from a buildIvfPqStore store").toSeq
     def rows(i: Int) = tagged.filter(r => !r.isNullAt(i) && r.getBoolean(i))
     val id = v.schema("id")
     val q = v.schema("q")
@@ -633,45 +625,43 @@ object Similarity {
     * broadcast; a corpus-scale predicate belongs in the store itself as
     * a partition/stored column, and a large mid-size set degrades to
     * x07's bloom semi-join.
+    *
+    * Budgets: nprobe × |queries| probe rows within [[Local.MaxRows]], and
+    * at most [[AllowedIdBudget]] distinct allowed ids.
     */
   def ivfPqStoredTopK(spark: org.apache.spark.sql.SparkSession, store: String,
                       queries: DataFrame, idCol: String, embCol: String,
                       k: Int, nprobe: Int, m: Int = 4, dsub: Int = 16,
-                      maxProbeRows: Int = 1000000,
-                      allowed: Option[DataFrame] = None,
-                      maxAllowedIds: Long = 4000000L): DataFrame = {
+                      allowed: Option[DataFrame] = None): DataFrame = {
     recover(spark, store) // never serve a half-installed mutation
     // model params are broadcast-class and resident per store version;
     // opening the codes reads its schema from a footer — no Spark job
     // until the request-sized query frame is collected
     val model = storedModel(spark, store, m, dsub)
     val q = queries.select(col(idCol).as("q_id"), quantize(col(embCol)).as("qq"))
-    val qCap = math.min(maxProbeRows.toLong / math.max(1, nprobe),
-      Int.MaxValue.toLong - 1).toInt
-    val qRows = q.limit(qCap + 1).collect()
-    require(qRows.length <= qCap,
-      s"ivfPqStoredTopK: > $maxProbeRows probe rows (nprobe=$nprobe × " +
+    // a local request frame is read off its plan, with no job
+    val qRows = Local.rows(q, MaxRows / math.max(1, nprobe))(
+      s"ivfPqStoredTopK: > $MaxRows probe rows (nprobe=$nprobe × " +
         "|queries|) — the query side must be a bounded request frame; " +
-        "split the queries into batches or raise maxProbeRows")
-    // budget the allow-list broadcast the maxProbeRows way — silently
-    // broadcasting a corpus-proportional list is a driver OOM at real
-    // scale, so fail with the remedy. limit+collect to a LOCAL frame: the
-    // bound means the ids fit the driver, and a persist() would leak one
-    // cache entry per retrieval call (ADVICE r12)
+        "split the queries into batches")
+    // the allow-list is broadcast as a LOCAL frame of its distinct ids:
+    // a corpus-proportional list would be a driver OOM at real scale, and
+    // a persist() would leak one cache entry per retrieval call
     val ids = allowed.map { a =>
-      val distinctIds = a.select(col(a.columns.head).as("__allowed_id")).distinct()
-      val cap = math.min(maxAllowedIds + 1, Int.MaxValue.toLong).toInt
-      val idRows = distinctIds.limit(cap).collect()
-      require(idRows.length <= maxAllowedIds,
-        s"ivfPqStoredTopK: > $maxAllowedIds allowed ids exceed the " +
+      val field = a.schema.head.copy(name = "__allowed_id")
+      val idRows = Local.values(a, AllowedIdBudget)(
+        s"ivfPqStoredTopK: > $AllowedIdBudget allowed ids exceed the " +
           "broadcast budget — store the filter column " +
           "in the index (partition/stored column) or use a bloom " +
           "semi-join (x07) for corpus-proportional predicates")
-      StoreRead.Resident(distinctIds.schema, idRows).toDF(spark)
+      StoreRead.Resident(StructType(Seq(field)), idRows.iterator.map(Row(_)).toArray).toDF(spark)
     }
     model.search(StoreRead.parquet(spark, s"$store/codes"),
       StoreRead.Resident(q.schema, qRows), k, Seq(nprobe), ids).drop("nprobe")
   }
+
+  /** The distinct allowed ids [[ivfPqStoredTopK]] broadcasts. */
+  private val AllowedIdBudget = 4000000
 
   /** Right-to-be-forgotten applied to a [[buildIvfPqStore]] store —
     * x11's delete propagation reaching the DERIVED vector index (a
@@ -703,13 +693,13 @@ object Similarity {
     recover(spark, store) // finish any half-installed mutation before reading
     val codes = StoreRead.parquet(spark, s"$store/codes")
     val idType = codes.schema("vec_id").dataType
-    val del = Local.values(deleteIds.select(col(deleteIds.columns.head).cast(idType)), MaxLocalRows)(
-      s"forgetFromIvfPqStore: > $MaxLocalRows ids in one erasure — split it")
+    val del = Local.values(deleteIds.select(col(deleteIds.columns.head).cast(idType)), MaxRows)(
+      s"forgetFromIvfPqStore: > $MaxRows ids in one erasure — split it")
     def deleted = Local.isIn(col("vec_id"), idType, del)
     // the clusters holding a deleted vector, read off its code rows
     val clusterType = codes.schema("cluster").dataType
-    val affected = Local.values(codes.filter(deleted).select("cluster"), MaxLocalRows)(
-      s"forgetFromIvfPqStore: > $MaxLocalRows clusters to rewrite — split the erasure")
+    val affected = Local.values(codes.filter(deleted).select("cluster"), MaxRows)(
+      s"forgetFromIvfPqStore: > $MaxRows clusters to rewrite — split the erasure")
     if (affected.isEmpty) return
     // survivors are staged from the live codes to a disjoint path (an
     // in-place dynamic overwrite would read the partitions it truncates)
@@ -794,8 +784,8 @@ object Similarity {
     // against the resident model; one task appends one file per cluster
     // the batch routes to
     val v = batch.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val rows = Local.rows(v, MaxLocalRows)(
-      s"admitIvfPqBatch: > $MaxLocalRows vectors in one batch — split it into " +
+    val rows = Local.rows(v, MaxRows)(
+      s"admitIvfPqBatch: > $MaxRows vectors in one batch — split it into " +
         "smaller micro-batches")
     storedModel(spark, store, m, dsub).encodeLocal(StoreRead.Resident(v.schema, rows))
       .toDF(spark).coalesce(1)
@@ -1121,6 +1111,9 @@ object Similarity {
                codebookPred: Column, m: Int = 4, dsub: Int = 16): DataFrame = {
     val (v, model, _) = inMemory(vectors, idCol, embCol, lit(false), codebookPred,
       lit(false), m, dsub, "pqAssign")
+    // the codes are corpus-sized and lazy: they re-read the corpus rather
+    // than keep `v` cached for the session's lifetime
+    v.unpersist()
     model.pq(v)
   }
 
@@ -1151,9 +1144,9 @@ object Similarity {
       queryPred, m, dsub, "pqAdcTopK")
     val oneCell = StoreRead.Resident(StructType(Seq(StructField("g_id", LongType),
       StructField("gq", ArrayType(LongType)))), Array(Row(0L, Seq.empty[Long])))
-    model.copy(coarse = oneCell)
+    answer(v, "pqAdcTopK", model.copy(coarse = oneCell)
       .search(model.pq(v).withColumn("cluster", lit(0L)), queries, k, Seq(1), None)
-      .drop("nprobe")
+      .drop("nprobe"))
   }
 
   /** IVF-PQ top-k — the composed billion-scale ANN index (FAISS
@@ -1200,8 +1193,17 @@ object Similarity {
     require(nprobes.nonEmpty, "knnIvfPqAdcCurve: empty nprobes")
     val (v, model, queries) = inMemory(vectors, idCol, embCol, coarsePred, codebookPred,
       queryPred, m, dsub, "knnIvfPqAdcCurve")
-    model.search(model.encode(v), queries, k, nprobes, None)
+    answer(v, "knnIvfPqAdcCurve", model.search(model.encode(v), queries, k, nprobes, None))
   }
+
+  /** An in-memory search's bounded answer (queries × k × widths rows) as
+    * a local frame, with the residency `v` released.
+    */
+  private def answer(v: DataFrame, caller: String, result: DataFrame): DataFrame =
+    try StoreRead.Resident(result.schema, Local.rows(result, MaxRows)(
+      s"$caller: > $MaxRows answer rows (queries × k × widths) — split the queries " +
+        "into batches")).toDF(v.sparkSession)
+    finally v.unpersist()
 
   /** [[knnIvf]] against an externally-trained centroid table (c_id, c_emb)
     * — e.g. [[trainIvfCentroids]] output.
@@ -1505,15 +1507,16 @@ object Similarity {
     * bound is the sample size (vectors must fit an executor), the
     * compute parallelizes over row-slices. The bound is enforced in
     * BYTES, not rows: one row is probed for dimensionality and the row
-    * cap becomes `maxBroadcastBytes / (dims × 4)` (capped at
-    * `maxVectors`), so a 2048-d input is rejected long before the ~8 GB
-    * collect a row-count-only guard would have admitted. The row probe
-    * is a limit(cap+1).count() — it stops scanning after cap+1 rows,
-    * never a full count.
+    * cap becomes 128 MB / (dims × 4) (capped at [[Local.MaxRows]]), so a
+    * 2048-d input is rejected long before the ~8 GB collect a
+    * row-count-only guard would have admitted. The vectors are collected
+    * in one job that stops once it passes the cap.
     */
-  def cosinePairsTopK(vectors: DataFrame, idCol: String, embCol: String, k: Int,
-                      maxVectors: Int = 1000000,
-                      maxBroadcastBytes: Long = 128L << 20): DataFrame = {
+  def cosinePairsTopK(vectors: DataFrame, idCol: String, embCol: String, k: Int): DataFrame =
+    cosinePairsTopK(vectors, idCol, embCol, k, MaxRows, 128L << 20)
+
+  private[graft] def cosinePairsTopK(vectors: DataFrame, idCol: String, embCol: String, k: Int,
+                                     maxVectors: Int, maxBroadcastBytes: Long): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val dims = vectors.select(col(embCol)).as[Array[Float]].head(1) match {
@@ -1523,15 +1526,13 @@ object Similarity {
     val byteCap =
       if (dims == 0) maxVectors.toLong
       else maxBroadcastBytes / (dims.toLong * 4)
-    val rowCap = math.min(maxVectors.toLong, math.max(byteCap, 1L))
-    val probe = vectors.select(col(idCol)).limit((rowCap + 1).toInt).count()
-    require(probe <= rowCap,
+    val rowCap = math.min(maxVectors.toLong, math.max(byteCap, 1L)).toInt
+    val vecs = Local.rows(vectors.select(col(idCol).cast("long"), col(embCol)), rowCap)(
       s"cosinePairsTopK is a driver-side all-pairs kernel bounded to " +
         s"$maxBroadcastBytes broadcast bytes = $rowCap vectors at $dims dims " +
         s"(row cap $maxVectors); input exceeds it — sample the input or use " +
         s"Similarity.lshPairs (bucketed, distributed) for near-dup pairs at scale")
-    val vecs = vectors.select(col(idCol).cast("long"), col(embCol))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
     val bc = spark.sparkContext.broadcast(vecs)
     val n = vecs.length
     implicit val ord: Ordering[(Double, Long, Long)] =

@@ -94,24 +94,29 @@ object ZoneMap {
     *
     * Driver-state bound (the cosinePairsTopK discipline): the collected
     * file list is O(selected files); when a wide predicate selects more
-    * than `maxListedFiles`, enumerating paths buys nothing over the
+    * than 100 000 files, enumerating paths buys nothing over the
     * ordinary directory scan — the read falls back to the ROOT path
-    * with the same residual filter (identical rows, zero driver list),
+    * with the same residual filter (identical rows, no path list kept),
     * so a near-full-range query on a million-file lake never
-    * materializes a million path strings on the driver.
+    * materializes a million path strings on the driver. One job lists
+    * the selected files and stops once they pass the bound.
     */
   def readRange(spark: SparkSession, lake: String, key: String,
-                lo: Column, hi: Column,
-                maxListedFiles: Int = 100000): DataFrame = {
+                lo: Column, hi: Column): DataFrame =
+    readRange(spark, lake, key, lo, hi, 100000)
+
+  private[graft] def readRange(spark: SparkSession, lake: String, key: String,
+                               lo: Column, hi: Column, maxListedFiles: Int): DataFrame = {
     val zones = spark.read.parquet(resolveZones(spark, lake))
-    val selected = zones.filter(col("max_k") >= lo && col("min_k") < hi)
-    val n = selected.limit(maxListedFiles + 1).count()
+    val listed = graft.io.Local.atMost(
+      zones.filter(col("max_k") >= lo && col("min_k") < hi).select("file"), maxListedFiles)
+      .map(_.map(_.getString(0)).sorted.toSeq)
     def manifestFresh(probe: Seq[String]): Boolean = probe.headOption.forall { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
     }
-    val base =
-      if (n == 0) {
+    val base = listed match {
+      case Some(files) if files.isEmpty =>
         // an EMPTY intersection is only trustworthy from a FRESH
         // manifest — a stale one (writer crashed between the lake
         // overwrite and the manifest swap) knows nothing about the new
@@ -123,11 +128,8 @@ object ZoneMap {
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             spark.read.parquet(lake).schema)
         else spark.read.parquet(lake)
-      }
-      else if (n > maxListedFiles) spark.read.parquet(lake)
-      else {
-        val files = selected.select("file").collect()
-          .map(_.getString(0)).sorted.toSeq
+      case None => spark.read.parquet(lake)
+      case Some(files) =>
         // STALE-manifest guard: a writer crash between the lake
         // overwrite and the manifest swap leaves the OLD manifest
         // pointing at deleted files. The overwrite replaces the whole
@@ -137,7 +139,7 @@ object ZoneMap {
         // until the next successful writeClustered rebuilds the zones).
         if (manifestFresh(files)) spark.read.parquet(files: _*)
         else spark.read.parquet(lake)
-      }
+    }
     base.filter(col(key) >= lo && col(key) < hi)
   }
 }

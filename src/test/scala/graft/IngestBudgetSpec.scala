@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * caller's collect of the admitted ids), IVF-PQ admission, the upsert
   * merge and an IVF-PQ forget. Each batch is its own seeded parquet input,
   * so no plan carries a per-batch literal: a second batch of the same shape
-  * must find every class of the first in Spark's codegen cache.
+  * must find every class of the first in Spark's codegen cache. A stored
+  * query between batches is pinned too, plain and with an allow-list.
   */
 class IngestBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -137,13 +138,36 @@ class IngestBudgetSpec extends SparkSpec {
     val calls = first.map(_._1)
     // dedupe: collect the batch, sign it, probe the index, append; admit:
     // collect the quantized batch, append; upsert: the shuffle, the write;
-    // forget: collect the ids, find the clusters, the shuffle, the write
-    assert(first.map(_._2) == Seq(4, 2, 2, 4), s"jobs: $first")
+    // forget: find the clusters (the ids are a local frame, read with no
+    // job), the shuffle, the write
+    assert(first.map(_._2) == Seq(4, 2, 2, 3), s"jobs: $first")
     assert(second.map(_._2) == first.map(_._2), s"jobs: $second")
     assert(first.map(_._2).sum <= 15)
     assert(first.map(_._3) == Seq(9L, 11L, 11L, 8L), s"compiles: $first")
     assert(first.map(_._3).sum <= 40)
     assert(second.map(_._3).sum <= 5, s"a same-shape batch recompiled: $second")
     assert(second.map(_._1) == calls)
+  }
+
+  test("a stored query over a local request frame runs a pinned number of jobs") {
+    stores
+    val allowed = write((0L until SeedDocs.toLong by 3).toDF("vec_id"), "allowed")
+    def query(seed: Int, filter: Option[String]) = Capture.during(spark) {
+      Similarity.ivfPqStoredTopK(spark, ivf, vectors(seed, Seq(-1L, -2L, -3L, -4L)).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", 10, 2, allowed = filter.map(read)).collect()
+    }
+    SparkSpec.clearCodegenCache()
+    val (plainRows, plain) = query(4, None)
+    val (filteredRows, filtered) = query(5, Some(allowed))
+    assert(plainRows.nonEmpty && filteredRows.nonEmpty)
+    assert(filteredRows.forall(_.getAs[Long]("n_id") % 3 == 0))
+    val cost = Seq(plain, filtered).map(c => (c.jobs, c.codegenCompiles))
+    info(s"(jobs, compiles): plain ${cost(0)}, filtered ${cost(1)}")
+    // the request frame is read off its plan, with no job, as a limited
+    // collect of it was (5 jobs, 29 classes); the allow-list's distinct
+    // ids come back in one job with no shuffle (a distinct and a limit
+    // took 9 jobs and 10 classes)
+    assert(cost(0)._1 <= 5 && cost(0)._2 <= 29, s"plain: ${cost(0)}")
+    assert(cost(1)._1 <= 8 && cost(1)._2 <= 10, s"filtered: ${cost(1)}")
   }
 }

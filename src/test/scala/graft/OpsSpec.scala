@@ -4,6 +4,7 @@ import graft.functions.TextFunctions
 import graft.obs.Capture
 import graft.operators.{Dedup, Similarity}
 import graft.schema.Schemas
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Unit invariants for the text / dedup / similarity primitives. */
@@ -146,11 +147,11 @@ class OpsSpec extends SparkSpec {
   test("cosinePairsTopK fails fast above the driver-collect bound") {
     val vecs = (0L until 10L).map(i => (i, Seq(i.toFloat, 1.0f))).toDF("vid", "emb")
     val e = intercept[IllegalArgumentException] {
-      Similarity.cosinePairsTopK(vecs, "vid", "emb", k = 3, maxVectors = 5)
+      Similarity.cosinePairsTopK(vecs, "vid", "emb", 3, 5, 128L << 20)
     }
     assert(e.getMessage.contains("lshPairs"))
     // within the bound it still computes the exact answer
-    val ok = Similarity.cosinePairsTopK(vecs, "vid", "emb", k = 3, maxVectors = 10)
+    val ok = Similarity.cosinePairsTopK(vecs, "vid", "emb", 3, 10, 128L << 20)
     assert(ok.count() == 3)
   }
 
@@ -162,13 +163,11 @@ class OpsSpec extends SparkSpec {
       .map(i => (i, Seq.tabulate(2048)(d => (i + d).toFloat)))
       .toDF("vid", "emb")
     val e = intercept[IllegalArgumentException] {
-      Similarity.cosinePairsTopK(wide, "vid", "emb", k = 3,
-        maxBroadcastBytes = 64L << 10)
+      Similarity.cosinePairsTopK(wide, "vid", "emb", 3, 1000000, 64L << 10)
     }
     assert(e.getMessage.contains("2048 dims") && e.getMessage.contains("lshPairs"))
     // same rows under a budget that admits them: computes fine
-    val ok = Similarity.cosinePairsTopK(wide, "vid", "emb", k = 3,
-      maxBroadcastBytes = 1L << 20)
+    val ok = Similarity.cosinePairsTopK(wide, "vid", "emb", 3, 1000000, 1L << 20)
     assert(ok.count() == 3)
   }
 
@@ -198,18 +197,55 @@ class OpsSpec extends SparkSpec {
       .toDF("vid", "emb")
     Similarity.buildIvfPqStore(vecs, "vid", "emb",
       col("id") >= 8 && col("id") < 12, col("id") < 8, store)
-    // 6 queries × nprobe 2 = 12 probe rows — over a budget of 8 the
-    // guard must reject with the remedy, under it the search runs
+    // 6 queries × nprobe 200 000 = 1.2M probe rows — over the 1M budget
+    // (a cap of 5 queries) the guard must reject with the remedy; at
+    // nprobe 2 the search runs
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfPqStoredTopK(spark, store,
-        vecs.filter(col("vid") < 6), "vid", "emb", k = 3, nprobe = 2,
-        maxProbeRows = 8)
+        vecs.filter(col("vid") < 6), "vid", "emb", k = 3, nprobe = 200000)
     }
     assert(e.getMessage.contains("bounded request frame"))
     val ok = Similarity.ivfPqStoredTopK(spark, store,
-      vecs.filter(col("vid") < 6), "vid", "emb", k = 3, nprobe = 2,
-      maxProbeRows = 12)
+      vecs.filter(col("vid") < 6), "vid", "emb", k = 3, nprobe = 2)
     assert(ok.count() > 0)
+  }
+
+  test("in-memory IVF-PQ calls leave nothing cached once their results are materialized") {
+    val sc = spark.sparkContext
+    val vecs = (0L until 64L)
+      .map(i => (i, Seq.tabulate(64)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vid", "emb")
+    val before = sc.getPersistentRDDs.size
+    // each call over a frame of its own, so no call finds another's cache
+    val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "knnIvfPqAdc" -> (v => Similarity.knnIvfPqAdc(v, "vid", "emb",
+        col("id") >= 8 && col("id") < 12, col("id") < 8, col("id") < 4, 5, 2)),
+      "knnIvfPqAdcCurve" -> (v => Similarity.knnIvfPqAdcCurve(v, "vid", "emb",
+        col("id") >= 8 && col("id") < 12, col("id") < 8, col("id") < 4, 5, Seq(1, 2, 4))),
+      "pqAdcTopK" -> (v => Similarity.pqAdcTopK(v, "vid", "emb",
+        col("id") < 8, col("id") < 4, 5)),
+      "pqAssign" -> (v => Similarity.pqAssign(v, "vid", "emb", col("id") < 8)))
+    calls.zipWithIndex.foreach { case ((name, call), i) =>
+      assert(call(vecs.filter(col("vid") =!= 40L + i)).count() > 0, name)
+      assert(sc.getPersistentRDDs.size == before, s"$name left its frames cached")
+    }
+  }
+
+  test("admitEdges fails with the remedy past the batch's edge budget") {
+    import graft.operators.{AdmissionLedger, IncrementalComponents}
+    val store = graft.queries.Dsl.tempDir("g15_budget")
+    // 4 distinct edges over a budget of 3: refused, nothing admitted
+    val e = intercept[IllegalArgumentException] {
+      IncrementalComponents.admitEdges(spark, store,
+        Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("a", "b"), 0L, 3)
+    }
+    assert(e.getMessage.contains("split the batch"), e.getMessage)
+    assert(!AdmissionLedger.isAdmitted(AdmissionLedger.fsOf(spark, store), store, 0L))
+    // a repeated edge and a self-loop do not count: 3 distinct edges fit
+    IncrementalComponents.admitEdges(spark, store,
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 2L), (7L, 7L)).toDF("a", "b"), 0L, 3)
+    assert(IncrementalComponents.resolved(spark, store).as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
   test("stored IVF-PQ routing refuses non-numeric ids with a message, not a MatchError") {
@@ -599,8 +635,7 @@ class OpsSpec extends SparkSpec {
     assert(boundary.count() == 0, "[lo, lo) must be empty")
     // driver-state bound: over the listed-files budget the read falls
     // back to the root scan — identical rows, no path list collected
-    val bounded = ZoneMap.readRange(spark, lake, "ts", lo, hi,
-      maxListedFiles = 2)
+    val bounded = ZoneMap.readRange(spark, lake, "ts", lo, hi, 2)
     assert(bounded.select("event_id").as[Long].collect().toSet == full,
       "fallback read must return the identical rows")
   }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.operators.{IncrementalComponents, Similarity}
+import graft.operators.{AdmissionLedger, IncrementalComponents, Similarity}
 import graft.queries.TextQueries
 import graft.streaming.StreamSketch
 import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
@@ -200,6 +200,41 @@ class StagedCommitSpec extends SparkSpec {
     }
     info(f"$runs crash runs over ${mutations.size} mutations in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("compacting the admission ledger keeps every admitted batch admitted at every crash step") {
+    val home = Files.createDirectories(base.resolve("ledger_compact"))
+    var runs = 0
+    // batches 0-2 admitted and folded (the watermark holds 1), then 3-4
+    def fresh(): String = {
+      runs += 1
+      val dir = home.resolve(s"run$runs").toString
+      val fs = AdmissionLedger.fsOf(cs, dir)
+      (0L to 2L).foreach(AdmissionLedger.record(fs, dir, _))
+      Similarity.compactAdmissionLedger(cs, dir)
+      (3L to 4L).foreach(AdmissionLedger.record(fs, dir, _))
+      dir
+    }
+    def admitted(dir: String) =
+      (0L to 4L).filter(AdmissionLedger.isAdmitted(AdmissionLedger.fsOf(cs, dir), dir, _))
+    val clean = fresh()
+    CrashFs.arm(_.startsWith(s"$clean/_admitted"), Int.MaxValue)
+    try Similarity.compactAdmissionLedger(cs, clean) finally CrashFs.disarm()
+    val steps = CrashFs.counted
+    assert(steps.exists(_.startsWith("rename")), s"no rename in $steps")
+    assert(admitted(clean) == (0L to 4L))
+    steps.indices.foreach { i =>
+      val dir = fresh()
+      CrashFs.arm(_.startsWith(s"$dir/_admitted"), i)
+      val result = try Try(Similarity.compactAdmissionLedger(cs, dir)) finally CrashFs.disarm()
+      assert(CrashFs.tripped && result.isFailure, s"crash point '${steps(i)}' was never reached")
+      assert(admitted(dir) == (0L to 4L), s"crash at '${steps(i)}' un-admitted a batch")
+      // the next compaction finishes the fold
+      Similarity.compactAdmissionLedger(cs, dir)
+      assert(admitted(dir) == (0L to 4L))
+      assert(AdmissionLedger.upTo(AdmissionLedger.fsOf(cs, dir), dir) == 3L)
+    }
+    info(s"${steps.size} crash steps: ${steps.mkString(", ")}")
   }
 
   test("a failed build write awaits its sibling writes, commits nothing and keeps the old store") {
