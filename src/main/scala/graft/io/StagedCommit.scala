@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** The one crash-safe commit protocol of graft's path-based stores. A
   * mutation never writes a live dir in place; it goes through four steps:
   *
-  *  1. [[reset]] the store's stage dir and write the new dirs under it
-  *     (reading the live store, writing a disjoint path);
+  *  1. [[reset]] the store's stage dir and write the new dirs or files
+  *     under it (reading the live store, writing a disjoint path);
   *  2. [[commit]] the install plan as a marker file, written to a `.tmp`
   *     sibling and renamed into place — the commit point;
   *  3. replay the plan by renames and deletes, then drop the stage dir
@@ -22,11 +22,11 @@ import org.apache.spark.sql.SparkSession
   * So after a crash at any write step the store reads as exactly before
   * or exactly after the mutation.
   *
-  * A plan is one line per dir: `keep <dir>` replaces the live dir with
-  * its staged copy if that copy still exists (a missing copy was already
-  * installed by an earlier replay), `drop <dir>` deletes the live dir.
-  * The whole plan is parsed before any dir is touched; a line that is
-  * neither fails with the marker path.
+  * A plan is one line per dir or file: `keep <dir>` replaces the live
+  * dir or file with its staged copy if that copy still exists (a missing
+  * copy was already installed by an earlier replay), `drop <dir>`
+  * deletes the live one. The whole plan is parsed before anything is
+  * touched; a line that is neither fails with the marker path.
   */
 object StagedCommit {
 
@@ -35,8 +35,8 @@ object StagedCommit {
   final case class Drop(dir: String) extends Step
 
   /** Where one store's commit lives: the stage dir and the marker are
-    * children of `root`, and plan dirs name children of `live` (relative
-    * to `root`, the root itself when empty).
+    * children of `root`, and plan lines name dirs or files in `live`
+    * (relative to `root`, the root itself when empty).
     */
   class Layout(val root: Path, val stage: String, val marker: String, live: String = "") {
     val stageDir = new Path(root, stage)
@@ -44,14 +44,12 @@ object StagedCommit {
     val liveDir: Path = if (live.isEmpty) root else new Path(root, live)
     /** Where `keep dir` finds its staged copy. */
     def staged(dir: String): Path = new Path(stageDir, dir)
-    /** A marker written before plans were lines: its plan, or None. */
-    def legacy(fs: FileSystem, text: String): Option[Seq[Step]] = None
   }
 
   def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Step 1: an empty stage dir to write the new dirs under. */
+  /** Step 1: an empty stage dir to write the new dirs or files under. */
   def reset(fs: FileSystem, l: Layout): Path = {
     fs.delete(l.stageDir, true)
     l.stageDir
@@ -95,8 +93,7 @@ object StagedCommit {
     val in = fs.open(l.markerFile)
     val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
       finally in.close()
-    val plan = l.legacy(fs, text).getOrElse(
-      text.linesIterator.map(_.trim).filter(_.nonEmpty).map(parse(l, _)).toList)
+    val plan = text.linesIterator.map(_.trim).filter(_.nonEmpty).map(parse(l, _)).toList
     plan.foreach { step =>
       val live = new Path(l.liveDir, step.dir)
       step match {

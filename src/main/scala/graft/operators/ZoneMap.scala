@@ -28,10 +28,10 @@ object ZoneMap {
   private def zonesStaging(lake: String): String = zonesPath(lake) + "_staging"
 
   /** Resolve the manifest path, finishing a [[writeClustered]] swap that
-    * crashed between its delete and rename (the compactIndex recovery
-    * pattern): a missing `_zones` next to a COMPLETE (`_SUCCESS`-marked)
-    * staging manifest means the staged manifest is the current one —
-    * rename it into place. Called by every reader, so the crash window
+    * crashed between its delete and rename (a swap of its own, outside
+    * [[graft.io.StagedCommit]]): a missing `_zones` next to a COMPLETE
+    * (`_SUCCESS`-marked) staging manifest means the staged manifest is
+    * the current one — rename it into place. Called by every reader, so the crash window
     * cannot strand the lake unreadable.
     */
   private def resolveZones(spark: SparkSession, lake: String): String = {

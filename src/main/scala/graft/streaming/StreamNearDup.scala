@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *    no other batch's files (io10's machinery).
   * A crash between the index append and the sink write re-appends the
   * batch's band rows on retry; duplicates are harmless for admission
-  * (collision is existential) and [[IncrementalNearDup.compactIndex]]
-  * bounds the file growth. Single streaming writer, like every
+  * (collision is existential), and [[IncrementalNearDup.compactIndex]]
+  * with `dedupe` drops them and bounds the file growth — while the
+  * stream keeps ingesting. Single streaming writer, like every
   * foreachBatch sink.
   */
 object StreamNearDup {

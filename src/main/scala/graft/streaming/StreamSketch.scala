@@ -90,10 +90,6 @@ object StreamSketch {
   private def layout(store: String) =
     new StagedCommit.Layout(new Path(store), "_compact_pending", "_compact_upto") {
       override def staged(dir: String) = stageDir
-      // a marker holding just the frontier folds every id below it
-      override def legacy(fs: FileSystem, text: String) =
-        text.trim.toLongOption.map(frontier => Keep(BasePartition) +:
-          batchIds(fs, root).filter(id => id >= 0 && id < frontier).map(id => Drop(s"batch=$id")))
     }
 
   private def batchIds(fs: FileSystem, store: Path): Seq[Long] =

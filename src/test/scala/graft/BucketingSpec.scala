@@ -50,27 +50,20 @@ class BucketingSpec extends SparkSpec {
     assert(df.as[(String, Long, Double)].collect().map(_._2).sum == plain)
   }
 
-  test("x18 batch-vs-index join reads the bucketed band index without shuffling it") {
-    import graft.operators.{Dedup, IncrementalNearDup}
-    val table = "x18_planpin_idx"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text")
-    // batch 1 seeds the bucketed index
-    IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", table).count()
-    // batch 2's collision join — the plan dedupeBatchBucketed builds.
-    // At gate scale the planner just BROADCASTS the tiny index (bucket
-    // layout correctly ignored); the layout's regime is a batch too big
-    // to broadcast against a corpus-sized index — force it by disabling
-    // broadcast, the 100 TB shape this pin is about.
+  /** The x18 collision join against the index `table`: batch 2's join,
+    * the plan dedupeBatchBucketed builds. At gate scale the planner just
+    * BROADCASTS the tiny index (bucket layout correctly ignored); the
+    * layout's regime is a batch too big to broadcast against a
+    * corpus-sized index — force it by disabling broadcast, the 100 TB
+    * shape this pin is about.
+    */
+  private def assertIndexNotShuffled(table: String, batch: org.apache.spark.sql.DataFrame): Unit = {
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val banded = Dedup.bandedSignatures(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", 2, 16, 8)
+      val banded = graft.operators.Dedup.bandedSignatures(batch, "doc_id", "text", 2, 16, 8)
       val joined = banded.as("b").join(spark.table(table).as("i"),
           col("b.band_id") === col("i.band_id") &&
             col("b.band_key") === col("i.band_key"))
@@ -96,6 +89,18 @@ class BucketingSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
     }
+  }
+
+  test("x18 batch-vs-index join reads the bucketed band index without shuffling it") {
+    import graft.operators.IncrementalNearDup
+    val table = "x18_planpin_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "source", "text")
+    // batch 1 seeds the bucketed index
+    IncrementalNearDup.dedupeBatchBucketed(
+      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", table).count()
+    assertIndexNotShuffled(table, docs.filter(col("doc_id") % 2 === 1))
     // and the admission result equals the flat-store twin's
     val flatStore = graft.queries.Dsl.tempDir("x18_flat_twin") + "/store"
     val table2 = "x18_planpin_idx2"
@@ -111,7 +116,7 @@ class BucketingSpec extends SparkSpec {
     assert(viaBucketed == viaFlat, "bucketed admissions diverge from flat-store")
 
     // compaction: the two appends above left > buckets files; compacting
-    // through the staging swap collapses them to <= buckets (writeTasks=1)
+    // through the staged rewrite collapses them to <= buckets (writeTasks=1)
     // while preserving rows, the bucketed layout, AND admission behavior
     def tableFiles(t: String): Int = {
       val loc = spark.sql(s"DESCRIBE FORMATTED $t").collect()
@@ -127,173 +132,48 @@ class BucketingSpec extends SparkSpec {
     assert(rows == before && spark.table(table2).count() == before)
     assert(tableFiles(table2) <= 16,
       s"compaction left ${tableFiles(table2)} files for 16 buckets")
+    // the compacted files keep the bucketed join unshuffled
+    assertIndexNotShuffled(table2, docs.filter(col("doc_id") % 2 === 1))
     // a batch admitted AFTER compaction behaves exactly like the flat
     // twin seeing the same history (re-send batch 2: everything blocked)
     val resend = ids(IncrementalNearDup.dedupeBatchBucketed(
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", table2))
     assert(resend.isEmpty, "post-compaction index lost band history")
-
-    // crash recovery: simulate dying between DROP and RENAME — the
-    // staged table exists, the live one is gone; the next compactIndex
-    // call must finish the swap, not rebuild or fail
-    val rowsNow = spark.table(table2).count()
-    spark.sql(s"DROP TABLE IF EXISTS ${table2}_compacting")
-    spark.table(table2)
-      .write.bucketBy(16, "band_id", "band_key").sortBy("band_id", "band_key")
-      .mode("overwrite").format("parquet").saveAsTable(s"${table2}_compacting")
-    spark.sql(s"DROP TABLE $table2") // the crash point
-    val recovered = IncrementalNearDup.compactIndex(spark, table2)
-    assert(recovered == rowsNow && spark.table(table2).count() == rowsNow)
-    assert(!spark.catalog.tableExists(s"${table2}_compacting"))
-    // and the history is still intact through the recovery
-    assert(ids(IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", table2)).isEmpty)
   }
 
-  /** VERDICT r9 #2: ingest/compaction mutual exclusion is ENFORCED, not
-    * documented. Two halves:
-    *  1. an ingest arriving while the staging table exists refuses
-    *     loudly (its append would be read into neither side of the swap);
-    *  2. an ingest that passed that fence BEFORE staging appeared and
-    *     lands its append mid-rewrite is FOLDED IN — compactIndex
-    *     re-checks the live row count before the swap, redoes the
-    *     rewrite, and the post-swap table equals serial execution
-    *     (zero band rows lost).
-    */
-  test("compaction/ingest race: concurrent appends are fenced or folded in, never lost") {
+  test("an admission after another session's compaction reads the installed files") {
     import graft.operators.IncrementalNearDup
-    val table = "x18_race_idx"
+    val table = "x18_session_idx"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_compacting")
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text")
-    IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table)
-    IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", table)
-
-    // half 1 — the fence: while a staging table exists next to the live
-    // one, ingestion refuses (and the index is untouched by the attempt)
-    spark.table(table).limit(1)
-      .write.bucketBy(16, "band_id", "band_key").sortBy("band_id", "band_key")
-      .format("parquet").saveAsTable(s"${table}_compacting")
-    val preFence = spark.table(table).count()
-    val fenced = intercept[IllegalArgumentException] {
-      IncrementalNearDup.dedupeBatchBucketed(
-        docs.filter(col("doc_id") % 3 === 2), "doc_id", "text", table)
-    }
-    assert(fenced.getMessage.contains("_compacting"))
-    assert(spark.table(table).count() == preFence, "fenced ingest wrote rows")
-    spark.sql(s"DROP TABLE ${table}_compacting")
-
-    // half 2 — the in-flight writer: its append lands AFTER the rewrite
-    // read the table but BEFORE the swap (injected via the test hook,
-    // self-disarming so the retry loop converges). The recheck must
-    // catch it and the redo must carry the appended rows through.
-    val lateRows = spark.table(table).limit(7).localCheckpoint()
-    val expectTotal = preFence + lateRows.count()
-    var fired = false
-    IncrementalNearDup.testHookBeforeSwap = () => {
-      if (!fired) {
-        fired = true
-        lateRows.write.mode("append").bucketBy(16, "band_id", "band_key")
-          .sortBy("band_id", "band_key").format("parquet").saveAsTable(table)
-      }
-    }
-    try {
-      val rows = IncrementalNearDup.compactIndex(spark, table)
-      assert(fired, "race hook never fired")
-      assert(rows == expectTotal && spark.table(table).count() == expectTotal,
-        s"post-swap table lost band rows: $rows vs serial $expectTotal")
-    } finally IncrementalNearDup.testHookBeforeSwap = () => ()
-    assert(!spark.catalog.tableExists(s"${table}_compacting"))
-
-    // half 3 — the nastiest interleaving: the racing append commits
-    // AFTER the live table's DROP. Append-mode saveAsTable recreates
-    // the table, the rename fails, and the fold-in recovery must keep
-    // BOTH the compacted history and the racing rows. The racing rows
-    // carry band keys the index has never seen (a real racing batch is
-    // NEW data; the fold is a set difference, so re-sent duplicates
-    // would — correctly — fold to nothing).
-    val preDrop = spark.table(table).count()
-    val lateRows2 = spark.table(table).limit(5)
-      .withColumn("band_key", col("band_key") + 999999999L)
-      .localCheckpoint()
-    val expectTotal2 = preDrop + lateRows2.count()
-    var fired2 = false
-    IncrementalNearDup.testHookAfterDrop = () => {
-      if (!fired2) {
-        fired2 = true
-        lateRows2.write.mode("append").bucketBy(16, "band_id", "band_key")
-          .sortBy("band_id", "band_key").format("parquet").saveAsTable(table)
-      }
-    }
-    try {
-      val rows2 = IncrementalNearDup.compactIndex(spark, table)
-      assert(fired2, "after-drop hook never fired")
-      assert(rows2 == expectTotal2 && spark.table(table).count() == expectTotal2,
-        s"rename-failure fold lost rows: $rows2 vs serial $expectTotal2")
-    } finally IncrementalNearDup.testHookAfterDrop = () => ()
-    assert(!spark.catalog.tableExists(s"${table}_compacting"))
-    // and the folded table still admits correctly (history intact)
-    assert(IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", table).isEmpty)
-  }
-
-  /** The crash state that used to DISCARD the whole dedup history: the
-    * process died after the swap began (staged carries the full
-    * compacted index + `graft.swapPending`) with the live table holding
-    * only a racing batch that recreated it. A rerun's old behavior was
-    * DROP-staged-and-rebuild from the racing rows — the explicit pending
-    * marker makes every recovery path fold-and-finish instead.
-    */
-  test("swap-pending crash recovery: staged history survives, racing rows fold in") {
-    import graft.operators.IncrementalNearDup
-    val table = "x18_pending_idx"
-    def saveAs(df: org.apache.spark.sql.DataFrame, t: String, mode: String): Unit =
-      df.write.mode(mode).bucketBy(16, "band_id", "band_key")
-        .sortBy("band_id", "band_key").format("parquet").saveAsTable(t)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_compacting")
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text")
-    IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table)
-    val history = spark.table(table).localCheckpoint()
-    val historyN = history.count()
-
-    // manufacture the crash state: staged = full history + swapPending;
-    // live = ONLY a racing batch (5 never-seen band rows)
-    saveAs(history, s"${table}_compacting", "overwrite")
-    spark.sql(s"ALTER TABLE ${table}_compacting " +
-      "SET TBLPROPERTIES ('graft.swapPending' = 'true')")
-    val racing = history.limit(5)
-      .withColumn("band_key", col("band_key") + 888888888L).localCheckpoint()
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id", "text")
+    def admit(r: Int) = IncrementalNearDup.dedupeBatchBucketed(
+      docs.filter(col("doc_id") % 3 === r), "doc_id", "text", table)
+    Seq(0, 1).foreach(admit)
+    // this session now holds the table's listing; the compaction in
+    // another session drops every file in it
+    val rows = spark.table(table).count()
+    assert(IncrementalNearDup.compactIndex(spark.newSession(), table) == rows)
+    assert(admit(0).isEmpty, "a re-sent batch was admitted")
     spark.sql(s"DROP TABLE $table")
-    saveAs(racing, table, "overwrite")
+  }
 
-    // a rerun of compactIndex recovers: full history + racing rows, no dup
-    val rows = IncrementalNearDup.compactIndex(spark, table)
-    assert(rows == historyN + 5,
-      s"recovery lost rows: $rows vs ${historyN + 5}")
-    assert(spark.table(table).count() == historyN + 5)
-    assert(!spark.catalog.tableExists(s"${table}_compacting"))
-    // history demonstrably intact: re-sending batch 1 admits nothing
-    assert(IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", table).isEmpty)
-
-    // crash BEFORE the drop (live = untouched original): the set-
-    // difference fold adds nothing — no duplicated history after recovery
-    saveAs(spark.table(table), s"${table}_compacting", "overwrite")
-    spark.sql(s"ALTER TABLE ${table}_compacting " +
-      "SET TBLPROPERTIES ('graft.swapPending' = 'true')")
-    val liveN = spark.table(table).count()
-    // the INGEST side hits the same state via recoverCompaction and must
-    // fold-and-finish too (never refuse forever, never seed from racing)
-    val admitted = IncrementalNearDup.dedupeBatchBucketed(
-      docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", table)
-    assert(admitted.count() > 0)
-    assert(!spark.catalog.tableExists(s"${table}_compacting"))
-    assert(spark.table(table).count() > liveN, "ingest append missing")
+  test("a refused or failed bucketed admission leaves no cache entry") {
+    import graft.operators.IncrementalNearDup
+    val table = "x18_cache_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id", "text")
+    IncrementalNearDup.dedupeBatchBucketed(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", table, batchId = Some(1L))
+    def cached = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    val entries = cached
+    // refused: a batch id behind the watermark
+    intercept[IllegalArgumentException](IncrementalNearDup.dedupeBatchBucketed(
+      docs, "doc_id", "text", table, batchId = Some(0L)))
+    assert(cached == entries, "a refused admission left a cache entry")
+    // failed: the append's bucket count does not match the table's
+    intercept[org.apache.spark.sql.AnalysisException](IncrementalNearDup.dedupeBatchBucketed(
+      docs, "doc_id", "text", table, buckets = 8, batchId = Some(2L)))
+    assert(cached == entries, "a failed admission left a cache entry")
+    spark.sql(s"DROP TABLE $table")
   }
 }

@@ -1164,8 +1164,8 @@ class PropertySpec extends SparkSpec {
     spark.read.parquet(s2).filter(col("batch") < 2)
       .groupBy("r", "bucket").agg(sum("bsum").as("bsum"))
       .coalesce(1).write.parquet(s"$s2/_compact_pending")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s2, "_compact_upto"), "2".getBytes)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s2, "_compact_upto"),
+      "keep batch=-1\ndrop batch=0\ndrop batch=1".getBytes)
     assert(StreamSketch.readMerged(spark, s2)
       .as[(Int, Long, Long)].collect().toSet == m2)
     assert(dirs(s2) == Set("batch=-1", "batch=2"))

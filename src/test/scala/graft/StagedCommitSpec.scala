@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.operators.{AdmissionLedger, IncrementalComponents, Similarity}
+import graft.operators.{AdmissionLedger, Dedup, IncrementalComponents, IncrementalNearDup, Similarity}
 import graft.queries.TextQueries
 import graft.streaming.StreamSketch
 import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions.col
   * armed, counting starts at the first in-scope mutation whose path
   * satisfies `start`; the mutation at `offset` and every one after it
   * throw before they happen — a crashed process writes nothing more.
+  * `onStep` runs before each counted mutation that goes ahead, with its
+  * index: a test lands a concurrent write at an exact step with it.
   */
 class CrashFs extends LocalFileSystem {
   private def mutation(op: String, p: Path): Unit =
@@ -45,31 +47,41 @@ object CrashFs {
   private var start: String => Boolean = _ => false
   private var scope: String => Boolean = _ => true
   private var offset = Int.MaxValue
+  private var onStep: Int => Unit = _ => ()
   private var started = false
   private val seen = scala.collection.mutable.ArrayBuffer[String]()
   @volatile var tripped = false
 
+  /** `onStep` must not write through this filesystem: it runs outside
+    * the lock, but its own mutations would count as steps.
+    */
   def arm(start: String => Boolean, offset: Int,
-          scope: String => Boolean = _ => true): Unit = synchronized {
-    this.start = start; this.offset = offset; this.scope = scope
+          scope: String => Boolean = _ => true, onStep: Int => Unit = _ => ()): Unit = synchronized {
+    this.start = start; this.offset = offset; this.scope = scope; this.onStep = onStep
     started = false; seen.clear(); tripped = false
   }
   /** Stop counting; [[counted]] and [[tripped]] keep the armed run's. */
-  def disarm(): Unit = synchronized { start = _ => false; started = false; offset = Int.MaxValue }
+  def disarm(): Unit = synchronized {
+    start = _ => false; started = false; offset = Int.MaxValue; onStep = _ => ()
+  }
   /** The mutations counted since the start trigger, as "op path". */
   def counted: Seq[String] = synchronized(seen.toList)
 
-  private def mutation(op: String, path: String): Unit = synchronized {
-    if (path.startsWith(root) && scope(path)) {
-      if (!started && start(path)) started = true
-      if (started) {
-        seen += s"$op ${path.stripPrefix(root)}"
-        if (seen.size > offset) {
-          tripped = true
-          throw new java.io.IOException(s"injected crash at $op $path")
-        }
-      }
+  private def mutation(op: String, path: String): Unit = {
+    val step = synchronized {
+      if (path.startsWith(root) && scope(path)) {
+        if (!started && start(path)) started = true
+        if (started) {
+          seen += s"$op ${path.stripPrefix(root)}"
+          if (seen.size > offset) {
+            tripped = true
+            throw new java.io.IOException(s"injected crash at $op $path")
+          }
+          Some((onStep, seen.size - 1))
+        } else None
+      } else None
     }
+    step.foreach { case (f, i) => f(i) }
   }
 }
 
@@ -124,6 +136,46 @@ class StagedCommitSpec extends SparkSpec {
   private def dirNames(dir: String, prefix: String): Set[String] =
     Option(new java.io.File(dir).list()).toSet.flatten.filter(_.startsWith(prefix))
 
+  private def docs(s: SparkSession, rem: Int) =
+    Tables.documents(s, sf).select("doc_id", "text").filter(col("doc_id") % 3 === rem)
+
+  /** The bucketed near-dup index is a catalog table over its dir. The
+    * catalog entry is not part of a copied tree, so every copy registers
+    * its own table, with the template's watermark.
+    */
+  private def ndTable(dir: String, streaming: Boolean, watermark: Option[Long] = None): String = {
+    val t = "sc_nd" + dir.stripPrefix(base.toString).replaceAll("\\W+", "_")
+    cs.sql(s"""CREATE TABLE IF NOT EXISTS $t
+      |(id BIGINT, band_id INT, band_key BIGINT${if (streaming) ", batch_id BIGINT" else ""})
+      |USING parquet CLUSTERED BY (band_id, band_key) SORTED BY (band_id, band_key)
+      |INTO 4 BUCKETS LOCATION '$dir'
+      |${watermark.fold("")(m => s"TBLPROPERTIES ('graft.maxBatchId' = '$m')")}""".stripMargin)
+    t
+  }
+
+  private def admit(t: String, batch: org.apache.spark.sql.DataFrame, batchId: Option[Long] = None) =
+    IncrementalNearDup.dedupeBatchBucketed(batch, "doc_id", "text", t, buckets = 4, batchId = batchId)
+
+  private def ndRows(t: String): Seq[String] = cs.table(t).collect().map(_.mkString(",")).sorted.toSeq
+
+  /** The index read: the multiset of rows and the number of part files,
+    * after an ingest entry point has met the crash state and the
+    * compactor's recovery has finished or discarded it.
+    */
+  private def ndRead(dir: String, watermark: Option[Long]): Any = {
+    val t = ndTable(dir, watermark.isDefined, watermark)
+    watermark match {
+      case Some(m) =>
+        val e = intercept[IllegalArgumentException](admit(t, docs(cs, 0), Some(m - 1)))
+        assert(e.getMessage.contains("high watermark"), e.getMessage)
+        assert(admit(t, docs(cs, 0), Some(m)).isEmpty, "a re-sent batch was admitted")
+      case None =>
+        assert(admit(t, docs(cs, 0)).isEmpty, "a re-sent batch was admitted")
+    }
+    IncrementalNearDup.recoverCompaction(cs, t)
+    (ndRows(t), dirNames(dir, "part-").size)
+  }
+
   private val mutations = Seq(
     Mutation("IVF-PQ build over an existing store", "_build_pending", "_build_done",
       build(_, 8, 0), build(_, 20, 12), ivfRead),
@@ -153,7 +205,16 @@ class StagedCommitSpec extends SparkSpec {
       },
       IncrementalComponents.compact(cs, _),
       dir => (IncrementalComponents.resolved(cs, dir).collect().map(_.toSeq).toSet,
-        dirNames(s"$dir/labels", "lbucket=").flatMap(b => dirNames(s"$dir/labels/$b", "ver="))))
+        dirNames(s"$dir/labels", "lbucket=").flatMap(b => dirNames(s"$dir/labels/$b", "ver=")))),
+    Mutation("IncrementalNearDup.compactIndex batch", "_compact_pending", "_compact_done",
+      dir => Seq(0, 1).foreach(r => admit(ndTable(dir, false), docs(cs, r))),
+      dir => IncrementalNearDup.compactIndex(cs, ndTable(dir, false)),
+      ndRead(_, None)),
+    // a redelivered batch 1 leaves duplicate rows for the dedupe rewrite
+    Mutation("IncrementalNearDup.compactIndex streaming", "_compact_pending", "_compact_done",
+      dir => Seq(0, 1, 1).foreach(r => admit(ndTable(dir, true), docs(cs, r), Some(r.toLong))),
+      dir => IncrementalNearDup.compactIndex(cs, ndTable(dir, true, Some(1L)), dedupe = true),
+      ndRead(_, Some(1L)))
   )
 
   test("crash matrix: every store mutation reads exactly before or exactly after at every crash step") {
@@ -200,6 +261,50 @@ class StagedCommitSpec extends SparkSpec {
     }
     info(f"$runs crash runs over ${mutations.size} mutations in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("an append landing at any install step survives the compaction") {
+    val home = Files.createDirectories(base.resolve("nd_concurrent"))
+    val template = home.resolve("template").toString
+    Seq(0, 1).foreach(r => admit(ndTable(template, false), docs(cs, r)))
+    var copies = 0
+    def copy(): String = {
+      copies += 1
+      val d = home.resolve(s"run$copies"); copyTree(Paths.get(template), d); d.toString
+    }
+    val clean = copy()
+    CrashFs.arm(_ == s"$clean/_compact_done.tmp", Int.MaxValue)
+    try IncrementalNearDup.compactIndex(cs, ndTable(clean, false)) finally CrashFs.disarm()
+    val steps = CrashFs.counted
+    // the appending ingest runs in a session outside CrashFs, so its
+    // own writes are not steps
+    val added = Dedup.bandedSignatures(docs(spark, 2), "doc_id", "text", 2, 16, 8)
+      .collect().map(_.mkString(",")).toSeq
+    steps.indices.foreach { i =>
+      val dir = copy()
+      val t = ndTable(dir, false)
+      val history = ndRows(t)
+      var landed = false
+      CrashFs.arm(_ == s"$dir/_compact_done.tmp", Int.MaxValue, onStep = n =>
+        if (n == i) { admit(t, docs(spark, 2)); landed = true })
+      try IncrementalNearDup.compactIndex(cs, t) finally CrashFs.disarm()
+      assert(landed, s"no append at '${steps(i)}'")
+      assert(ndRows(t) == (history ++ added).sorted, s"an append at '${steps(i)}' was lost")
+      assert(admit(t, docs(cs, 2)).isEmpty, s"after an append at '${steps(i)}': a re-sent batch was admitted")
+    }
+    info(s"${steps.size} append points: ${steps.mkString(", ")}")
+  }
+
+  test("no file under src/main swaps a table through the catalog") {
+    val swap = """RENAME TO|graft\.swapPending""".r
+    val files = Files.walk(Paths.get("src/main"))
+    val offenders = try files.iterator.asScala
+      .filter(Files.isRegularFile(_))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex
+        .collect { case (l, i) if swap.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}" })
+      .toList
+    finally files.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("compacting the admission ledger keeps every admitted batch admitted at every crash step") {

@@ -103,10 +103,9 @@ class StreamNearDupSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("restart-from-zero refused; ingestion finishes a crashed compaction swap") {
+  test("restart-from-zero refused; ingestion reads through a crashed compaction") {
     val table = "sm08_guard_idx"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_compacting")
     val out = graft.queries.Dsl.tempDir("sm08_guard") + "/admitted"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -133,24 +132,33 @@ class StreamNearDupSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("streaming mode"))
 
-    // crash window: compactIndex died between DROP and RENAME — the
-    // staged table holds the whole history, the live table is gone. An
-    // INGESTING batch must finish the swap, not seed an empty index: a
-    // re-send of batch 0's docs (as batch 2) must be fully blocked.
-    spark.table(table)
-      .write.bucketBy(16, "band_id", "band_key").sortBy("band_id", "band_key")
-      .mode("overwrite").format("parquet").saveAsTable(s"${table}_compacting")
-    spark.sql(
-      s"ALTER TABLE ${table}_compacting SET TBLPROPERTIES ('graft.maxBatchId' = '1')")
-    spark.sql(s"DROP TABLE $table") // the crash point
+    // a compaction that crashed mid-install: its plan is committed, one
+    // staged file is renamed in, no old file is dropped yet
+    val loc = new java.net.URI(spark.sql(s"DESCRIBE FORMATTED $table").collect()
+      .find(_.getString(0) == "Location").get.getString(1)).getPath
+    val root = CrashFs.root
+    CrashFs.root = loc
+    val crashing = spark.newSession()
+    crashing.conf.set("fs.file.impl", classOf[CrashFs].getName)
+    crashing.conf.set("fs.file.impl.disable.cache", "true")
+    CrashFs.arm(_ == s"$loc/_compact_done.tmp", 4)
+    val crashed = try scala.util.Try(IncrementalNearDup.compactIndex(crashing, table))
+      finally { CrashFs.disarm(); CrashFs.root = root }
+    assert(CrashFs.tripped && crashed.isFailure)
+    assert(new java.io.File(loc, "_compact_done").exists, "the crash must leave a committed plan")
+    // an INGESTING batch reads the table as it stands, a superset of the
+    // history: a re-send of batch 0's docs (as batch 2) is fully blocked
     StreamNearDup.admitBatch(b0, 2L, "doc_id", "text", table, out)
-    assert(!spark.catalog.tableExists(s"${table}_compacting"))
     val admitted2 = spark.read.parquet(out)
       .filter(col("batch_id").cast("long") === 2L).count()
     assert(admitted2 == 0,
-      s"crash-window ingest admitted $admitted2 docs the recovered history blocks")
-    // and the recovered table still carries the watermark: backwards
-    // ids stay refused after the recovery path
+      s"crash-state ingest admitted $admitted2 docs the history blocks")
+    // the next compaction finishes the crashed one first, and the table
+    // still carries the watermark: backwards ids stay refused
+    val rows = IncrementalNearDup.compactIndex(spark, table, dedupe = true)
+    assert(rows == spark.table(table).distinct().count())
+    assert(!new java.io.File(loc, "_compact_done").exists &&
+      !new java.io.File(loc, "_compact_pending").exists)
     assert(intercept[IllegalArgumentException] {
       StreamNearDup.admitBatch(b1, 1L, "doc_id", "text", table, out)
     }.getMessage.contains("high watermark"))
